@@ -168,10 +168,11 @@ class Engine:
                     if use_result_cache is None
                     else use_result_cache
                 )
+                out = df
                 if caching:
                     key = self.result_cache.key_for(query, df)
                     if key is None:
-                        self.result_cache.bypasses += 1
+                        self.result_cache.bypass()
                     else:
                         hit = self.result_cache.lookup(key)
                         if hit is not None:
@@ -180,11 +181,12 @@ class Engine:
                             )
                             rec.status = "Completed"
                             return hit
-                        df = self.result_cache.store(key, df)
+                        out = self.result_cache.store(key, df)
+                # a miss's steps are the query's own, not the cached frame's
                 for i, (op, detail) in enumerate(plan_steps(df)):
                     self._steps.append((rec.request_id, i, op, detail, None))
                 rec.status = "Completed"
-                return df
+                return out
             except Exception as e:  # noqa: BLE001
                 rec.status = "Failed"
                 rec.error_message = str(e)[:1000]
@@ -412,9 +414,6 @@ class Engine:
         loader = CsvLoader(self.spark)
         result = loader.load(path, columns, opts, table=table)
         self.create_table_as(table, result.df, layout, mode=mode)
-        # CTAS materialized the cleaned rows into the managed table — drop
-        # the cached CSV stage so repeated loads don't accumulate blocks
-        result.release()
         self._load_log.extend(loader.audit_log)
         return result
 

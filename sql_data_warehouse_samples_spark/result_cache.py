@@ -2,7 +2,7 @@
 (``SET RESULT_SET_CACHING ON`` — public platform docs) re-expressed for a
 parquet-backed Spark engine.
 
-A completed query's result is materialized once as parquet; an identical
+A completed query's result is materialized once; an identical
 re-submission whose *input data is unchanged* is served from the cache
 without touching the fact tables.  Invalidation is automatic and
 content-derived: the cache key hashes the normalized SQL together with the
@@ -15,9 +15,21 @@ Mirrors the platform's documented exclusions: queries using
 nondeterministic functions are never cached, and queries whose inputs
 cannot be fingerprinted (no file-backed scan) are passed through.
 
-Scale shape: the cache stores RESULTS (typically small aggregates), not
-inputs; a hit costs one parquet read of the result.  Entries evict LRU by
-count — result reuse is a warm-dashboard optimization, not a storage tier.
+Two tiers, chosen per entry by the result's measured size, never by the
+optimizer's estimate (which is off by orders of magnitude on joins):
+
+* memory — a miss always writes parquet (a distributed write, safe at any
+  size); a result whose files and Arrow form fit under the session's
+  ``spark.sql.execution.arrow.localRelationThreshold`` is read back once
+  and kept in the driver as a local relation, and its files are deleted.
+  A hit returns that frame, and ``collect()`` on it runs no Spark job.
+  Entries live per ``ResultCache`` (one per ``Engine``) and evict LRU by
+  bytes (``MEMORY_BUDGET_BYTES``) and by count.
+* parquet — a larger result stays as a parquet directory under ``dir``;
+  a hit costs one parquet read.  Entries evict LRU by count.
+
+The cache stores RESULTS (typically small aggregates), not inputs: result
+reuse is a warm-dashboard optimization, not a storage tier.
 """
 
 from __future__ import annotations
@@ -26,8 +38,13 @@ import hashlib
 import os
 import re
 import shutil
+import threading
 import time
+import uuid
+from collections import OrderedDict
 
+import pyarrow as pa
+from pyspark.errors import PySparkTypeError, UnsupportedOperationException
 from pyspark.sql import DataFrame, SparkSession
 
 # the platform's documented cache-bypass list, Spark-side equivalents
@@ -39,14 +56,27 @@ _NONDETERMINISTIC = re.compile(
 )
 
 
+#: Arrow bytes the memory tier of one cache holds before LRU eviction; the
+#: rows live on the driver heap, so this stays a small share of it
+MEMORY_BUDGET_BYTES = 128 << 20
+
+
 class ResultCache:
-    def __init__(self, spark: SparkSession, cache_dir: str, max_entries: int = 64):
+    #: LRU bound on the entry count of each tier
+    MAX_ENTRIES = 64
+
+    def __init__(self, spark: SparkSession, cache_dir: str):
         self.spark = spark
         self.dir = cache_dir
-        self.max_entries = max_entries
         self.hits = 0
         self.misses = 0
         self.bypasses = 0
+        # guards the counters and the memory tier: Engine.sql runs on many
+        # client threads
+        self._lock = threading.Lock()
+        # key -> (local-relation frame, Arrow bytes), least recent first
+        self._memory: OrderedDict[str, tuple[DataFrame, int]] = OrderedDict()
+        self._memory_bytes = 0
         os.makedirs(cache_dir, exist_ok=True)
 
     # --- keying -----------------------------------------------------------
@@ -138,45 +168,125 @@ class ResultCache:
     def _path(self, key: str) -> str:
         return os.path.join(self.dir, key)
 
+    def _entry_cap(self) -> int:
+        """Largest result the memory tier takes, in Arrow bytes: above the
+        session's ``arrow.localRelationThreshold``, ``createDataFrame``
+        builds an RDD scan (a Spark job per read), not a local relation."""
+        return min(
+            self.spark._jconf.arrowLocalRelationThreshold(), MEMORY_BUDGET_BYTES
+        )
+
+    def bypass(self) -> None:
+        with self._lock:
+            self.bypasses += 1
+
     def lookup(self, key: str) -> DataFrame | None:
+        with self._lock:
+            entry = self._memory.get(key)
+            if entry is not None:
+                self._memory.move_to_end(key)
+                self.hits += 1
+                return entry[0]
         p = self._path(key)
-        if os.path.isdir(p):
+        try:
             os.utime(p)  # LRU touch
+        except FileNotFoundError:
+            return None
+        df = self.spark.read.parquet(p)
+        with self._lock:
             self.hits += 1
-            return self.spark.read.parquet(p)
-        return None
+        return df
 
     def store(self, key: str, df: DataFrame) -> DataFrame:
-        """Materialize the result into the cache, return the cached frame."""
-        p = self._path(key)
-        df.write.mode("overwrite").parquet(p)
-        self.misses += 1
-        self._evict()
-        return self.spark.read.parquet(p)
+        """Materialize a missed result into the cache, return the frame to
+        serve.  The write goes to a private sibling directory first, so
+        concurrent misses on one key never write into the same files."""
+        # no leading "." or "_": Spark skips such paths as hidden files
+        staged = os.path.join(self.dir, f"{key}.{uuid.uuid4().hex}.staged")
+        try:
+            df.write.parquet(staged)
+            kept = self._to_memory(staged, df.schema)
+            if kept is None:
+                try:
+                    os.rename(staged, self._path(key))
+                except OSError:
+                    pass  # a concurrent miss placed the same rows first
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        with self._lock:
+            self.misses += 1
+            if kept is not None:
+                self._remember(key, *kept)
+                return kept[0]
+            self._evict_files()
+        return self.spark.read.parquet(self._path(key))
 
-    def _evict(self) -> None:
-        entries = [
-            (os.path.getmtime(os.path.join(self.dir, d)), d)
-            for d in os.listdir(self.dir)
-            if os.path.isdir(os.path.join(self.dir, d))
-        ]
-        entries.sort()
-        while len(entries) > self.max_entries:
-            _, victim = entries.pop(0)
-            shutil.rmtree(os.path.join(self.dir, victim), ignore_errors=True)
+    def _to_memory(self, path: str, schema) -> tuple[DataFrame, int] | None:
+        """The written result as a driver-held local relation and its Arrow
+        bytes, or None when its measured size is over the entry cap."""
+        cap = self._entry_cap()
+        if _dir_bytes(path) > cap:
+            return None
+        written = self.spark.read.parquet(path)
+        try:
+            table = written.toArrow()
+            if table.nbytes > cap:
+                return None
+            try:
+                frame = self.spark.createDataFrame(table, schema=schema)
+            except pa.ArrowTypeError:
+                # parquet reads nested fields back as nullable, and Arrow
+                # will not cast them to a declared non-null type
+                frame = self.spark.createDataFrame(table, schema=written.schema)
+        except (PySparkTypeError, UnsupportedOperationException):
+            return None  # a type without an Arrow form (year-month interval)
+        return frame, table.nbytes
+
+    def _remember(self, key: str, frame: DataFrame, nbytes: int) -> None:
+        """Add a memory entry and evict LRU by bytes and count (lock held)."""
+        old = self._memory.pop(key, None)
+        if old is not None:
+            self._memory_bytes -= old[1]
+        self._memory[key] = (frame, nbytes)
+        self._memory_bytes += nbytes
+        while (
+            len(self._memory) > self.MAX_ENTRIES
+            or self._memory_bytes > MEMORY_BUDGET_BYTES
+        ):
+            _, (_, victim_bytes) = self._memory.popitem(last=False)
+            self._memory_bytes -= victim_bytes
+
+    def _entry_dirs(self) -> list[str]:
+        # keys are hex digests; a dotted name is a running store()'s stage
+        with os.scandir(self.dir) as it:
+            return [e.path for e in it if e.is_dir() and "." not in e.name]
+
+    def _evict_files(self) -> None:
+        """Evict parquet entries LRU by count (lock held)."""
+        entries = sorted(self._entry_dirs(), key=os.path.getmtime)
+        for victim in entries[: max(0, len(entries) - self.MAX_ENTRIES)]:
+            shutil.rmtree(victim, ignore_errors=True)
 
     def clear(self) -> None:
-        shutil.rmtree(self.dir, ignore_errors=True)
-        os.makedirs(self.dir, exist_ok=True)
+        with self._lock:
+            self._memory.clear()
+            self._memory_bytes = 0
+            shutil.rmtree(self.dir, ignore_errors=True)
+            os.makedirs(self.dir, exist_ok=True)
 
     def stats(self) -> dict:
-        return {
-            "hits": self.hits,
-            "misses": self.misses,
-            "bypasses": self.bypasses,
-            "entries": len(
-                [d for d in os.listdir(self.dir)
-                 if os.path.isdir(os.path.join(self.dir, d))]
-            ),
-            "checked_at": time.time(),
-        }
+        with self._lock:
+            return {
+                "hits": self.hits,
+                "misses": self.misses,
+                "bypasses": self.bypasses,
+                "entries": len(self._memory) + len(self._entry_dirs()),
+                "memory_entries": len(self._memory),
+                "memory_bytes": self._memory_bytes,
+                "checked_at": time.time(),
+            }
+
+
+def _dir_bytes(path: str) -> int:
+    with os.scandir(path) as it:
+        return sum(e.stat().st_size for e in it if e.is_file())

@@ -31,7 +31,9 @@ DEFAULT_APP_NAME = "sdw-spark-engine"
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def build_session(

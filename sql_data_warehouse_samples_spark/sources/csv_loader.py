@@ -94,15 +94,6 @@ class LoadResult:
     rows_loaded: int
     rows_rejected: int
     elapsed_sec: float
-    #: legacy hook from the cached-stage era — load() no longer caches
-    #: (two file passes measured far cheaper than materializing the wide
-    #: all-string stage), so release() is a compatibility no-op.
-    _staged: DataFrame | None = None
-
-    def release(self) -> None:
-        if self._staged is not None:
-            self._staged.unpersist()
-            self._staged = None
 
 
 def _tolerant_cast(c: Column, spec: ColumnSpec, opts: LoadOptions, base: str) -> Column:

@@ -3,6 +3,8 @@ maintenance, request log."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,16 @@ def engine(spark, tmp_path_factory):
     eng.catalog.create_schema("testfact")
     yield eng
     eng.catalog.drop_schema("testfact", cascade=True)
+
+
+def test_default_parallelism_env_and_affinity(monkeypatch):
+    """SPARK_GRAFT_CPUS overrides; unset, the CPUs this process may run on."""
+    from sql_data_warehouse_samples_spark.session import default_parallelism
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert default_parallelism() == len(os.sched_getaffinity(0))
 
 
 def test_ctas_hash_layout_roundtrip(engine, spark):
@@ -1130,6 +1142,10 @@ def test_result_cache_hit_and_invalidation(engine, spark):
     r2 = engine.sql(q, use_result_cache=True).collect()
     assert engine.result_cache.hits == h0 + 1
     assert r1 == r2 and r1[0]["s"] == 30.0
+    # a memory-tier hit runs no Spark job: the request's job group (its
+    # request id) stays empty through the caller's collect()
+    hit_id = engine._requests[-1].request_id
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(hit_id) == []
     # whitespace/case normalization still hits
     engine.sql("select  cast(sum(v) as double)  as s  from testfact.rc_t",
                use_result_cache=True)
@@ -1141,6 +1157,170 @@ def test_result_cache_hit_and_invalidation(engine, spark):
     r3 = engine.sql(q, use_result_cache=True).collect()
     assert engine.result_cache.misses == m0 + 2
     assert r3[0]["s"] == 60.0
+
+
+def test_result_cache_miss_records_query_steps(engine, spark):
+    """A miss's step rows describe the query, not a scan of the cached
+    result it returns."""
+    from sql_data_warehouse_samples_spark.catalog import TableLayout
+
+    engine.catalog.create_table_as(
+        "testfact.rc_steps",
+        spark.createDataFrame([(1, 1.0), (1, 2.0), (2, 3.0)], "id: long, v: double"),
+        TableLayout(),
+        mode="overwrite",
+    )
+    engine.result_cache.clear()
+    m0 = engine.result_cache.misses
+    engine.sql(
+        "SELECT id, SUM(v) AS s FROM testfact.rc_steps GROUP BY id",
+        use_result_cache=True,
+    ).collect()
+    assert engine.result_cache.misses == m0 + 1
+    rid = engine._requests[-1].request_id
+    ops = [
+        r["operation_type"]
+        for r in engine.request_steps().filter(F.col("request_id") == rid).collect()
+    ]
+    assert "Aggregate" in ops, ops
+
+
+def test_result_cache_memory_tier_round_trips_types(spark, tmp_path):
+    """Decimal, date, timestamp, NULL string and array columns come back
+    from the memory tier with the query's schema and rows, on the miss's
+    frame and on a hit."""
+    from sql_data_warehouse_samples_spark.result_cache import ResultCache
+
+    df = spark.sql(
+        "SELECT CAST(id AS DECIMAL(18,4)) AS d,"
+        " date_add(DATE'2020-02-28', CAST(id AS INT)) AS dt,"
+        " timestamp_micros(1582848000000001 + id) AS ts,"
+        " CASE WHEN id % 2 = 0 THEN NULL ELSE CAST(id AS STRING) END AS s,"
+        " array(id, id * 2) AS a"
+        " FROM range(5)"
+    )
+    want = sorted(df.collect())
+    rc = ResultCache(spark, str(tmp_path / "rc"))
+    served = rc.store("k", df)
+    hit = rc.lookup("k")
+    assert rc.stats()["memory_entries"] == 1 and rc.hits == 1
+    for got in (served, hit):
+        assert got.schema == df.schema
+        assert sorted(got.collect()) == want
+    # the parquet copy is gone once the result is held in memory
+    assert os.listdir(rc.dir) == []
+    # an empty result is cached too
+    empty = spark.sql("SELECT id FROM range(3) WHERE id < 0")
+    rc.store("e", empty)
+    assert rc.lookup("e").collect() == []
+    # a non-null nested field comes back from parquet as nullable; the
+    # entry keeps the parquet schema and the same rows
+    nested = spark.sql("SELECT named_struct('f', id) AS st FROM range(3)")
+    rc.store("n", nested)
+    assert sorted(rc.lookup("n").collect()) == sorted(nested.collect())
+    assert rc.stats()["memory_entries"] == 3
+    # a type without an Arrow form keeps the parquet tier
+    ym = spark.sql("SELECT id, make_ym_interval(1, CAST(id AS INT)) AS i FROM range(3)")
+    rc.store("y", ym)
+    as_text = "id", "CAST(i AS STRING) AS i"  # no Python form to collect
+    assert sorted(rc.lookup("y").selectExpr(*as_text).collect()) == sorted(
+        ym.selectExpr(*as_text).collect()
+    )
+    assert rc.stats()["memory_entries"] == 3 and os.listdir(rc.dir) == ["y"]
+
+
+def test_result_cache_memory_budget_evicts_oldest(spark, tmp_path, monkeypatch):
+    """The memory tier is LRU by bytes: over the budget the least recently
+    used entry goes, and stats() reports the bytes held."""
+    from sql_data_warehouse_samples_spark import result_cache
+    from sql_data_warehouse_samples_spark.result_cache import ResultCache
+
+    rc = ResultCache(spark, str(tmp_path / "rc"))
+
+    def frame(n):
+        # wide repeated strings: Arrow bytes (what the budget counts) far
+        # above the dictionary-encoded parquet files
+        return spark.sql(f"SELECT id, repeat('{n}', 1000) AS v FROM range(100)")
+
+    rc.store("a", frame(1))
+    one = rc.stats()["memory_bytes"]
+    assert one > 0
+    monkeypatch.setattr(result_cache, "MEMORY_BUDGET_BYTES", 2 * one + one // 2)
+    rc.store("b", frame(2))
+    assert rc.lookup("a") is not None  # a is now the most recent
+    rc.store("c", frame(3))
+    st = rc.stats()
+    assert st["memory_entries"] == 2 and st["memory_bytes"] == 2 * one
+    assert rc.lookup("b") is None  # b was least recently used
+    assert rc.lookup("a").count() == 100 and rc.lookup("c").count() == 100
+
+
+def test_result_cache_above_cap_served_from_parquet(spark, tmp_path, monkeypatch):
+    """A result over the per-entry cap keeps the parquet tier and still
+    hits with the same rows."""
+    from sql_data_warehouse_samples_spark.result_cache import ResultCache
+
+    monkeypatch.setattr(ResultCache, "_entry_cap", lambda self: 0)
+    rc = ResultCache(spark, str(tmp_path / "rc"))
+    df = spark.sql("SELECT id, CAST(id AS STRING) AS s FROM range(10)")
+    rc.store("big", df)
+    st = rc.stats()
+    assert st["memory_entries"] == 0 and st["memory_bytes"] == 0
+    assert st["entries"] == 1 and os.listdir(rc.dir) == ["big"]
+    hit = rc.lookup("big")
+    assert rc.hits == 1
+    assert sorted(hit.collect()) == sorted(df.collect())
+
+
+@pytest.mark.parametrize("tier", ["memory", "parquet"])
+def test_result_cache_concurrent_same_query(engine, spark, monkeypatch, tier):
+    """Four threads send one cacheable query at once: every thread gets
+    the uncached rows, and each request counts exactly one hit or miss."""
+    import sys
+    import threading
+
+    from sql_data_warehouse_samples_spark.catalog import TableLayout
+    from sql_data_warehouse_samples_spark.result_cache import ResultCache
+
+    if tier == "parquet":
+        monkeypatch.setattr(ResultCache, "_entry_cap", lambda self: 0)
+    engine.catalog.create_table_as(
+        "testfact.rc_conc",
+        spark.createDataFrame(
+            [(i % 3, float(i)) for i in range(30)], "id: long, v: double"
+        ),
+        TableLayout(),
+        mode="overwrite",
+    )
+    q = "SELECT id, SUM(v) AS s FROM testfact.rc_conc GROUP BY id"
+    want = sorted(engine.sql(q).collect())
+    engine.result_cache.clear()
+    h0, m0 = engine.result_cache.hits, engine.result_cache.misses
+    got, errors = [], []
+
+    def client():
+        try:
+            got.append(sorted(engine.sql(q, use_result_cache=True).collect()))
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=client) for _ in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == [want] * 4
+    rc = engine.result_cache
+    assert (rc.hits - h0) + (rc.misses - m0) == 4
+    assert rc.stats()["entries"] == 1
+    assert not [d for d in os.listdir(rc.dir) if d.endswith(".staged")]
 
 
 def test_result_cache_bypasses_nondeterministic(engine):

@@ -95,6 +95,7 @@ def test_headline_opt_in_sites_spread_at_bench_config(spark, monkeypatch):
     if spark.sparkContext.defaultParallelism < 4:
         pytest.skip("gate needs parallelism ≥ 2×row-groups")
     monkeypatch.delenv("SPARK_GRAFT_SCAN_SPREAD", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", raising=False)
     workload.load_all()
     for name, spread in [
         ("t05_repetition_filters", True),
@@ -121,6 +122,7 @@ def test_q61_single_fact_exchange_at_bench_config(spark, monkeypatch):
     if not os.path.exists(os.path.join(sf_dir, "lineitem.parquet")):
         pytest.skip("test data not present")
     monkeypatch.delenv("SPARK_GRAFT_SCAN_SPREAD", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_SCAN_SPREAD_MIN_BYTES", raising=False)
     workload.load_all()
     df = workload.QUERIES["q61_waiting_suppliers"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
