@@ -26,10 +26,14 @@ Layout is persisted in Spark table properties (``sdw.distribution`` etc.) so
 
 from __future__ import annotations
 
+import threading
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .operators.dirswap import fs_listdir, fs_mkdirs, fs_rmtree
 
 # The reference engine always uses 60 hash distributions
 # (white-papers/...md:37).  At 100 TB on a real cluster this would be
@@ -37,6 +41,9 @@ from pyspark.sql import functions as F
 DEFAULT_DISTRIBUTION_COUNT = 60
 
 VALID_DISTRIBUTIONS = ("hash", "round_robin", "replicate")
+
+_LOCKS: dict[str, threading.RLock] = {}  # Catalog._lock, by lower-cased name
+_LOCKS_GUARD = threading.Lock()
 
 
 @dataclass
@@ -178,34 +185,88 @@ class Catalog:
             return repr(v)
         return "'{}'".format(str(v).replace("'", "''"))
 
-    def _overwrite_pruned(
-        self, table: str, frame: DataFrame, part: str | None, aff: list | None
+    @staticmethod
+    def _lock(table: str) -> threading.RLock:
+        """The process-wide write lock of ``table``, held by every write
+        from reading the table to committing (the reference's exclusive
+        table lock for DML): no rewrite commits over a concurrent one, and
+        no append lands in a generation a rewrite is about to delete."""
+        with _LOCKS_GUARD:
+            return _LOCKS.setdefault(table.lower(), threading.RLock())
+
+    def _replace(
+        self, table: str, frame: DataFrame, part: str | None, scope: list | None = None
     ) -> None:
-        """Write ``frame`` over the affected partitions of ``table``.
+        """Replace the contents of managed ``table`` with ``frame`` (which
+        may read ``table``): the one commit path of every rewrite.  ``part``
+        is the layout's partition column (``create_table_as`` records it
+        for every partitioned table), None for an unpartitioned one.
+
+        A partitioned table is overwritten in place over the ``scope``
+        partitions (None = all; ``_overwrite_pruned``).  Any other table
+        gets a new generation ``<table dir>/_g<id>``, written through an
+        external stage ``LIKE`` the table (schema and buckets carry over)
+        and committed by one ``SET LOCATION`` — new immutable data, then a
+        metadata switch (POLARIS, VLDB 2020).  The live table is never
+        dropped or renamed, and a crash before the switch leaves it
+        untouched; the commit ends by deleting everything else under the
+        table's own directory, including a crashed commit's leftovers."""
+        with self._lock(table):
+            if part is not None:
+                # the write reads the partitions it replaces: break lineage
+                frame = frame.localCheckpoint(eager=True)
+                self._overwrite_pruned(table, frame, part, scope)
+                return
+            db, _, name = table.rpartition(".")
+            db = self.spark.catalog.getDatabase(db or self.spark.catalog.currentDatabase())
+            root = f"{db.locationUri.removeprefix('file:')}/{name.lower()}"
+            gen = f"_g{uuid.uuid4().hex[:12]}"
+            stage = self._q(f"{table}__stage")
+            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
+            fs_mkdirs(f"{root}/{gen}")  # so the stage resolves without a warning
+            self.spark.sql(
+                f"CREATE TABLE {stage} LIKE {self._q(table)} LOCATION '{root}/{gen}'"
+            )
+            frame.write.insertInto(stage)
+            self.spark.sql(f"DROP TABLE {stage}")  # external: its files stay
+            self._switch_location(table, f"{root}/{gen}")
+            for child in fs_listdir(root):
+                if child != gen:
+                    fs_rmtree(f"{root}/{child}")
+
+    def _switch_location(self, table: str, path: str) -> None:
+        """The commit point of a non-partitioned ``_replace``."""
+        self.spark.sql(f"ALTER TABLE {self._q(table)} SET LOCATION '{path}'")
+
+    def _overwrite_pruned(
+        self, table: str, frame: DataFrame, part: str, scope: list | None
+    ) -> None:
+        """Write ``frame`` over the ``scope`` partitions of ``table`` (all
+        of them when ``scope`` is None: a static overwrite).
 
         Dynamic partitionOverwriteMode replaces only the partitions PRESENT
         in the written frame — a rewrite that empties a whole partition
         (full-partition DELETE, UPDATE moving every row out, MERGE
         when_matched='delete') produces zero rows for it, so its old files
         would silently survive while @@ROWCOUNT reports them affected.
-        After the write, any affected partition the frame no longer touches
+        After the write, any scoped partition the frame no longer touches
         is dropped explicitly (``ALTER TABLE .. DROP PARTITION`` — works for
         the null partition via ``part=null``).
         """
         mode_conf = "spark.sql.sources.partitionOverwriteMode"
         prev = self.spark.conf.get(mode_conf, "static")
         try:
-            if part is not None:
+            if scope is not None:
                 self.spark.conf.set(mode_conf, "dynamic")
             frame.write.insertInto(self._q(table), overwrite=True)
         finally:
             self.spark.conf.set(mode_conf, prev)
-        if part is None:
+        if scope is None:
             return
-        # frame is checkpointed by both callers, so this distinct is a
-        # cheap map-side-combined pass over materialized data
+        # frame is checkpointed by _replace, so this distinct is a cheap
+        # map-side-combined pass over materialized data
         present = {r[0] for r in frame.select(part).distinct().collect()}
-        for v in aff or []:
+        for v in scope:
             if v not in present:
                 self.spark.sql(
                     f"ALTER TABLE {self._q(table)} DROP IF EXISTS "
@@ -263,9 +324,6 @@ class Catalog:
             if layout.sort_columns:
                 writer = writer.sortBy(*layout.sort_columns)
         writer.saveAsTable(self._q(table))
-        self._set_layout_properties(table, layout)
-
-    def _set_layout_properties(self, table: str, layout: TableLayout) -> None:
         props = ", ".join(
             "'{}'='{}'".format(k, v.replace("'", "\\'"))
             for k, v in layout.to_properties().items()
@@ -276,11 +334,11 @@ class Catalog:
         rows = self.spark.sql(f"SHOW TBLPROPERTIES {self._q(table)}").collect()
         return TableLayout.from_properties({r["key"]: r["value"] for r in rows})
 
-    def insert_into(self, table: str, df: DataFrame, overwrite: bool = False) -> None:
+    def insert_into(self, table: str, df: DataFrame) -> None:
         """INSERT INTO ... SELECT (D6), honoring the table's layout."""
-        layout = self.get_layout(table)
-        out = self._apply_write_layout(df, layout)
-        out.write.insertInto(self._q(table), overwrite=overwrite)
+        with self._lock(table):
+            layout = self.get_layout(table)
+            self._apply_write_layout(df, layout).write.insertInto(self._q(table))
 
     def table(self, name: str) -> DataFrame:
         """Layout-aware read: REPLICATE tables come back broadcast-hinted
@@ -322,137 +380,110 @@ class Catalog:
         the merge — partitions of incoming source rows plus partitions of
         the target rows they match — are recomputed and rewritten via
         dynamic partition overwrite; a daily upsert into a date-partitioned
-        100 TB fact rewrites ~the affected days, not the table.  Bucketed
-        tables (persisted co-location) go through a staged CTAS + swap so
-        the bucket layout survives the rewrite.  Not transactional
-        (parquet, no log): a crash mid-swap can require re-running the
-        merge — same contract as the reference's CTAS-rename pattern
-        (samples/sqlops sp_FlipFlop generation; SURVEY §2.9 D3).
+        100 TB fact rewrites ~the affected days, not the table.  A
+        non-partitioned table is written as a new generation directory and
+        committed by one ``SET LOCATION`` (``_replace``) — the reference's
+        CTAS-and-rename flip-flop (samples/sqlops sp_FlipFlop; SURVEY §2.9
+        D3) without ever dropping or renaming the live table, so a crash
+        before the switch leaves the old contents readable.  Either way
+        the bucket spec and partitioning survive the rewrite.
         """
         if when_matched not in ("update", "keep", "delete"):
             raise ValueError(f"unknown when_matched {when_matched!r}")
         if when_not_matched not in ("insert", "ignore"):
             raise ValueError(f"unknown when_not_matched {when_not_matched!r}")
         keys = [on] if isinstance(on, str) else list(on)
-        layout = self.get_layout(table)
-        target = self.spark.table(self._q(table))
+        with self._lock(table):
+            layout = self.get_layout(table)
+            target = self.spark.table(self._q(table))
 
-        # derive the partition column on the source the same way writes do,
-        # so row classes and affected partitions line up with storage
-        if layout.partition_expr and layout.partition_column:
-            source = source.withColumn(
-                layout.partition_column, F.expr(layout.partition_expr)
-            )
-        missing = [c for c in target.columns if c not in source.columns]
-        if missing:
-            raise ValueError(f"source is missing target columns: {missing}")
-        source = source.select(*[F.col(c) for c in target.columns])
+            # derive the partition column on the source the same way writes
+            # do, so row classes and affected partitions line up with storage
+            if layout.partition_expr and layout.partition_column:
+                source = source.withColumn(
+                    layout.partition_column, F.expr(layout.partition_expr)
+                )
+            missing = [c for c in target.columns if c not in source.columns]
+            if missing:
+                raise ValueError(f"source is missing target columns: {missing}")
+            source = source.select(*[F.col(c) for c in target.columns])
 
-        part = layout.partition_column
-        prune = bool(part) and not delete_unmatched_target and not layout.buckets
-        if prune:
-            # affected partitions: where source rows land + where their
-            # matched target rows currently live (a key's partition value
-            # may have changed)
-            src_parts = source.select(part).distinct()
-            matched_parts = (
-                target.join(source.select(*keys).distinct(), keys, "left_semi")
-                .select(part)
-                .distinct()
-            )
-            aff = [
-                r[0] for r in src_parts.unionByName(matched_parts).distinct().collect()
-            ]
-            target_scope = target.filter(self._part_filter(part, aff))
-        else:
-            aff = None
-            target_scope = target
+            part = layout.partition_column
+            if part and not delete_unmatched_target:
+                # affected partitions: where source rows land + where their
+                # matched target rows currently live (a key's partition
+                # value may have changed)
+                src_parts = source.select(part).distinct()
+                matched_parts = (
+                    target.join(source.select(*keys).distinct(), keys, "left_semi")
+                    .select(part)
+                    .distinct()
+                )
+                aff = [
+                    r[0]
+                    for r in src_parts.unionByName(matched_parts).distinct().collect()
+                ]
+                target_scope = target.filter(self._part_filter(part, aff))
+            else:
+                aff = None
+                target_scope = target
 
-        pieces = []
-        if not delete_unmatched_target:
-            pieces.append(target_scope.join(source, keys, "left_anti"))
-        if when_matched == "update":
-            pieces.append(source.join(target_scope, keys, "left_semi"))
-        elif when_matched == "keep":
-            pieces.append(target_scope.join(source, keys, "left_semi"))
-        # "delete": matched rows contribute nothing
-        if when_not_matched == "insert":
-            pieces.append(source.join(target_scope, keys, "left_anti"))
-        merged = pieces[0]
-        for p in pieces[1:]:
-            merged = merged.unionByName(p)
+            pieces = []
+            if not delete_unmatched_target:
+                pieces.append(target_scope.join(source, keys, "left_anti"))
+            if when_matched == "update":
+                pieces.append(source.join(target_scope, keys, "left_semi"))
+            elif when_matched == "keep":
+                pieces.append(target_scope.join(source, keys, "left_semi"))
+            # "delete": matched rows contribute nothing
+            if when_not_matched == "insert":
+                pieces.append(source.join(target_scope, keys, "left_anti"))
+            merged = pieces[0]
+            for p in pieces[1:]:
+                merged = merged.unionByName(p)
 
-        if layout.buckets:
-            # staged CTAS + swap keeps the persisted bucket co-location
-            stage = f"{table}__merge_stage"
-            self.create_table_as(stage, merged, layout, mode="overwrite")
-            self.drop_table(table)
-            self.spark.sql(
-                f"ALTER TABLE {self._q(stage)} RENAME TO {self._q(table)}"
-            )
-            self._set_layout_properties(table, layout)
-            return
-
-        # break lineage before overwriting the table being read from;
-        # dynamic mode replaces ONLY the partitions present in the written
-        # frame — untouched partitions keep their files; partitions the
-        # merge emptied are dropped explicitly by _overwrite_pruned
-        merged = self._apply_write_layout(merged, layout).localCheckpoint(eager=True)
-        self._overwrite_pruned(
-            table, merged, part if prune else None, aff if prune else None
-        )
+            self._replace(table, self._apply_write_layout(merged, layout), part, aff)
 
     def _rewrite_where(self, table: str, cond, transform) -> int:
         """Shared copy-on-write core for predicate DML (DELETE/UPDATE).
 
         ``cond`` selects the affected rows (NULL predicate = unaffected,
         SQL three-valued semantics); ``transform(scope, hit)`` returns the
-        rewritten scope.  Partitioned, unbucketed tables rewrite ONLY the
-        partitions that contain affected rows (dynamic partition
-        overwrite); everything else is a full rewrite.  Returns the number
-        of affected rows (the T-SQL @@ROWCOUNT contract) — counted on the
-        same scan that discovers the affected partitions.
+        rewritten scope.  Partitioned tables rewrite ONLY the partitions
+        that contain affected rows (dynamic partition overwrite); any other
+        table is rewritten whole as a new generation (``_replace``).
+        Returns the number of affected rows (the T-SQL @@ROWCOUNT
+        contract) — counted on the same scan that discovers the affected
+        partitions.
         """
-        layout = self.get_layout(table)
-        target = self.spark.table(self._q(table))
-        hit = F.coalesce(cond, F.lit(False))
+        with self._lock(table):
+            layout = self.get_layout(table)
+            target = self.spark.table(self._q(table))
+            hit = F.coalesce(cond, F.lit(False))
 
-        part = layout.partition_column
-        prune = bool(part) and not layout.buckets
-        if prune:
-            agg = (
-                target.filter(hit)
-                .groupBy(part)
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            )
-            n_affected = sum(r["__n"] for r in agg)
-            if n_affected == 0:
-                return 0
-            aff = [r[part] for r in agg]
-            scope = target.filter(self._part_filter(part, aff))
-        else:
-            aff = None
-            n_affected = target.filter(hit).count()
-            if n_affected == 0:
-                return 0
-            scope = target
+            part = layout.partition_column
+            if part:
+                agg = (
+                    target.filter(hit)
+                    .groupBy(part)
+                    .agg(F.count(F.lit(1)).alias("__n"))
+                    .collect()
+                )
+                n_affected = sum(r["__n"] for r in agg)
+                if n_affected == 0:
+                    return 0
+                aff = [r[part] for r in agg]
+                scope = target.filter(self._part_filter(part, aff))
+            else:
+                aff = None
+                n_affected = target.filter(hit).count()
+                if n_affected == 0:
+                    return 0
+                scope = target
 
-        rewritten = transform(scope, hit)
-        if layout.buckets:
-            stage = f"{table}__dml_stage"
-            self.create_table_as(stage, rewritten, layout, mode="overwrite")
-            self.drop_table(table)
-            self.spark.sql(
-                f"ALTER TABLE {self._q(stage)} RENAME TO {self._q(table)}"
-            )
-            self._set_layout_properties(table, layout)
+            rewritten = self._apply_write_layout(transform(scope, hit), layout)
+            self._replace(table, rewritten, part, aff)
             return n_affected
-        out = self._apply_write_layout(rewritten, layout).localCheckpoint(eager=True)
-        self._overwrite_pruned(
-            table, out, part if prune else None, aff if prune else None
-        )
-        return n_affected
 
     def delete_where(self, table: str, predicate) -> int:
         """``DELETE FROM table WHERE predicate`` (row-level DML beyond the

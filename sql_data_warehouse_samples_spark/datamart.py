@@ -22,11 +22,11 @@ Each spoke then runs ``meta.SetupExternalTablesToDw`` (ps1:437-506):
 read the remote definition view through the external data source, DROP +
 re-CREATE one external table per granted hub table.
 
-Spark-first mapping: a spoke is its own database in the shared catalog;
-the hub's storage IS the shared object store, so a spoke "external
-table" is an UNMANAGED table whose LOCATION is the hub table's parquet
-directory — decoupled metadata, zero data movement, reads through to hub
-files exactly like the RDBMS external table reads through to the DW.
+Spark-first mapping: a spoke is its own database in the shared catalog,
+so a spoke "external table" is a view over the hub table — decoupled
+metadata, zero data movement, reads through to the hub's live data
+exactly like the RDBMS external table reads through to the DW, across
+every hub rewrite.
 The credential/data-source pair carries no secret locally (no real authz
 is needed for parity — SURVEY §2.10 role-members note) but is recorded
 so ``sys.external_data_sources``-style introspection works.  The control
@@ -34,7 +34,7 @@ table is the authorization surface: a spoke setup materializes ONLY the
 tables granted to its user.
 
 Scale: every operation here is catalog metadata work (driver-side, a few
-rows per table); reads through a spoke table hit the same partition-
+rows per table); reads through a spoke view hit the same partition-
 pruned parquet scans as hub reads — there is no extra data path to
 break at 100 TB.
 """
@@ -141,24 +141,26 @@ class DatamartHub:
             "datamart_user: string, data_source: string, object_id: string,"
             " schema_name: string, table_name: string",
         )
-        existing = self._control()
-        added = fresh.join(
-            existing.select("datamart_user", "object_id"),
-            ["datamart_user", "object_id"],
-            "left_anti",
-        )
-        n = added.count()
-        merged = existing.unionByName(added).localCheckpoint(eager=True)
-        merged.write.format("parquet").mode("overwrite").saveAsTable(CONTROL_TABLE)
-        return n
+        with self.catalog._lock(CONTROL_TABLE):
+            existing = self._control()
+            added = fresh.join(
+                existing.select("datamart_user", "object_id"),
+                ["datamart_user", "object_id"],
+                "left_anti",
+            )
+            n = added.count()
+            merged = existing.unionByName(added)
+            if self.spark.catalog.tableExists(CONTROL_TABLE):
+                self.catalog._replace(CONTROL_TABLE, merged, None)
+            else:
+                merged.write.format("parquet").saveAsTable(CONTROL_TABLE)
+            return n
 
     def generate_definitions(self) -> int:
         """``meta.GenerateDatamartExternalTableDefinitionsAndGrantSelect``
         parity (ps1:196-285): rebuild the definitions table — one row per
         distinct (schema, table) in the control table, with the
-        reconstructed external DDL and the hub table's storage location
-        (the Spark-side DATA_SOURCE: spokes attach to the hub's parquet
-        directly).  Returns the definition count."""
+        reconstructed external DDL.  Returns the definition count."""
         control = self._control()
         # keyed by (schema, table) like the reference's
         # DatamartExternalTableDefinitions CTAS (GROUP BY TableName,
@@ -175,24 +177,16 @@ class DatamartHub:
             ddl = create_external_table_from_dw(
                 self.catalog, src, sch, tbl, sch, src
             )
-            defs.append((seq, tbl, sch, ddl, self._location(f"{sch}.{tbl}")))
+            defs.append((seq, tbl, sch, ddl))
         frame = self.spark.createDataFrame(
             defs,
             "sequence: long, table_name: string, schema_name: string,"
-            " ddl: string, location: string",
+            " ddl: string",
         )
         frame.write.format("parquet").mode("overwrite").saveAsTable(
             DEFINITIONS_TABLE
         )
         return len(defs)
-
-    def _location(self, table: str) -> str:
-        row = (
-            self.spark.sql(f"DESCRIBE FORMATTED {self.catalog._q(table)}")
-            .filter(F.col("col_name") == "Location")
-            .first()
-        )
-        return row["data_type"] if row else ""
 
     def remote_table_definitions(self, user: str) -> DataFrame:
         """``meta.RemoteTableDefinitionView`` parity (ps1:244-252):
@@ -203,7 +197,7 @@ class DatamartHub:
         return defs.join(
             ct.select("table_name", "schema_name").distinct(),
             ["table_name", "schema_name"],
-        ).select("table_name", "schema_name", "ddl", "location")
+        ).select("table_name", "schema_name", "ddl")
 
 
 @dataclass
@@ -217,9 +211,9 @@ class SpokeDataSource:
 
 
 class SpokeDb:
-    """One spoke database: attaches granted hub tables as unmanaged
-    tables over the hub's storage (``meta.SetupExternalTablesToDw``
-    parity, ps1:437-506)."""
+    """One spoke database: attaches granted hub tables as views over the
+    live hub tables (``meta.SetupExternalTablesToDw`` parity,
+    ps1:437-506)."""
 
     def __init__(self, engine, name: str) -> None:
         self.engine = engine
@@ -237,37 +231,31 @@ class SpokeDb:
 
     def setup_external_tables(self, hub: DatamartHub, user: str | None = None) -> list[str]:
         """Read the hub's remote definition view for this spoke's user and
-        DROP + re-CREATE one external (unmanaged, LOCATION-attached) table
-        per granted hub table, named ``<schema>_<table>`` (the reference's
-        ``nameAppendix_tableName`` with appendix = schema, ps1:146).
-        Partitioned hub tables are attached with partition recovery so
-        spoke reads partition-prune like hub reads.  Idempotent: re-runs
-        recreate cleanly.  Returns the created table names."""
+        (re-)create one view per granted hub table, named
+        ``<schema>_<table>`` (the reference's ``nameAppendix_tableName``
+        with appendix = schema, ps1:146).  A view names the hub TABLE, not
+        its files, so it follows every hub rewrite and partition change,
+        and spoke reads partition-prune like hub reads.  Idempotent:
+        re-runs recreate cleanly.  Returns the created view names."""
         user = user or self.name
         created = []
         for r in hub.remote_table_definitions(user).collect():
             tname = f"{self.name}.{r['schema_name']}_{r['table_name']}"
-            self.spark.sql(f"DROP TABLE IF EXISTS {tname}")
+            hub_table = hub.catalog._q(f"{r['schema_name']}.{r['table_name']}")
             self.spark.sql(
-                f"CREATE TABLE {tname} USING parquet LOCATION '{r['location']}'"
+                f"CREATE OR REPLACE VIEW {tname} AS SELECT * FROM {hub_table}"
             )
-            try:
-                self.spark.catalog.recoverPartitions(tname)
-            except Exception:
-                pass  # unpartitioned source — nothing to recover
             created.append(tname)
         return created
 
     def refresh(self) -> None:
-        """Drop the spoke tables' cached file indexes so reads see hub
-        writes that happened after attach (REFRESH TABLE — the external-
-        table analogue of the reference's replicated-table cache refresh,
-        RefreshReplicatedTable.ps1:36-57).  New PARTITIONS of a
-        partitioned hub table additionally need ``setup_external_tables``
-        (partition recovery) — same split as ALTER TABLE RECOVER
-        PARTITIONS vs REFRESH in any external metastore."""
+        """Drop the cached file indexes behind the spoke views so reads
+        see hub files written outside this session (REFRESH TABLE — the
+        analogue of the reference's replicated-table cache refresh,
+        RefreshReplicatedTable.ps1:36-57).  Writes through this session's
+        catalog are visible without it."""
         for t in self.spark.catalog.listTables(self.name):
             # listTables interleaves session-scoped TEMP views with the
-            # database's tables — only the real spoke tables refresh
+            # database's views — only the spoke's own refresh
             if not t.isTemporary:
                 self.spark.catalog.refreshTable(f"{self.name}.{t.name}")

@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -129,6 +130,24 @@ class Engine:
             self._requests.append(rec)
         return rec
 
+    @contextmanager
+    def _running(self, rec: RequestRecord, description: str):
+        """Run a request's work under its own job group (the status tracker
+        attributes its jobs to it, sys.dm_pdw_sql_requests); status and
+        elapsed time are recorded however the work ends."""
+        rec.start_time = time.time()
+        self.spark.sparkContext.setJobGroup(rec.request_id, description)
+        try:
+            yield
+            rec.status = "Completed"
+        except Exception as e:  # noqa: BLE001
+            rec.status = "Failed"
+            rec.error_message = str(e)[:1000]
+            raise
+        finally:
+            rec.end_time = time.time()
+            rec.total_elapsed_ms = int((rec.end_time - rec.start_time) * 1000)
+
     def set_result_caching(self, on: bool) -> None:
         """``SET RESULT_SET_CACHING ON|OFF`` parity — a per-engine-session
         default; per-query override via ``sql(use_result_cache=...)``."""
@@ -153,47 +172,32 @@ class Engine:
         input rewrite changes the content-derived key → automatic miss.
         """
         rec = self._new_request(query, label, resource_class)
-        with self.wlm.admit(rec.request_id, resource_class):
-            rec.start_time = time.time()
-            # job group = request id → the status tracker can attribute every
-            # job/stage/task this request runs back to it (per-distribution
-            # execution parity, sys.dm_pdw_sql_requests)
-            self.spark.sparkContext.setJobGroup(
-                rec.request_id, label or query[:100]
+        with self.wlm.admit(rec.request_id, resource_class), self._running(
+            rec, label or query[:100]
+        ):
+            df = self.spark.sql(query)
+            caching = (
+                self._result_caching
+                if use_result_cache is None
+                else use_result_cache
             )
-            try:
-                df = self.spark.sql(query)
-                caching = (
-                    self._result_caching
-                    if use_result_cache is None
-                    else use_result_cache
-                )
-                out = df
-                if caching:
-                    key = self.result_cache.key_for(query, df)
-                    if key is None:
-                        self.result_cache.bypass()
-                    else:
-                        hit = self.result_cache.lookup(key)
-                        if hit is not None:
-                            self._steps.append(
-                                (rec.request_id, 0, "Return", "ResultCacheHit", None)
-                            )
-                            rec.status = "Completed"
-                            return hit
-                        out = self.result_cache.store(key, df)
-                # a miss's steps are the query's own, not the cached frame's
-                for i, (op, detail) in enumerate(plan_steps(df)):
-                    self._steps.append((rec.request_id, i, op, detail, None))
-                rec.status = "Completed"
-                return out
-            except Exception as e:  # noqa: BLE001
-                rec.status = "Failed"
-                rec.error_message = str(e)[:1000]
-                raise
-            finally:
-                rec.end_time = time.time()
-                rec.total_elapsed_ms = int((rec.end_time - rec.start_time) * 1000)
+            out = df
+            if caching:
+                key = self.result_cache.key_for(query, df)
+                if key is None:
+                    self.result_cache.bypass()
+                else:
+                    hit = self.result_cache.lookup(key)
+                    if hit is not None:
+                        self._steps.append(
+                            (rec.request_id, 0, "Return", "ResultCacheHit", None)
+                        )
+                        return hit
+                    out = self.result_cache.store(key, df)
+            # a miss's steps are the query's own, not the cached frame's
+            for i, (op, detail) in enumerate(plan_steps(df)):
+                self._steps.append((rec.request_id, i, op, detail, None))
+            return out
 
     def tsql(self, query: str, resource_class: str = "smallrc") -> DataFrame:
         """Submit a T-SQL-flavored statement: rewritten to Spark SQL
@@ -320,16 +324,8 @@ class Engine:
             # DML executes eagerly — record it in the request log like any
             # submitted statement (sys.dm_pdw_exec_requests parity)
             rec = self._new_request(query, None, "smallrc")
-            rec.start_time = time.time()
-            try:
+            with self._running(rec, query[:100]):
                 n = fn()
-            except Exception as e:  # noqa: BLE001
-                rec.status = "Failed"
-                rec.error_message = str(e)[:1000]
-                raise
-            rec.status = "Completed"
-            rec.end_time = time.time()
-            rec.total_elapsed_ms = int((rec.end_time - rec.start_time) * 1000)
             return self.spark.sql(f"SELECT CAST({n} AS BIGINT) AS rows_affected")
 
         m = re.match(
@@ -1233,8 +1229,7 @@ class Engine:
         df = self.catalog.table(source) if isinstance(source, str) else source
         label = f"export_training_shards({path})"
         rec = self._new_request(label, label, "largerc")
-        rec.start_time = time.time()
-        try:
+        with self._running(rec, label):
             n_written = write_training_shards(df, path, key_col, n_shards, seed)
             man_rows = write_manifest_from_export(self.spark, path, key_col, seed)
             n_rows = int(sum(r.n_rows for r in man_rows))
@@ -1243,14 +1238,6 @@ class Engine:
                     f"shard export torn: write processed {n_written} rows "
                     f"but {n_rows} landed on disk"
                 )
-        except Exception as e:  # noqa: BLE001
-            rec.status = "Failed"
-            rec.error_message = str(e)[:1000]
-            rec.end_time = time.time()
-            raise
-        rec.status = "Completed"
-        rec.end_time = time.time()
-        rec.total_elapsed_ms = int((rec.end_time - rec.start_time) * 1000)
         return {
             "path": path,
             "n_shards": n_shards,

@@ -189,33 +189,23 @@ class CompactionService:
         }
 
     def rebuild(self, table: str, target_rows_per_file: int = ROWGROUP_TARGET_ROWS) -> int:
-        """Rewrite the table with file count sized for the rowgroup target.
-        Returns the new file count."""
-        df = self.spark.table(Catalog._q(table))
-        layout = self.catalog.get_layout(table)
-        n_rows = df.count()
-        n_files = max(1, -(-n_rows // target_rows_per_file))
-        if layout.distribution == "hash" and layout.distribution_column:
-            out = df.repartition(n_files, F.col(layout.distribution_column))
-        else:
-            out = df.repartition(n_files)
-        if layout.sort_columns:
-            out = out.sortWithinPartitions(*layout.sort_columns)
-        # overwrite in place via a staging round-trip (parquet can't
-        # overwrite from its own scan)
-        staged = out.cache()
-        staged.count()
-        staged.write.mode("overwrite").format("parquet").saveAsTable(
-            Catalog._q(table + "__rebuild")
-        )
-        self.catalog.drop_table(table)
-        self.spark.sql(
-            f"ALTER TABLE {Catalog._q(table + '__rebuild')} RENAME TO {Catalog._q(table)}"
-        )
-        self.catalog._set_layout_properties(table, layout)
-        staged.unpersist()
-        return n_files
-
+        """Rewrite the table with file count sized for the rowgroup target,
+        keeping its partitioning and buckets (``Catalog._replace``).
+        Returns the new file count (a bucketed table writes one file per
+        bucket per task)."""
+        with self.catalog._lock(table):
+            df = self.spark.table(Catalog._q(table))
+            layout = self.catalog.get_layout(table)
+            n_rows = df.count()
+            n_files = max(1, -(-n_rows // target_rows_per_file))
+            if layout.distribution == "hash" and layout.distribution_column:
+                out = df.repartition(n_files, F.col(layout.distribution_column))
+            else:
+                out = df.repartition(n_files)
+            if layout.sort_columns:
+                out = out.sortWithinPartitions(*layout.sort_columns)
+            self.catalog._replace(table, out, layout.partition_column)
+            return len(self.meta._table_files(table))
 
     def generate_rebuild_statements(
         self, tables: list[str], min_total_rows: int = POOR_SEGMENT_THRESHOLD

@@ -143,7 +143,9 @@ class Meta:
             return []
         path = loc[0]["data_type"].replace("file:", "")
         out = []
-        for root, _dirs, files in os.walk(path):
+        for root, dirs, files in os.walk(path):
+            # Spark's listing skips _/. children (an uncommitted generation)
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
             for f in files:
                 if f.endswith(".parquet"):
                     out.append(os.path.join(root, f))

@@ -191,7 +191,7 @@ def _bm25_scores(
         # this exchange, which carries only map-side-combined partial
         # counts of the hits stream (vocabulary occurrences, a vanishing
         # fraction of the corpus).  Reverted per the r12 verdict; r13
-        # interleaved A/B (scripts/bm25_tf_ab.py, /tmp/bm25_tf_ab.json):
+        # interleaved A/B (recorded in OPTIMIZATION_r13.md):
         # s07 0.744/0.821 vs 0.851/0.859, s11 1.195 vs 1.274, s12 1.753
         # vs 1.833 (min/med), s13 within noise.
         hits = (

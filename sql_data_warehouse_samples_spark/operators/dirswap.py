@@ -331,10 +331,14 @@ def fs_listdir(path: str, spark=None) -> list[str]:
 
 
 def fs_rmtree(path: str, spark=None) -> None:
-    """Recursive delete, missing-ok."""
+    """Recursive delete, missing-ok; a plain file is deleted too (as the
+    Hadoop backend does)."""
     h = _hfs(path, spark)
     if h is None:
-        shutil.rmtree(path, ignore_errors=True)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.lexists(path):
+            os.remove(path)
     else:
         h.rmtree(path)
 

@@ -203,48 +203,39 @@ def scd2_merge(
     rewritten.  Any other layout falls back to a full copy-on-write
     rewrite, correct but O(|table|) per run.
     """
-    dim = catalog.table(table)
-    layout = catalog.get_layout(table)
-    history, applied = _scd2_classify(
-        dim,
-        source,
-        key,
-        tracked,
-        as_of=as_of,
-        valid_from=valid_from,
-        valid_to=valid_to,
-        current_flag=current_flag,
-        close_missing=close_missing,
-    )
-    spark = catalog.spark
-    if layout.partition_column == current_flag and not layout.buckets:
-        # incremental path: history files untouched, closed rows appended,
-        # current partition swapped.  Checkpoint breaks lineage on the table
-        # being overwritten (copy-on-write safety).  Closed rows come from
-        # the __scd_class tag — ONLY rows this run's explode closed — so a
-        # crash-retry replay with the same as_of appends nothing (the
-        # history passthrough also holds valid_to == as_of rows after the
-        # first run and must never re-qualify).
-        new_closed = applied.filter(F.col("__scd_class") == "close").drop(
-            "__scd_class"
+    with catalog._lock(table):
+        dim = catalog.table(table)
+        layout = catalog.get_layout(table)
+        history, applied = _scd2_classify(
+            dim,
+            source,
+            key,
+            tracked,
+            as_of=as_of,
+            valid_from=valid_from,
+            valid_to=valid_to,
+            current_flag=current_flag,
+            close_missing=close_missing,
         )
-        new_current = applied.filter(F.col(current_flag)).drop("__scd_class")
-        new_closed = catalog._apply_write_layout(new_closed, layout).localCheckpoint(
-            eager=True
-        )
-        new_current = catalog._apply_write_layout(new_current, layout).localCheckpoint(
-            eager=True
-        )
-        qt = catalog._q(table)
-        new_closed.write.insertInto(qt, overwrite=False)
-        mode_conf = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_conf, "static")
-        try:
-            spark.conf.set(mode_conf, "dynamic")
-            new_current.write.insertInto(qt, overwrite=True)
-        finally:
-            spark.conf.set(mode_conf, prev)
-        return
-    new_state = history.unionByName(applied.drop("__scd_class"))
-    merged = catalog._apply_write_layout(new_state, layout).localCheckpoint(eager=True)
-    merged.write.insertInto(catalog._q(table), overwrite=True)
+        part = layout.partition_column
+        if part == current_flag:
+            # incremental path: history files untouched, closed rows appended,
+            # current partition replaced.  Both writes read the table
+            # ``applied`` was derived from, so it is checkpointed once first.
+            # Closed rows come from the __scd_class tag — ONLY rows this run's
+            # explode closed — so a crash-retry replay with the same as_of
+            # appends nothing (the history passthrough also holds
+            # valid_to == as_of rows after the first run and must never
+            # re-qualify).
+            applied = applied.localCheckpoint(eager=True)
+            catalog.insert_into(
+                table,
+                applied.filter(F.col("__scd_class") == "close").drop("__scd_class"),
+            )
+            new_current = applied.filter(F.col(current_flag)).drop("__scd_class")
+            catalog._replace(
+                table, catalog._apply_write_layout(new_current, layout), part, [True]
+            )
+            return
+        new_state = history.unionByName(applied.drop("__scd_class"))
+        catalog._replace(table, catalog._apply_write_layout(new_state, layout), part)

@@ -81,7 +81,7 @@ class LoadOptions:
     timestamp_format: str | None = None
     # error policy (L2): substitute | discard | fail
     on_error: str = "substitute"
-    reject_value: int = 0  # S3: max malformed rows before the load fails
+    reject_value: int | None = None  # S3: max rejected rows; 0 = FAILFAST, None = no cap
     # control-char CR/LF restore (L4: char(30)/char(31) → \r \n,
     # GenerateLoadScript-V1.sql:82, V3:149)
     restore_newlines: bool = False
@@ -226,9 +226,10 @@ class CsvLoader:
         n_bad = counts["n_bad"] or 0
         if opts.on_error == "fail" and n_bad > 0:
             raise ValueError(f"load failed: {n_bad} malformed rows (on_error=fail)")
-        if opts.on_error == "discard" and n_bad > opts.reject_value > 0:
+        cap = opts.reject_value
+        if opts.on_error == "discard" and cap is not None and n_bad > cap:
             raise ValueError(
-                f"load failed: {n_bad} rejected rows exceeds REJECT_VALUE={opts.reject_value}"
+                f"load failed: {n_bad} rejected rows exceeds REJECT_VALUE={cap}"
             )
 
         cleaned = staged
@@ -251,5 +252,4 @@ class CsvLoader:
                 "elapsed_sec": elapsed,
             }
         )
-        # nothing is cached — release() stays a harmless no-op for callers
         return LoadResult(out, rows, rows_rejected, elapsed)

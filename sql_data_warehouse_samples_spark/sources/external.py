@@ -66,7 +66,7 @@ class ExternalTable:
     data_source: str
     file_format: str
     reject_type: str = "VALUE"
-    reject_value: int = 0
+    reject_value: int | None = None  # None: DDL omitted REJECT_VALUE
 
 
 def _unq(s: str) -> str:
@@ -280,7 +280,7 @@ class ExternalObjects:
                 data_source=_lit_or_ident(opts.get("DATA_SOURCE", "")),
                 file_format=_lit_or_ident(opts.get("FILE_FORMAT", "")),
                 reject_type=_lit_or_ident(opts.get("REJECT_TYPE", "VALUE")),
-                reject_value=int(opts.get("REJECT_VALUE", "0")),
+                reject_value=int(opts["REJECT_VALUE"]) if "REJECT_VALUE" in opts else None,
             )
             self.tables[name] = tbl
             if len(parts) == 2:
@@ -402,9 +402,9 @@ class ExternalObjects:
                 len(t.columns),
             )
             for t in self.tables.values()
-        ] or [("", "", "", "", -1, 0)]
+        ] or [("", "", "", "", None, 0)]
         return self.spark.createDataFrame(
             rows,
             "table_name string, location string, data_source string,"
             " file_format string, reject_value int, n_columns int",
-        ).filter("reject_value >= 0")
+        ).filter("table_name != ''")

@@ -13,21 +13,25 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
-    from sql_data_warehouse_samples_spark.session import build_session
+    from sql_data_warehouse_samples_spark.session import (
+        build_session,
+        default_parallelism,
+    )
 
     wh = tmp_path_factory.mktemp("spark-warehouse")
     s = build_session(
         app_name="sdw-spark-tests",
-        # local[8], NOT local[32] (r13, VERDICT r12 item 9 — pytest wall
-        # time): the suite runs at sf0.01/sf0.001 where almost every stage
+        # at most local[8], NOT local[32] (r13, VERDICT r12 item 9 —
+        # pytest wall time): the suite runs at sf0.01/sf0.001 where almost every stage
         # is task-dispatch-bound, so fewer default partitions make the
         # e2e ledger/maintenance suites ~24% faster (test_round11: 173 s
         # at 32 → 132 s at 8; 4 cpus measured the same as 8, 16 halves
         # the win).  The handful of genuinely CPU-parallel tests (BPE
         # corpus trains) pay a bounded penalty (~+17 s total) against a
         # multi-minute suite-wide win.  Correctness is unaffected — the
-        # spread/plan-lock tests only need parallelism ≥ 4.
-        master="local[8]",
+        # spread/plan-lock tests only need parallelism ≥ 4.  Capped by
+        # SPARK_GRAFT_CPUS / the CPUs this process may run on.
+        master=f"local[{min(8, default_parallelism())}]",
         shuffle_partitions=8,
         extra_conf={
             "spark.sql.warehouse.dir": str(wh),

@@ -1107,19 +1107,190 @@ def test_merge_into_partitioned_rewrites_only_affected(engine, spark):
     assert sorted(glob.glob(d1)) == before  # day 1 files untouched
 
 
-def test_merge_into_bucketed_preserves_colocation(engine, spark):
-    """Bucketed targets merge via staged CTAS + swap; the bucket layout (and
-    its no-shuffle join property) survives."""
+_LAYOUT_ROWS = [(i, i % 3, float(i)) for i in range(40)]
+
+
+def _rewrite(engine, spark, op, table):
+    """Run one rewrite on ``table`` (rows ``_LAYOUT_ROWS``); return the
+    expected rows as {id: (p, v)}."""
+    from sql_data_warehouse_samples_spark.maintenance import CompactionService
+
+    rows = {i: (p, v) for i, p, v in _LAYOUT_ROWS}
+    if op == "merge":
+        src = spark.createDataFrame(
+            [(5, 2, -5.0), (100, 1, 100.0)], "id: long, p: int, v: double"
+        )
+        engine.catalog.merge_into(table, src, on="id")
+        rows.update({5: (2, -5.0), 100: (1, 100.0)})
+    elif op == "delete":
+        r = engine.tsql(f"DELETE FROM {table} WHERE id % 4 = 0").collect()
+        assert r[0]["rows_affected"] == 10
+        rows = {i: row for i, row in rows.items() if i % 4}
+    elif op == "update":
+        r = engine.tsql(f"UPDATE {table} SET v = v + 1 WHERE id < 10").collect()
+        assert r[0]["rows_affected"] == 10
+        rows = {i: (p, v + 1 if i < 10 else v) for i, (p, v) in rows.items()}
+    else:
+        CompactionService(spark, engine.catalog, engine.meta).rebuild(table)
+    return rows
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["bucketed", "bucketed_partitioned"])
+@pytest.mark.parametrize("op", ["merge", "delete", "update", "rebuild"])
+def test_rewrite_keeps_physical_layout(engine, spark, op, partitioned):
+    """Every rewrite keeps the table's PHYSICAL layout, not only its
+    sdw.* properties: the metastore still declares the buckets (and the
+    partitioning), a self-join on the bucket column plans no shuffle
+    Exchange, and the rows are the rewrite's."""
     from sql_data_warehouse_samples_spark.catalog import hash_layout
 
-    src = _merge_fixture(
-        engine, spark, "m_buck", hash_layout("id", buckets=4)
+    table = f"testfact.lay_{op}_{int(partitioned)}"
+    layout = hash_layout(
+        "id", buckets=8, partition_column="p" if partitioned else None
     )
-    engine.catalog.merge_into("testfact.m_buck", src, on="id")
-    got = {r["id"]: r["v"] for r in engine.table("testfact.m_buck").collect()}
+    engine.catalog.create_table_as(
+        table,
+        spark.createDataFrame(_LAYOUT_ROWS, "id: long, p: int, v: double"),
+        layout,
+        mode="overwrite",
+    )
+    expected = _rewrite(engine, spark, op, table)
+
+    ddl = spark.sql(f"SHOW CREATE TABLE {table}").collect()[0][0]
+    assert "CLUSTERED BY (id)" in ddl and "INTO 8 BUCKETS" in ddl, ddl
+    assert ("PARTITIONED BY (p)" in ddl) == partitioned, ddl
+    got = engine.catalog.get_layout(table)
+    assert got.buckets == 8 and got.distribution_column == "id"
+    t = engine.table(table)
+    assert {r["id"]: (r["p"], r["v"]) for r in t.collect()} == expected
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = t.alias("a").join(t.alias("b"), "id")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan and "Exchange" not in plan, plan
+        assert joined.count() == len(expected)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    engine.catalog.drop_table(table)
+
+
+def _table_dir(spark, table):
+    schema, name = table.split(".")
+    db = spark.catalog.getDatabase(schema).locationUri.removeprefix("file:")
+    return os.path.join(db, name)
+
+
+def test_replace_crash_before_switch_keeps_table(engine, spark, monkeypatch):
+    """A rewrite that dies between writing the new generation and the
+    LOCATION switch leaves the table readable with the same rows and
+    layout; the next rewrite succeeds and reclaims the orphan, leaving a
+    single generation on disk."""
+    from sql_data_warehouse_samples_spark.catalog import hash_layout
+
+    table = "testfact.crash_m"
+    src = _merge_fixture(engine, spark, "crash_m", hash_layout("id", buckets=4))
+    before = sorted(engine.table(table).collect())
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the switch")
+
+    monkeypatch.setattr(engine.catalog, "_switch_location", crash)
+    with pytest.raises(RuntimeError, match="crash before the switch"):
+        engine.catalog.merge_into(table, src, on="id")
+    monkeypatch.undo()
+    assert sorted(engine.table(table).collect()) == before
+    ddl = spark.sql(f"SHOW CREATE TABLE {table}").collect()[0][0]
+    assert "INTO 4 BUCKETS" in ddl, ddl
+    assert len(os.listdir(_table_dir(spark, table))) > 1  # the orphan
+    # file stats list what Spark reads: the orphan is not counted
+    n_rows = sum(r["row_count"] for r in engine.meta.partition_stats(table).collect())
+    assert n_rows == len(before)
+
+    engine.catalog.merge_into(table, src, on="id")
+    got = {r["id"]: r["v"] for r in engine.table(table).collect()}
     assert got == {1: 10.0, 2: 99.0, 3: 30.0, 4: 40.0}
-    layout = engine.catalog.get_layout("testfact.m_buck")
-    assert layout.buckets == 4 and layout.distribution_column == "id"
+    entries = os.listdir(_table_dir(spark, table))
+    assert len(entries) == 1 and entries[0].startswith("_g"), entries
+    assert not spark.catalog.tableExists(f"{table}__stage")
+    engine.catalog.drop_table(table)
+
+
+def test_concurrent_merges_into_one_table(engine, spark):
+    """Two client threads MERGE into the same table at once: the per-table
+    write lock serialises them, so both upserts land and one generation
+    stays on disk."""
+    import threading
+
+    from sql_data_warehouse_samples_spark.catalog import hash_layout
+
+    table = "testfact.conc_m"
+    engine.catalog.create_table_as(
+        table,
+        spark.createDataFrame(_LAYOUT_ROWS, "id: long, p: int, v: double"),
+        hash_layout("id", buckets=8),
+        mode="overwrite",
+    )
+    errors = []
+
+    def merge(lo):
+        try:
+            src = spark.createDataFrame(
+                [(i, 0, -1.0) for i in range(lo, lo + 5)],
+                "id: long, p: int, v: double",
+            )
+            engine.catalog.merge_into(table, src, on="id")
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=merge, args=(lo,)) for lo in (0, 100)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    got = {r["id"]: r["v"] for r in engine.table(table).collect()}
+    assert len(got) == 45
+    assert all(got[i] == -1.0 for i in [*range(5), *range(100, 105)])
+    entries = os.listdir(_table_dir(spark, table))
+    assert len(entries) == 1 and entries[0].startswith("_g"), entries
+    engine.catalog.drop_table(table)
+
+
+def test_rewrites_never_drop_or_rename_live_table(engine, spark, monkeypatch):
+    """MERGE, DELETE, UPDATE and REBUILD commit by switching LOCATION: none
+    of the SQL they issue drops or renames the live table, so a reader
+    never finds it missing."""
+    import re
+
+    from pyspark.sql import SparkSession
+
+    from sql_data_warehouse_samples_spark.catalog import hash_layout
+
+    table = "testfact.nodrop"
+    issued = []
+    real_sql = SparkSession.sql
+
+    def spy(self, query, *a, **k):
+        issued.append(query)
+        return real_sql(self, query, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", spy)
+    for op in ("merge", "delete", "update", "rebuild"):
+        engine.catalog.create_table_as(
+            table,
+            spark.createDataFrame(_LAYOUT_ROWS, "id: long, p: int, v: double"),
+            hash_layout("id", buckets=8),
+            mode="overwrite",
+        )
+        _rewrite(engine, spark, op, table)
+    monkeypatch.undo()
+    assert any("SET LOCATION" in q for q in issued)
+    for q in issued:
+        assert not re.search(r"\bRENAME\b", q, re.I), q
+        if re.search(r"\bDROP\s+TABLE\b", q, re.I):
+            assert "__stage" in q, q
+    engine.catalog.drop_table(table)
 
 
 # ---------------------------------------------------------------------------
@@ -1687,22 +1858,6 @@ def test_dml_clears_emptied_and_null_partitions(engine, spark):
     assert engine.table("testfact.del_ep").count() == 0
 
 
-def test_delete_where_bucketed_preserves_layout(engine, spark):
-    from sql_data_warehouse_samples_spark.catalog import hash_layout
-
-    base = spark.createDataFrame(
-        [(i, float(i)) for i in range(20)], "id: long, v: double"
-    )
-    engine.catalog.create_table_as(
-        "testfact.del_b", base, hash_layout("id", buckets=4), mode="overwrite"
-    )
-    n = engine.catalog.delete_where("testfact.del_b", "id % 2 = 0")
-    assert n == 10
-    assert engine.table("testfact.del_b").count() == 10
-    layout = engine.catalog.get_layout("testfact.del_b")
-    assert layout.buckets == 4 and layout.distribution_column == "id"
-
-
 def test_tsql_delete_and_update_statements(engine, spark):
     """T-SQL DML statement forms route through the catalog's predicate DML
     and return @@ROWCOUNT-style results."""
@@ -1767,6 +1922,36 @@ def test_tsql_dml_lands_in_request_log(engine, spark):
     assert recs[0].total_elapsed_ms is not None
 
 
+def test_tsql_dml_jobs_run_under_its_own_request(engine, spark):
+    """The Spark job group is sticky per thread: a DML request must set its
+    own, or its jobs are counted under whichever request last ran
+    ``Engine.sql`` on the thread.  A failed DML still records its elapsed
+    time."""
+    from sql_data_warehouse_samples_spark.catalog import TableLayout
+
+    engine.catalog.create_table_as(
+        "testfact.dml_jobs",
+        spark.createDataFrame([(1, 1.0), (2, 2.0)], "id: long, v: double"),
+        TableLayout(),
+        mode="overwrite",
+    )
+    engine.sql("SELECT COUNT(*) FROM testfact.dml_jobs").collect()
+    sel_id = engine._requests[-1].request_id
+    tracker = spark.sparkContext.statusTracker()
+    sel_jobs = set(tracker.getJobIdsForGroup(sel_id))
+    engine.tsql("DELETE FROM testfact.dml_jobs WHERE id = 1").collect()
+    del_id = engine._requests[-1].request_id
+    assert set(tracker.getJobIdsForGroup(sel_id)) == sel_jobs
+    stages = engine.task_requests().filter(F.col("request_id") == del_id)
+    assert stages.count() > 0
+
+    with pytest.raises(Exception):
+        engine.tsql("DELETE FROM testfact.dml_jobs WHERE no_such_col = 1")
+    failed = engine._requests[-1]
+    assert failed.status == "Failed"
+    assert failed.total_elapsed_ms is not None and failed.end_time is not None
+
+
 def test_tsql_dml_without_where_touches_all_rows(engine, spark):
     from sql_data_warehouse_samples_spark.catalog import TableLayout
 
@@ -1792,8 +1977,9 @@ def test_tsql_dml_without_where_touches_all_rows(engine, spark):
 
 def test_datamart_hub_and_spoke_end_to_end(engine, spark):
     """Hub control table drives per-spoke external tables: spoke reads hit
-    hub data through LOCATION-attached tables, grants scope what each
-    spoke sees, DDL text keeps the reference's external-table shape."""
+    the live hub tables through views (across hub rewrites), grants scope
+    what each spoke sees, DDL text keeps the reference's external-table
+    shape."""
     from sql_data_warehouse_samples_spark.catalog import TableLayout
     from sql_data_warehouse_samples_spark.datamart import (
         CONTROL_TABLE,
@@ -1866,14 +2052,31 @@ def test_datamart_hub_and_spoke_end_to_end(engine, spark):
         assert {
             str(r["day"]) for r in fact.select("day").distinct().collect()
         } == {"2024-01-01", "2024-01-02"}
-        # spoke sees hub WRITES after a cache refresh, no re-setup needed
-        # (shared storage; REFRESH drops the stale file index)
+        # spoke sees hub WRITES with no re-setup: appends, and rewrites
+        # that commit a new generation directory (twice, so the first
+        # generation is gone too)
         engine.catalog.insert_into(
             "hub_dim.city",
             spark.createDataFrame([(3, "de")], "city_key: long, city: string"),
         )
         s0.refresh()
         assert spark.table("spoke_dm0.hub_dim_city").count() == 3
+        engine.tsql("DELETE FROM hub_dim.city WHERE city_key = 1").collect()
+        s0.refresh()
+        assert spark.table("spoke_dm0.hub_dim_city").count() == 2
+        engine.tsql("UPDATE hub_dim.city SET city = 'es' WHERE city_key = 2").collect()
+        s0.refresh()
+        got = {
+            (r["city_key"], r["city"])
+            for r in spark.table("spoke_dm0.hub_dim_city").collect()
+        }
+        assert got == {(2, "es"), (3, "de")}
+        assert got == {
+            (r["city_key"], r["city"])
+            for r in spark.table("hub_dim.city").collect()
+        }
+        engine.tsql("DELETE FROM hub_fact.sale WHERE day = '2024-01-01'").collect()
+        assert spark.table("spoke_dm1.hub_fact_sale").count() == 2
         # idempotent re-setup
         assert s1.setup_external_tables(hub) == made1
     finally:

@@ -71,11 +71,20 @@ def test_discard_policy_and_reject_value(loader, tmp_path):
     p = write(tmp_path, "bad2.csv", "1,ok,3.5,1990-01-01\nxx,bad,oops,baddate\n")
     res = loader.load(p, COLS, LoadOptions(on_error="discard", reject_value=5))
     assert res.rows_loaded == 1 and res.rows_rejected == 1
-    # S3: REJECT_VALUE exceeded → whole load fails (REJECT_VALUE=0 means
-    # unlimited in our options; use 1-with-2-bad to trigger)
+    # S3: REJECT_VALUE exceeded → whole load fails (1 tolerated, 2 bad)
     p2 = write(tmp_path, "bad2b.csv", "xx,b1,oops,x\nyy,b2,oops,y\n1,ok,1.0,1990-01-01\n")
     with pytest.raises(ValueError, match="REJECT_VALUE"):
         loader.load(p2, COLS, LoadOptions(on_error="discard", reject_value=1))
+
+
+def test_reject_value_zero_fails_on_first_reject(loader, tmp_path):
+    """S3: REJECT_VALUE = 0 is FAILFAST — one rejected row fails the load;
+    leaving reject_value unset (None) means no cap."""
+    p = write(tmp_path, "bad0.csv", "1,ok,3.5,1990-01-01\nxx,bad,oops,baddate\n")
+    with pytest.raises(ValueError, match="REJECT_VALUE=0"):
+        loader.load(p, COLS, LoadOptions(on_error="discard", reject_value=0))
+    res = loader.load(p, COLS, LoadOptions(on_error="discard"))
+    assert res.rows_loaded == 1 and res.rows_rejected == 1
 
 
 def test_fail_policy(loader, tmp_path):
@@ -234,6 +243,7 @@ def test_polybase_external_ddl_ctas_end_to_end(spark, tmp_path):
         # sys.external_tables-style listing
         ext = eng.external.describe().collect()
         assert ext[0].table_name == "ext_ACCOUNT_FACT" and ext[0].n_columns == 4
+        assert ext[0].reject_value == 0  # explicit REJECT_VALUE = 0 kept
         # external-object catalog views registered with the corpus
         eng.register_monitoring_views()
         assert eng.spark.sql(

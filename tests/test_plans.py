@@ -370,7 +370,7 @@ def test_s07_bm25_filters_tokens_before_explode(spark):
     # explode consumes the pre-filtered __hits projection, never raw
     # tokens (r13: back to the r11 explode+groupBy tf — the r12 map-side
     # HOF's interpreted per-element CPU measured slower than this
-    # hits-only exchange on every consumer; scripts/bm25_tf_ab.py)
+    # hits-only exchange on every consumer; OPTIMIZATION_r13.md)
     assert gen and all("__hits" in ln for ln in gen), gen
     # the corpus scan was consumed by the checkpointed projection — the
     # scoring plan reads the checkpoint, so documents appear ZERO times
