@@ -17,6 +17,7 @@ Catalyst remains the real optimizer/executor — this layer only observes.
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 import time
@@ -45,6 +46,10 @@ class RequestRecord:
     total_elapsed_ms: int | None = None
     error_message: str | None = None
 
+
+#: request ids are also Spark job groups, so they are unique per process:
+#: two engines on one SparkContext must not claim each other's jobs
+_request_ids = itertools.count(1)
 
 _REQUESTS_SCHEMA = T.StructType(
     [
@@ -114,15 +119,13 @@ class Engine:
         # table → (cache_state, refreshed_at, row_count); M6 surface
         self._replicated_state: dict[str, tuple[str, float, int]] = {}
         self._lock = threading.Lock()
-        self._next_id = 0
 
     # --- request lifecycle ----------------------------------------------
 
     def _new_request(self, command: str, label: str | None, resource_class: str) -> RequestRecord:
         with self._lock:
-            self._next_id += 1
             rec = RequestRecord(
-                request_id=f"QID{self._next_id}",
+                request_id=f"QID{next(_request_ids)}",
                 command=command,
                 label=label,
                 resource_class=resource_class,
@@ -132,7 +135,7 @@ class Engine:
 
     @contextmanager
     def _running(self, rec: RequestRecord, description: str):
-        """Run a request's work under its own job group (the status tracker
+        """Run a request's work under its own job group (the status store
         attributes its jobs to it, sys.dm_pdw_sql_requests); status and
         elapsed time are recorded however the work ends."""
         rec.start_time = time.time()
@@ -163,9 +166,11 @@ class Engine:
         """Submit SQL through admission control with request logging.
 
         The DataFrame is lazy; the request row transitions to Completed once
-        the plan is produced (execution metrics land in plan_steps when the
-        caller materializes).  LABEL parity: also set as the Spark job group
-        so the Spark UI shows it (D3).
+        the plan is produced, and its step rows are the planned physical
+        operators (``finalize_request`` refreshes them with executed row
+        counts after the caller materializes).  The request id is set as the
+        Spark job group, so the jobs the caller's action runs count toward
+        the request in ``task_requests`` (D3).
 
         With result caching on (M10), a repeated deterministic query over
         unchanged input files is served from the materialized result; any
@@ -691,48 +696,16 @@ class Engine:
         """sys.dm_pdw_sql_requests parity: one row per executed stage of each
         request (vw_sql_requests.sql:8-22).  num_tasks is the stage's
         fan-out — the analogue of per-distribution SQL requests; stages the
-        tracker has already evicted are skipped.
+        status store has already evicted are skipped.
 
         Each row also carries the stage's DMS-analogue byte counters
-        (shuffle read/write bytes+rows, spill, peak execution memory) from
-        the status REST API (metrics.py) — the per-step shuffle worker
-        metrics of microsoft.vw_query_step_details.sql:24-33."""
-        from .metrics import EMPTY, stage_metrics
+        (shuffle read/write bytes+rows, spill, peak execution memory) — the
+        per-step shuffle worker metrics of microsoft.vw_query_step_details.
+        sql:24-33.  One ``/jobs`` and one ``/stages`` read of the status REST
+        API (metrics.py); empty when the Spark UI is off."""
+        from .metrics import request_stages
 
-        st = self.spark.sparkContext.statusTracker()
-        sm = stage_metrics(self.spark)
-        rows = []
-        for r in self._requests:
-            for job_id in st.getJobIdsForGroup(r.request_id):
-                ji = st.getJobInfo(job_id)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = st.getStageInfo(sid)
-                    if si is None:
-                        continue
-                    m = sm.get(sid, EMPTY)
-                    rows.append(
-                        (
-                            r.request_id,
-                            job_id,
-                            sid,
-                            si.name[:200],
-                            si.numTasks,
-                            si.numCompletedTasks,
-                            si.numFailedTasks,
-                            m["shuffle_read_bytes"],
-                            m["shuffle_read_rows"],
-                            m["shuffle_write_bytes"],
-                            m["shuffle_write_rows"],
-                            m["memory_spill_bytes"],
-                            m["disk_spill_bytes"],
-                            m["peak_memory_bytes"],
-                            m["input_bytes"],
-                            m["output_bytes"],
-                            m["executor_run_ms"],
-                        )
-                    )
+        rows = request_stages(self.spark, [r.request_id for r in self._requests])
         return self.spark.createDataFrame(
             rows or [("", -1, -1, "", 0, 0, 0) + (0,) * 10],
             "request_id string, job_id int, stage_id int, stage_name string,"
@@ -823,7 +796,7 @@ class Engine:
         self.exec_requests().createOrReplaceTempView("meta_requests")
         self.request_steps().createOrReplaceTempView("meta_request_steps")
         self.resource_waits().createOrReplaceTempView("meta_resource_waits")
-        self.meta.register_views(tables)
+        schemas = self.meta.register_views(tables)
         self.spark.sql(
             """
             CREATE OR REPLACE TEMP VIEW vw_active_queries AS
@@ -995,7 +968,7 @@ class Engine:
         self.ops.latest_backup().createOrReplaceTempView("vw_latest_backup")
         self.ops.slo_status().createOrReplaceTempView("vw_slo_status")
         self.ops.operation_status().createOrReplaceTempView("meta_operation_status")
-        self.ops.tde_status().createOrReplaceTempView("vw_tde_status")
+        self.ops.tde_status(schemas).createOrReplaceTempView("vw_tde_status")
         self.spark.createDataFrame(
             self._role_members, "role_name string, member_name string"
         ).createOrReplaceTempView("meta_role_members")
@@ -1091,12 +1064,13 @@ class Engine:
             # stats-drift + skew classification (sqlops ImpactedTables:1-56)
             from .maintenance import impacted_tables
 
+            footers = self.spark.table("meta_partition_stats")
             impacted_tables(
-                self.spark, self.catalog, self.meta, tables, stats=self.stats
+                self.spark, self.catalog, footers, tables, stats=self.stats
             ).createOrReplaceTempView("vw_impacted_tables")
         # the raw sys.* PDW catalog (pdw_catalog.py) — what the sqlops
-        # scripts actually join — plus its scalar helpers
-        self.pdw_sys.register(tables)
+        # scripts actually join — reshaped from the views above
+        self.pdw_sys.register(schemas)
         from pyspark.sql import types as T
 
         cur_db = self.spark.catalog.currentDatabase()

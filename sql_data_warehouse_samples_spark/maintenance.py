@@ -240,7 +240,7 @@ def catalog_row_estimate(spark: SparkSession, table: str) -> int | None:
 def impacted_tables(
     spark: SparkSession,
     catalog: Catalog,
-    meta: Meta,
+    partition_stats: DataFrame,
     tables: list[str],
     min_rows: int = 1_000_000,
     min_skew_percent: float = 10.0,
@@ -251,7 +251,9 @@ def impacted_tables(
     tables whose optimizer statistics are missing or drifted from the actual
     stored rows, or whose per-distribution layout is skewed.
 
-    * cmp_row_count — actual rows from parquet footers (compute-node truth)
+    * cmp_row_count — actual rows from parquet footers (compute-node truth):
+      ``partition_stats`` rows (``Meta.partition_stats`` or the registered
+      ``meta_partition_stats``) of ``tables``
     * ctl_row_count — catalog statistics estimate (control-node belief)
     * stat_info     — 'missing stats' (never analyzed) or 'outdated stats'
       (|ctl−cmp|·100/cmp > ``outdated_stats_pct``)
@@ -260,14 +262,22 @@ def impacted_tables(
     Only tables with cmp_row_count > ``min_rows`` AND at least one finding
     are returned, like the reference's final filter.
     """
-    rows = []
-    for t in tables:
-        ps = meta.partition_stats(t).agg(
+    per_table = {
+        r["t"]: r
+        for r in partition_stats.groupBy(
+            F.concat_ws(".", "schema_name", "table_name").alias("t")
+        )
+        .agg(
             F.count(F.lit(1)).alias("partitions"),
             F.sum("row_count").alias("cmp"),
             F.min("row_count").alias("mn"),
             F.max("row_count").alias("mx"),
-        ).collect()[0]
+        )
+        .collect()
+    }
+    rows = []
+    for t in tables:
+        ps = per_table.get(t, {"partitions": 0, "cmp": None, "mn": None, "mx": None})
         cmp_rows = ps["cmp"] or 0
         skew_pct = (
             round((ps["mx"] - ps["mn"]) * 100.0 / cmp_rows, 2) if cmp_rows else 0.0

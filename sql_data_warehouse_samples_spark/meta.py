@@ -1,17 +1,16 @@
 """DMV-style introspection layer (SURVEY.md §2.10, §3 EP3).
 
 The reference's largest query workload is its monitoring corpus over
-``sys.*`` catalog views and ``sys.dm_pdw_*`` DMVs.  This module serves the
-same surface from Spark-native sources:
+``sys.*`` catalog views and ``sys.dm_pdw_*`` DMVs.  This module decides
+where catalog and storage facts come from; ``register_views`` reads each
+source once:
 
-| reference relation                         | our source                        |
-|--------------------------------------------|-----------------------------------|
-| sys.schemas / sys.tables / sys.columns     | spark.catalog (meta_tables/cols)  |
-| sys.pdw_table_distribution_properties      | layout table properties           |
-| sys.dm_pdw_nodes_db_partition_stats        | parquet footers (partition_stats) |
-| sys.pdw_nodes_column_store_row_groups      | parquet row-group metadata        |
-| sys.dm_pdw_exec_requests                   | engine request log (engine.py)    |
+| view                                  | source                             |
+|---------------------------------------|------------------------------------|
+| meta_tables / meta_columns            | one spark.catalog walk + layouts   |
+| meta_partition_stats / meta_rowgroups | one parquet footer read per file   |
 
+``pdw_catalog.py`` reshapes these views into the raw ``sys.*`` relations.
 Row-group metadata is read with pyarrow from the table's files — the exact
 analogue of the engine reading columnstore segment catalogs.
 """
@@ -89,19 +88,26 @@ class Meta:
         self.spark = spark
         self.catalog = catalog
 
-    # --- sys.schemas / sys.tables ---------------------------------------
+    # --- sys.schemas / sys.tables / sys.columns --------------------------
 
-    def tables(self) -> DataFrame:
-        rows = []
+    def _walk(self) -> tuple[list[str], list[tuple], list[tuple]]:
+        """One pass over ``spark.catalog``: (database names, meta_tables
+        rows, meta_columns rows).  ``listTables`` repeats every temporary
+        view under each database; those are session objects, not tables of
+        that schema, so they are skipped."""
+        schemas, tables, columns = [], [], []
         for db in self.spark.catalog.listDatabases():
+            schemas.append(db.name)
             for t in self.spark.catalog.listTables(db.name):
+                if t.isTemporary:
+                    continue
                 layout = None
-                if t.tableType != "VIEW" and not t.isTemporary:
+                if t.tableType != "VIEW":
                     try:
                         layout = self.catalog.get_layout(f"{db.name}.{t.name}")
                     except Exception:  # noqa: BLE001 — non-managed tables
                         layout = None
-                rows.append(
+                tables.append(
                     (
                         db.name,
                         t.name,
@@ -113,25 +119,21 @@ class Meta:
                         layout.index_type if layout else None,
                     )
                 )
-        return self.spark.createDataFrame(rows, _TABLES_SCHEMA)
-
-    # --- sys.columns ------------------------------------------------------
-
-    def columns(self) -> DataFrame:
-        rows = []
-        for db in self.spark.catalog.listDatabases():
-            for t in self.spark.catalog.listTables(db.name):
-                if t.isTemporary:
-                    continue
                 try:
                     cols = self.spark.catalog.listColumns(t.name, db.name)
-                except Exception:  # noqa: BLE001
+                except Exception:  # noqa: BLE001 — unresolvable view
                     continue
                 for i, c in enumerate(cols):
-                    rows.append((db.name, t.name, c.name, i, c.dataType, c.nullable))
-        return self.spark.createDataFrame(rows, _COLUMNS_SCHEMA)
+                    columns.append((db.name, t.name, c.name, i, c.dataType, c.nullable))
+        return schemas, tables, columns
 
-    # --- per-distribution stats (sys.dm_pdw_nodes_db_partition_stats) ----
+    def tables(self) -> DataFrame:
+        return self.spark.createDataFrame(self._walk()[1], _TABLES_SCHEMA)
+
+    def columns(self) -> DataFrame:
+        return self.spark.createDataFrame(self._walk()[2], _COLUMNS_SCHEMA)
+
+    # --- parquet footers: partition stats and row groups -----------------
 
     def _table_files(self, table: str) -> list[str]:
         loc = (
@@ -151,33 +153,14 @@ class Meta:
                     out.append(os.path.join(root, f))
         return sorted(out)
 
-    def partition_stats(self, table: str) -> DataFrame:
-        """Per-file (≈ per-distribution) row counts and bytes from parquet
-        footers — the skew-detection input (vw_tables_with_skew.sql:9-20)."""
-        import pyarrow.parquet as pq
+    def _footers(self, tables: list[str]) -> tuple[list[tuple], list[tuple]]:
+        """(partition-stats rows, rowgroup rows) of ``tables`` from one
+        listing per table and one footer read per file.
 
-        schema_name, table_name = table.split(".", 1)
-        rows = []
-        for i, f in enumerate(self._table_files(table)):
-            md = pq.ParquetFile(f).metadata
-            size = os.path.getsize(f)
-            data = sum(
-                md.row_group(g).column(c).total_compressed_size
-                for g in range(md.num_row_groups)
-                for c in range(md.row_group(g).num_columns)
-            )
-            rows.append((schema_name, table_name, f, i, md.num_rows, size, data))
-        return self.spark.createDataFrame(rows, _PARTITION_STATS_SCHEMA)
+        One file = one distribution (``distribution_id`` = file index).
 
-    # --- row groups (sys.pdw_nodes_column_store_row_groups) --------------
-
-    def rowgroups(self, table: str) -> DataFrame:
-        """Parquet row-group physical stats — CCI rowgroup health parity
-        (RowgroupDetails.sql:1-24; rowgroup target 1,048,576 rows,
-        TableHealthCount.sql:15).
-
-        ``trim_reason_desc`` diagnoses WHY a rowgroup is under the target,
-        the way Rowgroups.sql:11-29 buckets trimmed CCI rowgroups
+        ``trim_reason_desc`` diagnoses WHY a rowgroup is under the 1M-row
+        target, the way Rowgroups.sql:11-29 buckets trimmed CCI rowgroups
         (MEMORY_LIMITATION / BULKLOAD / DICTIONARY_SIZE).  Parquet has its
         own trim causes, classified from file-layout evidence:
 
@@ -194,60 +177,73 @@ class Meta:
         """
         import pyarrow.parquet as pq
 
-        schema_name, table_name = table.split(".", 1)
-        files = self._table_files(table)
-        rows = []
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            partitioned = "=" in os.path.basename(os.path.dirname(f))
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                if rg.num_rows >= ROWGROUP_TARGET_ROWS:
-                    reason = "NO_TRIM"
-                elif md.num_row_groups > 1 and g == md.num_row_groups - 1:
-                    reason = "BULKLOAD"
-                elif partitioned:
-                    reason = "PARTITION_FRAGMENT"
-                elif len(files) > 1:
-                    reason = "WRITE_PARALLELISM"
-                else:
-                    reason = "SMALL_SOURCE_FILE"
-                rows.append(
-                    (
-                        schema_name,
-                        table_name,
-                        f,
-                        g,
-                        rg.num_rows,
-                        rg.total_byte_size,
-                        sum(
-                            rg.column(c).total_compressed_size
-                            for c in range(rg.num_columns)
-                        ),
-                        "COMPRESSED",
-                        reason,
-                    )
+        stats, rowgroups = [], []
+        for table in tables:
+            schema_name, table_name = table.split(".", 1)
+            files = self._table_files(table)
+            for i, f in enumerate(files):
+                with pq.ParquetFile(f) as pf:
+                    md = pf.metadata
+                groups = [md.row_group(g) for g in range(md.num_row_groups)]
+                chunk_bytes = [
+                    sum(rg.column(c).total_compressed_size
+                        for c in range(rg.num_columns))
+                    for rg in groups
+                ]
+                stats.append(
+                    (schema_name, table_name, f, i, md.num_rows,
+                     os.path.getsize(f), sum(chunk_bytes))
                 )
-        return self.spark.createDataFrame(rows, _ROWGROUPS_SCHEMA)
+                partitioned = "=" in os.path.basename(os.path.dirname(f))
+                for g, rg in enumerate(groups):
+                    if rg.num_rows >= ROWGROUP_TARGET_ROWS:
+                        reason = "NO_TRIM"
+                    elif len(groups) > 1 and g == len(groups) - 1:
+                        reason = "BULKLOAD"
+                    elif partitioned:
+                        reason = "PARTITION_FRAGMENT"
+                    elif len(files) > 1:
+                        reason = "WRITE_PARALLELISM"
+                    else:
+                        reason = "SMALL_SOURCE_FILE"
+                    rowgroups.append(
+                        (schema_name, table_name, f, g, rg.num_rows,
+                         rg.total_byte_size, chunk_bytes[g], "COMPRESSED", reason)
+                    )
+        return stats, rowgroups
+
+    def partition_stats(self, table: str) -> DataFrame:
+        """Per-file (≈ per-distribution) row counts and bytes from parquet
+        footers — the skew-detection input (vw_tables_with_skew.sql:9-20)."""
+        return self.spark.createDataFrame(
+            self._footers([table])[0], _PARTITION_STATS_SCHEMA
+        )
+
+    def rowgroups(self, table: str) -> DataFrame:
+        """Parquet row-group physical stats — CCI rowgroup health parity
+        (RowgroupDetails.sql:1-24; rowgroup target 1,048,576 rows,
+        TableHealthCount.sql:15); trim reasons as in ``_footers``."""
+        return self.spark.createDataFrame(
+            self._footers([table])[1], _ROWGROUPS_SCHEMA
+        )
 
     # --- monitoring views (the 14-view corpus, ported) -------------------
 
-    def register_views(self, tables: list[str] | None = None) -> None:
-        """Materialize meta relations as temp views: meta_tables,
-        meta_columns, and per-table meta_partition_stats/meta_rowgroups."""
-        self.tables().createOrReplaceTempView("meta_tables")
-        self.columns().createOrReplaceTempView("meta_columns")
-        if tables:
-            import functools
-
-            ps = functools.reduce(
-                DataFrame.unionByName, [self.partition_stats(t) for t in tables]
-            )
-            rg = functools.reduce(
-                DataFrame.unionByName, [self.rowgroups(t) for t in tables]
-            )
-            ps.createOrReplaceTempView("meta_partition_stats")
-            rg.createOrReplaceTempView("meta_rowgroups")
+    def register_views(self, tables: list[str] | None = None) -> list[str]:
+        """Register meta_tables and meta_columns from one catalog walk, and
+        meta_partition_stats / meta_rowgroups from one footer pass over
+        ``tables`` (empty when no table is given, so no earlier table's
+        rows survive).  Returns the database names the walk saw."""
+        schemas, table_rows, column_rows = self._walk()
+        stats, rowgroups = self._footers(tables or [])
+        for rows, schema, name in [
+            (table_rows, _TABLES_SCHEMA, "meta_tables"),
+            (column_rows, _COLUMNS_SCHEMA, "meta_columns"),
+            (stats, _PARTITION_STATS_SCHEMA, "meta_partition_stats"),
+            (rowgroups, _ROWGROUPS_SCHEMA, "meta_rowgroups"),
+        ]:
+            self.spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
+        return schemas
 
     def table_sizes(self) -> DataFrame:
         """Port of microsoft.vw_table_sizes (vw_table_sizes.sql:4-99):

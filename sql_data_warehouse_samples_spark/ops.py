@@ -169,13 +169,11 @@ class OpsService:
     def set_encryption(self, database: str, encrypted: bool) -> None:
         self._encrypted[database] = encrypted
 
-    def tde_status(self) -> DataFrame:
-        """Per-database encryption flags, TRUE/FALSE strings like the
-        reference's CASE is_encrypted output; databases default FALSE."""
-        dbs = sorted(
-            {d.name for d in self.spark.catalog.listDatabases()}
-            | set(self._encrypted)
-        )
+    def tde_status(self, databases: list[str]) -> DataFrame:
+        """Per-database encryption flags for the catalog's ``databases``,
+        TRUE/FALSE strings like the reference's CASE is_encrypted output;
+        databases default FALSE."""
+        dbs = sorted(set(databases) | set(self._encrypted))
         rows = [
             (name, "TRUE" if self._encrypted.get(name, False) else "FALSE")
             for name in dbs

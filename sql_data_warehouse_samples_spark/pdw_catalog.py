@@ -11,20 +11,21 @@ MemoryConsumption.sql:23-35, UserActivities.sql:1-31,
 scripts/queries/query_memory_usage.sql:22-42).
 
 This module serves those exact relations — PDW column names, PDW join
-keys — from Spark-native sources, so the reference scripts run VERBATIM
-through ``Engine.tsql``:
+keys — so the reference scripts run VERBATIM through ``Engine.tsql``.  It
+reads no source of its own: each relation reshapes a view that
+``Engine.register_monitoring_views`` has just registered, or one of the
+engine's in-memory ledgers:
 
-* logical catalog (schemas/tables/objects/columns/types/indexes/stats)
-  → ``spark.catalog`` listings + the engine's layout/statistics ledgers;
-* physical layout (``pdw_table_mappings`` / ``pdw_nodes_tables`` /
-  ``pdw_distributions`` / ``dm_pdw_nodes_db_partition_stats`` /
-  columnstore rowgroup DMVs) → parquet footers, one file = one
-  distribution, exactly the mapping meta.py already uses;
-* nodes (``dm_pdw_nodes``, OS performance counters, tempdb session space)
-  → the status REST API (metrics.py) with a JVM-Runtime fallback.  On
-  ``local[*]`` the single JVM serves both roles, so the node DMV shows the
-  driver as the CONTROL node (id 1) and a COMPUTE node (id 2) backed by
-  the same process — the same shape a 60-distribution cluster reports.
+* catalog and layout → ``meta_tables`` / ``meta_columns`` (meta.py);
+  ``sys.partitions`` row beliefs and ``sys.stats`` → the statistics ledger;
+* physical layout → ``meta_partition_stats`` / ``meta_rowgroups``
+  (meta.py), one parquet file = one distribution;
+* nodes and memory counters → ``meta_nodes`` (metrics.py), with the driver
+  JVM's heap as the fallback.  On ``local[*]`` the single JVM serves both
+  roles, so the node DMV shows the driver as the CONTROL node (id 1) and a
+  COMPUTE node (id 2) backed by the same process;
+* DMS workers and tempdb session space → ``meta_task_requests``
+  (metrics.py), which holds this engine session's requests only.
 
 Identity model: ``object_id``/``schema_id`` are stable CRC32s of the
 qualified name (re-registration keeps ids), distributions are numbered by
@@ -34,7 +35,6 @@ reference's N-way catalog joins resolve.
 
 from __future__ import annotations
 
-import re
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,13 +64,33 @@ CONTROL_NODE_ID = 1
 _FIRST_COMPUTE_ID = 2
 
 
+
+def _oid(p: str = "") -> str:
+    """SQL form of ``object_id`` over a meta_* row (``p``: table alias)."""
+    return f"(crc32(concat({p}schema_name, '.', {p}table_name)) & 2147483647)"
+
+
+def _node_of(d: str) -> str:
+    """SQL form of the COMPUTE node of distribution ``d``: compute ids are
+    contiguous from _FIRST_COMPUTE_ID and distributions are dealt
+    round-robin over them."""
+    return (
+        f"CAST({_FIRST_COMPUTE_ID} + {d} % (SELECT COUNT(*) FROM"
+        " pdw_sys_dm_pdw_nodes WHERE type = 'COMPUTE') AS INT)"
+    )
+
+
 def object_id(qualified: str) -> int:
     """Stable positive object id for a ``schema.table`` name."""
     return zlib.crc32(qualified.encode()) & 0x7FFFFFFF
 
 
+def _schema_id(name: str) -> int:
+    return zlib.crc32(name.encode()) & 0xFFFFF
+
+
 class PdwSysCatalog:
-    """Builds + registers the raw ``sys.*`` relations as temp views
+    """Registers the raw ``sys.*`` relations as temp views
     (``pdw_sys_<name>``); ``functions/rewriter.py`` maps the ``sys.``
     names in verbatim scripts onto them."""
 
@@ -78,102 +98,8 @@ class PdwSysCatalog:
         self.engine = engine
         self.spark: SparkSession = engine.spark
 
-    # ---- node topology ---------------------------------------------------
-
-    def _nodes(self) -> list[tuple[int, str, str]]:
-        """[(pdw_node_id, type, name)] — driver = CONTROL; executors =
-        COMPUTE; on local[*] the driver doubles as the only COMPUTE node.
-        Cached per ``register()`` pass — every call hits the status REST
-        endpoint otherwise (one HTTP round-trip per DMV row is the kind of
-        control-plane chatter that melts a 1000-executor driver)."""
-        if getattr(self, "_nodes_cache", None) is not None:
-            return self._nodes_cache
-        from .metrics import executor_metrics
-
-        rows = executor_metrics(self.spark)
-        out = [(CONTROL_NODE_ID, "CONTROL", "driver")]
-        nid = _FIRST_COMPUTE_ID
-        for r in rows:
-            if r["node_type"] == "COMPUTE":
-                out.append((nid, "COMPUTE", r["host_port"] or r["node_id"]))
-                nid += 1
-        if len(out) == 1:  # local[*]: the driver is also the compute fleet
-            out.append((_FIRST_COMPUTE_ID, "COMPUTE", "localhost"))
-        self._nodes_cache = out
-        return out
-
-    def _compute_ids(self) -> list[int]:
-        return [nid for nid, typ, _ in self._nodes() if typ == "COMPUTE"]
-
-    # ---- logical catalog -------------------------------------------------
-
-    def _catalog_rows(self):
-        """One pass over spark.catalog: (schemas, tables, views, columns)."""
-        schemas, tables, views, columns = {}, [], [], []
-        for db in self.spark.catalog.listDatabases():
-            schemas[db.name] = zlib.crc32(db.name.encode()) & 0xFFFFF
-            for t in self.spark.catalog.listTables(db.name):
-                if t.isTemporary:
-                    continue
-                oid = object_id(f"{db.name}.{t.name}")
-                (views if t.tableType == "VIEW" else tables).append(
-                    (t.name, oid, schemas[db.name])
-                )
-                try:
-                    cols = self.spark.catalog.listColumns(t.name, db.name)
-                except Exception:  # noqa: BLE001 — unresolvable view
-                    continue
-                for i, c in enumerate(cols):
-                    base = re.match(r"\w+", c.dataType or "string").group(0)
-                    tid, _name, maxlen = _SYSTYPES.get(base, (231, "nvarchar", 8000))
-                    columns.append(
-                        (oid, i + 1, c.name, tid, tid, maxlen, bool(c.nullable))
-                    )
-        return schemas, tables, views, columns
-
-    def register(self, tables: list[str] | None = None) -> None:
-        """Register every raw relation as a ``pdw_sys_*`` temp view.
-
-        ``tables`` limits the physical (parquet-footer) relations, exactly
-        like ``Meta.register_views`` — the logical catalog is always full.
-        """
-        self._nodes_cache = None  # refresh node topology once per register
-        schemas, tbls, views, cols = self._catalog_rows()
-        self._df(
-            [(name, sid) for name, sid in schemas.items()],
-            "name string, schema_id long",
-        ).createOrReplaceTempView("pdw_sys_schemas")
-        from pyspark.sql import types as T
-
-        name_of = {sid: name for name, sid in schemas.items()}
-        # SCHEMA_NAME(schema_id) (clean.sql:5 existence guards)
-        self.spark.udf.register(
-            "SCHEMA_NAME", lambda sid: name_of.get(sid), T.StringType()
-        )
-        self._df(
-            [(n, o, s, "U", "USER_TABLE") for n, o, s in tbls],
-            "name string, object_id long, schema_id long, type string,"
-            " type_desc string",
-        ).createOrReplaceTempView("pdw_sys_tables")
-        self._df(
-            [(n, o, s, "U", "USER_TABLE") for n, o, s in tbls]
-            + [(n, o, s, "V", "VIEW") for n, o, s in views],
-            "name string, object_id long, schema_id long, type string,"
-            " type_desc string",
-        ).createOrReplaceTempView("pdw_sys_objects")
-        self._df(
-            cols,
-            "object_id long, column_id int, name string, system_type_id int,"
-            " user_type_id int, max_length int, is_nullable boolean",
-        ).createOrReplaceTempView("pdw_sys_columns")
-        self._df(
-            sorted({(tid, tid, name) for tid, name, _len in _SYSTYPES.values()}),
-            "user_type_id int, system_type_id int, name string",
-        ).createOrReplaceTempView("pdw_sys_types")
-        self._register_layout(tbls, set(tables) if tables else None)
-        self._register_stats(cols)
-        self._register_physical(tables or [])
-        self._register_runtime()
+    def _view(self, name: str, sql: str) -> None:
+        self.spark.sql(sql).createOrReplaceTempView(f"pdw_sys_{name}")
 
     def _df(self, rows, schema) -> DataFrame:
         if not rows:
@@ -181,97 +107,152 @@ class PdwSysCatalog:
             return self.spark.createDataFrame([(None,) * n], schema).limit(0)
         return self.spark.createDataFrame(rows, schema)
 
+    def register(self, schemas: list[str]) -> None:
+        """Register every raw relation as a ``pdw_sys_*`` temp view over the
+        ``meta_*`` views registered just before; ``schemas`` are the
+        database names of that registration's catalog walk."""
+        self._register_catalog(schemas)
+        self._register_layout()
+        self._register_stats()
+        self._register_nodes()
+        self._register_physical()
+        self._register_runtime(schemas)
+
+    # ---- logical catalog -------------------------------------------------
+
+    def _register_catalog(self, schemas: list[str]) -> None:
+        from pyspark.sql import types as T
+
+        ids = {name: _schema_id(name) for name in schemas}
+        self._df(
+            list(ids.items()), "name string, schema_id long"
+        ).createOrReplaceTempView("pdw_sys_schemas")
+        name_of = {sid: name for name, sid in ids.items()}
+        # SCHEMA_NAME(schema_id) (clean.sql:5 existence guards)
+        self.spark.udf.register(
+            "SCHEMA_NAME", lambda sid: name_of.get(sid), T.StringType()
+        )
+        objects = f"""
+            SELECT table_name AS name, {_oid()} AS object_id,
+                   (crc32(schema_name) & 1048575) AS schema_id,
+                   IF(is_view, 'V', 'U') AS type,
+                   IF(is_view, 'VIEW', 'USER_TABLE') AS type_desc
+            FROM meta_tables"""
+        self._view("objects", objects)
+        self._view("tables", objects + " WHERE NOT is_view")
+        self._view(
+            "views",
+            "SELECT name, object_id, schema_id FROM pdw_sys_objects"
+            " WHERE type = 'V'",
+        )
+        types = ", ".join(
+            f"('{base}', {tid}, {maxlen})"
+            for base, (tid, _name, maxlen) in _SYSTYPES.items()
+        )
+        self._view(
+            "columns",
+            f"""
+            SELECT {_oid()} AS object_id, ordinal + 1 AS column_id,
+                   column_name AS name,
+                   COALESCE(t.tid, 231) AS system_type_id,
+                   COALESCE(t.tid, 231) AS user_type_id,
+                   COALESCE(t.maxlen, 8000) AS max_length,
+                   is_nullable
+            FROM meta_columns c
+            LEFT JOIN (VALUES {types}) AS t(base, tid, maxlen)
+              ON regexp_extract(COALESCE(c.data_type, 'string'),
+                                '^[A-Za-z0-9_]+', 0) = t.base
+            """,
+        )
+        self._df(
+            sorted({(tid, tid, name) for tid, name, _len in _SYSTYPES.values()}),
+            "user_type_id int, system_type_id int, name string",
+        ).createOrReplaceTempView("pdw_sys_types")
+        self._df(
+            [], "name string, object_id long, schema_id long"
+        ).createOrReplaceTempView("pdw_sys_procedures")
+
     # ---- physical layout (distribution metadata) -------------------------
 
-    def _register_layout(self, tbls, monitored: set[str] | None = None) -> None:
+    def _register_layout(self) -> None:
         """indexes / distribution properties / column distribution ordinal /
-        table mappings — from the engine catalog's declared layouts
+        table mappings — from the declared layouts in meta_tables
         (StorageSize.sql:76-97's join spine).
 
-        ``monitored`` bounds the control-plane cost: the sys.partitions
-        row-belief needs a DESCRIBE EXTENDED per table (a driver
-        round-trip), so the catalog-statistics lookup runs only for the
-        monitored set; every other table answers from the in-memory stats
-        ledger (or the 1000-row missing-stats sentinel) — the same numbers
-        ImpactedTables' drift check consumes, without O(all tables) RPCs
-        on every register() of a wide catalog."""
-        indexes, dist_props, col_dist, mappings, partitions = [], [], [], [], []
-        sch_of = {}
-        for db in self.spark.catalog.listDatabases():
-            for t in self.spark.catalog.listTables(db.name):
-                if not t.isTemporary and t.tableType != "VIEW":
-                    sch_of[object_id(f"{db.name}.{t.name}")] = db.name
-        self._index_id = {}  # object_id → index_id, shared with partition DMV
-        for name, oid, _sid in tbls:
-            qual = f"{sch_of.get(oid, 'default')}.{name}"
-            try:
-                layout = self.engine.catalog.get_layout(qual)
-            except Exception:  # noqa: BLE001 — external/unmanaged table
-                layout = None
-            index_type = (layout.index_type if layout else None) or "CCI"
-            itype, idesc = {
-                "CCI": (5, "CLUSTERED COLUMNSTORE"),
-                "heap": (0, "HEAP"),
-            }.get(index_type, (1, "CLUSTERED"))
-            indexes.append((oid, 1 if itype else 0, itype, idesc))
-            self._index_id[oid] = 1 if itype else 0
-            # sys.partitions: the CONTROL node's row-count belief comes from
-            # optimizer statistics, so a never-analyzed table reports the
-            # PDW default estimate of 1000 rows — exactly the sentinel
-            # ImpactedTables:6 tests (@missingStatCtlRowCount int=1000)
-            ctl_rows = None
-            if monitored is None or qual in monitored:
-                try:
-                    from .maintenance import catalog_row_estimate
-
-                    ctl_rows = catalog_row_estimate(self.spark, qual)
-                except Exception:  # noqa: BLE001
-                    pass
-            if ctl_rows is None:
-                ctl_rows = self.engine.stats.last_analyzed_rows(qual)
-            partitions.append(
-                (oid, self._index_id[oid], 1,
-                 1000 if ctl_rows is None else int(ctl_rows))
+        sys.partitions: the CONTROL node's row-count belief comes from
+        optimizer statistics, so a never-analyzed table reports the PDW
+        default estimate of 1000 rows — exactly the sentinel ImpactedTables:6
+        tests (@missingStatCtlRowCount int=1000).  The belief is the row
+        count the StatisticsService ledger recorded at the last ANALYZE."""
+        self._view(
+            "indexes",
+            f"""
+            SELECT {_oid()} AS object_id,
+                   IF(itype = 0, 0, 1) AS index_id, itype AS type,
+                   CASE itype WHEN 5 THEN 'CLUSTERED COLUMNSTORE'
+                              WHEN 0 THEN 'HEAP' ELSE 'CLUSTERED' END
+                     AS type_desc
+            FROM (
+              SELECT *, CASE COALESCE(index_type, 'CCI') WHEN 'CCI' THEN 5
+                          WHEN 'heap' THEN 0 ELSE 1 END AS itype
+              FROM meta_tables WHERE NOT is_view
             )
-            policy = (layout.distribution if layout else None) or "round_robin"
-            pdesc = {"hash": "HASH", "replicate": "REPLICATE"}.get(
-                policy, "ROUND_ROBIN"
-            )
-            dist_props.append((oid, {"HASH": 2, "REPLICATE": 3}.get(pdesc, 4), pdesc))
-            mappings.append((oid, f"Table_{oid}"))
-            if layout and layout.distribution_column:
-                try:
-                    for i, f in enumerate(self.spark.table(qual).schema.fields):
-                        if f.name == layout.distribution_column:
-                            col_dist.append((oid, i + 1, 1))
-                except Exception:  # noqa: BLE001
-                    pass
-        self._df(
-            indexes, "object_id long, index_id int, type int, type_desc string"
-        ).createOrReplaceTempView("pdw_sys_indexes")
-        self._df(
-            dist_props,
-            "object_id long, distribution_policy int,"
-            " distribution_policy_desc string",
-        ).createOrReplaceTempView("pdw_sys_pdw_table_distribution_properties")
-        self._df(
-            col_dist, "object_id long, column_id int, distribution_ordinal int"
-        ).createOrReplaceTempView("pdw_sys_pdw_column_distribution_properties")
-        self._df(
-            mappings, "object_id long, physical_name string"
-        ).createOrReplaceTempView("pdw_sys_pdw_table_mappings")
-        self._df(
-            partitions,
-            "object_id long, index_id int, partition_number int, rows long",
+            """,
+        )
+        self._view(
+            "pdw_table_distribution_properties",
+            f"""
+            SELECT {_oid()} AS object_id,
+                   CASE distribution_policy WHEN 'hash' THEN 2
+                     WHEN 'replicate' THEN 3 ELSE 4 END AS distribution_policy,
+                   CASE distribution_policy WHEN 'hash' THEN 'HASH'
+                     WHEN 'replicate' THEN 'REPLICATE' ELSE 'ROUND_ROBIN' END
+                     AS distribution_policy_desc
+            FROM meta_tables WHERE NOT is_view
+            """,
+        )
+        self._view(
+            "pdw_column_distribution_properties",
+            f"""
+            SELECT {_oid("c.")} AS object_id, c.ordinal + 1 AS column_id,
+                   1 AS distribution_ordinal
+            FROM meta_tables t
+            JOIN meta_columns c
+              ON t.schema_name = c.schema_name AND t.table_name = c.table_name
+             AND t.distribution_column = c.column_name
+            WHERE NOT t.is_view
+            """,
+        )
+        self._view(
+            "pdw_table_mappings",
+            f"""
+            SELECT {_oid()} AS object_id,
+                   concat('Table_', {_oid()}) AS physical_name
+            FROM meta_tables WHERE NOT is_view
+            """,
+        )
+        beliefs = {
+            object_id(t): n
+            for t in {e["table"] for e in self.engine.stats._ledger}
+            if (n := self.engine.stats.last_analyzed_rows(t)) is not None
+        }
+        self.spark.table("pdw_sys_indexes").join(
+            self._df(list(beliefs.items()), "object_id long, rows long"),
+            "object_id",
+            "left",
+        ).selectExpr(
+            "object_id", "index_id", "1 AS partition_number",
+            "COALESCE(rows, 1000) AS rows",
         ).createOrReplaceTempView("pdw_sys_partitions")
 
-    def _register_stats(self, cols) -> None:
+    def _register_stats(self) -> None:
         """sys.stats / sys.stats_columns + the STATS_DATE() lookup — from the
         StatisticsService ledger (TableHealthCount.sql:55-75's staleness
         count)."""
         import datetime as dt
 
-        col_id = {(oid, name): cid for oid, cid, name, *_ in cols}
+        from pyspark.sql import types as T
+
         stats, stats_cols, dates = [], [], {}
         per_table: dict[str, int] = {}
         for e in self.engine.stats._ledger:
@@ -280,18 +261,16 @@ class PdwSysCatalog:
                 sid = per_table.get(e["table"], 0) + 1
                 per_table[e["table"]] = sid
                 stats.append((oid, sid, f"stat_{c}", 1))
-                cid = col_id.get((oid, c))
-                if cid is not None:
-                    stats_cols.append((oid, sid, cid))
+                stats_cols.append((oid, sid, c))
                 dates[(oid, sid)] = dt.datetime.fromtimestamp(e["analyzed_at"])
         self._df(
             stats, "object_id long, stats_id int, name string, user_created int"
         ).createOrReplaceTempView("pdw_sys_stats")
-        self._df(
-            stats_cols, "object_id long, stats_id int, column_id int"
-        ).createOrReplaceTempView("pdw_sys_stats_columns")
-        from pyspark.sql import types as T
-
+        self._df(stats_cols, "object_id long, stats_id int, name string").join(
+            self.spark.table("pdw_sys_columns"), ["object_id", "name"]
+        ).select("object_id", "stats_id", "column_id").createOrReplaceTempView(
+            "pdw_sys_stats_columns"
+        )
         self.spark.udf.register(
             "STATS_DATE",
             lambda oid, sid: dates.get((oid, sid)),
@@ -300,135 +279,143 @@ class PdwSysCatalog:
 
     # ---- physical stats (parquet footers) --------------------------------
 
-    def _register_physical(self, tables: list[str]) -> None:
+    def _register_physical(self) -> None:
         """Per-distribution partition stats + columnstore rowgroup DMVs.
         One parquet file = one distribution (meta.py's mapping); pages are
         8 KB like the reference's ``* 8.0`` KB math (StorageSize.sql:28)."""
-        compute = self._compute_ids()
-        nodes_tables, pstats, rowgroups = [], [], []
-        for qual in tables:
-            oid = object_id(qual)
-            stats = self.engine.meta.partition_stats(qual).collect()
-            dist_of_file = {}
-            for r in stats:
-                node = compute[r.distribution_id % len(compute)]
-                dist_of_file[r.file_path] = (r.distribution_id, node)
-                nodes_tables.append((f"Table_{oid}", oid, node, r.distribution_id))
-                reserved = -(-r.used_bytes // 8192)
-                data = -(-r.data_bytes // 8192)
-                pstats.append(
-                    (oid, node, r.distribution_id,
-                     getattr(self, "_index_id", {}).get(oid, 1), 1,
-                     reserved, reserved, data, 0, 0, r.row_count)
-                )
-            for g in self.engine.meta.rowgroups(qual).collect():
-                dist, node = dist_of_file.get(g.file_path, (0, compute[0]))
-                rowgroups.append(
-                    (oid, node, dist, 1, g.row_group_id, 3, g.state_desc,
-                     g.total_rows, 0, g.size_in_bytes, g.trim_reason_desc,
-                     "NOT_APPLICABLE", False, None, None, 1)
-                )
-        self._df(
-            nodes_tables,
-            "name string, object_id long, pdw_node_id int, distribution_id int",
-        ).createOrReplaceTempView("pdw_sys_pdw_nodes_tables")
-        self._df(
-            pstats,
-            "object_id long, pdw_node_id int, distribution_id int,"
-            " index_id int, partition_number int, reserved_page_count long,"
-            " used_page_count long, in_row_data_page_count long,"
-            " row_overflow_used_page_count long, lob_used_page_count long,"
-            " row_count long",
-        ).createOrReplaceTempView("pdw_sys_dm_pdw_nodes_db_partition_stats")
-        rg_schema = (
-            "object_id long, pdw_node_id int, distribution_id int,"
-            " partition_number int, row_group_id int, state int,"
-            " state_desc string, total_rows long, deleted_rows long,"
-            " size_in_bytes long, trim_reason_desc string,"
-            " transition_to_compressed_state_desc string,"
-            " has_vertipaq_optimization boolean, created_time timestamp,"
-            " closed_time timestamp, generation int"
+        node = _node_of("distribution_id")
+        self._view(
+            "pdw_nodes_tables",
+            f"""
+            SELECT concat('Table_', {_oid()}) AS name, {_oid()} AS object_id,
+                   {node} AS pdw_node_id, distribution_id
+            FROM meta_partition_stats
+            """,
         )
-        df = self._df(rowgroups, rg_schema)
-        df.createOrReplaceTempView("pdw_sys_pdw_nodes_column_store_row_groups")
+        self._view(
+            "dm_pdw_nodes_db_partition_stats",
+            f"""
+            SELECT p.object_id, p.pdw_node_id, p.distribution_id,
+                   COALESCE(i.index_id, 1) AS index_id, 1 AS partition_number,
+                   p.reserved AS reserved_page_count,
+                   p.reserved AS used_page_count,
+                   p.data AS in_row_data_page_count,
+                   CAST(0 AS LONG) AS row_overflow_used_page_count,
+                   CAST(0 AS LONG) AS lob_used_page_count, p.row_count
+            FROM (
+              SELECT {_oid()} AS object_id, {node} AS pdw_node_id,
+                     distribution_id, row_count,
+                     (used_bytes + 8191) DIV 8192 AS reserved,
+                     (data_bytes + 8191) DIV 8192 AS data
+              FROM meta_partition_stats
+            ) p
+            LEFT JOIN pdw_sys_indexes i ON p.object_id = i.object_id
+            """,
+        )
+        dist = "COALESCE(p.distribution_id, 0)"
+        self._view(
+            "pdw_nodes_column_store_row_groups",
+            f"""
+            SELECT {_oid("g.")} AS object_id, {_node_of(dist)} AS pdw_node_id,
+                   {dist} AS distribution_id, 1 AS partition_number,
+                   g.row_group_id, 3 AS state, g.state_desc, g.total_rows,
+                   CAST(0 AS LONG) AS deleted_rows, g.size_in_bytes,
+                   g.trim_reason_desc,
+                   'NOT_APPLICABLE' AS transition_to_compressed_state_desc,
+                   false AS has_vertipaq_optimization,
+                   CAST(NULL AS TIMESTAMP) AS created_time,
+                   CAST(NULL AS TIMESTAMP) AS closed_time, 1 AS generation
+            FROM meta_rowgroups g
+            LEFT JOIN meta_partition_stats p
+              ON g.schema_name = p.schema_name
+             AND g.table_name = p.table_name AND g.file_path = p.file_path
+            """,
+        )
         # the physical-stats DMV carries the same rows + delta-store id
         # (RowgroupDetails.sql:6-16)
-        df.selectExpr("*", "CAST(NULL AS LONG) AS delta_store_hobt_id")\
-            .createOrReplaceTempView(
-                "pdw_sys_dm_pdw_nodes_db_column_store_row_group_physical_stats"
-            )
-        dists = sorted({d for _n, _o, _nid, d in nodes_tables})
-        self._df(
-            [
-                (d, compute[d % len(compute)], f"Distribution_{d + 1}", d + 1)
-                for d in dists
-            ],
-            "distribution_id int, pdw_node_id int, name string, position int",
-        ).createOrReplaceTempView("pdw_sys_pdw_distributions")
+        self._view(
+            "dm_pdw_nodes_db_column_store_row_group_physical_stats",
+            "SELECT *, CAST(NULL AS LONG) AS delta_store_hobt_id"
+            " FROM pdw_sys_pdw_nodes_column_store_row_groups",
+        )
+        self._view(
+            "pdw_distributions",
+            f"""
+            SELECT distribution_id, {_node_of("distribution_id")} AS pdw_node_id,
+                   concat('Distribution_', distribution_id + 1) AS name,
+                   distribution_id + 1 AS position
+            FROM (SELECT DISTINCT distribution_id FROM pdw_sys_pdw_nodes_tables)
+            """,
+        )
 
     # ---- runtime DMVs (nodes, memory, tempdb, waits, loads, backups) -----
 
-    def _jvm_memory(self) -> tuple[int, int]:
-        """(committed_bytes, max_bytes) of this JVM — the perf-counter
-        fallback when the status REST server is off."""
-        rt = self.spark._jvm.java.lang.Runtime.getRuntime()
-        return int(rt.totalMemory()), int(rt.maxMemory())
+    def _register_nodes(self) -> None:
+        """sys.dm_pdw_nodes from meta_nodes: driver = CONTROL; executors =
+        COMPUTE (ids in executor-id order); on local[*] the driver doubles
+        as the only COMPUTE node."""
+        self._view(
+            "dm_pdw_nodes",
+            f"""
+            SELECT pdw_node_id, type, name, name AS address,
+                   false AS is_passive
+            FROM (
+              SELECT {CONTROL_NODE_ID} AS pdw_node_id, 'CONTROL' AS type,
+                     'driver' AS name
+              UNION ALL
+              SELECT CAST({_FIRST_COMPUTE_ID - 1} + row_number() OVER (
+                       ORDER BY TRY_CAST(node_id AS INT), node_id) AS INT),
+                     'COMPUTE', COALESCE(NULLIF(host_port, ''), node_id)
+              FROM meta_nodes WHERE node_type = 'COMPUTE'
+              UNION ALL
+              SELECT {_FIRST_COMPUTE_ID}, 'COMPUTE', 'localhost'
+              WHERE NOT EXISTS (
+                SELECT 1 FROM meta_nodes WHERE node_type = 'COMPUTE')
+            )
+            """,
+        )
 
-    def _register_runtime(self) -> None:
+    def _register_runtime(self, schemas: list[str]) -> None:
         import datetime as dt
 
-        from .metrics import executor_metrics
+        from .metrics import jvm_memory
+        from .wlm import TOTAL_SLOTS
 
-        nodes = self._nodes()
-        self._df(
-            [(nid, typ, name, name, False) for nid, typ, name in nodes],
-            "pdw_node_id int, type string, name string, address string,"
-            " is_passive boolean",
-        ).createOrReplaceTempView("pdw_sys_dm_pdw_nodes")
-
+        committed, maxmem = jvm_memory(self.spark)
         # OS performance counters (MemoryConsumption.sql:23-35): current and
         # target server memory per node, in KB
-        execs = {
-            r["host_port"]: r
-            for r in executor_metrics(self.spark)
-            if r["node_type"] == "COMPUTE"
-        }
-        committed, maxmem = self._jvm_memory()
-        counters = []
-        for nid, _typ, name in nodes:
-            e = execs.get(name)
-            used = (e["memory_used_bytes"] or committed) if e else committed
-            total = (e["max_memory_bytes"] or maxmem) if e else maxmem
-            counters += [
-                (nid, "SQLServer:Memory Manager",
-                 "Total Server Memory (KB)", used // 1024),
-                (nid, "SQLServer:Memory Manager",
-                 "Target Server Memory (KB)", total // 1024),
-            ]
-        self._df(
-            counters,
-            "pdw_node_id int, object_name string, counter_name string,"
-            " cntr_value long",
-        ).createOrReplaceTempView("pdw_sys_dm_pdw_nodes_os_performance_counters")
+        self._view(
+            "dm_pdw_nodes_os_performance_counters",
+            f"""
+            SELECT n.pdw_node_id, 'SQLServer:Memory Manager' AS object_name,
+                   stack(2,
+                     'Total Server Memory (KB)',
+                     COALESCE(NULLIF(e.memory_used_bytes, 0), {committed}) DIV 1024,
+                     'Target Server Memory (KB)',
+                     COALESCE(NULLIF(e.max_memory_bytes, 0), {maxmem}) DIV 1024)
+                   AS (counter_name, cntr_value)
+            FROM pdw_sys_dm_pdw_nodes n
+            LEFT JOIN meta_nodes e
+              ON e.node_type = 'COMPUTE' AND e.host_port = n.name
+            """,
+        )
 
-        # tempdb session space (TempdbConsumption.sql:2-7): spill bytes are
-        # our tempdb allocation; database_id 2 IS tempdb (DB_NAME() UDF)
-        from .metrics import stage_metrics
-
-        disk = mem = 0
-        for m in stage_metrics(self.spark).values():
-            disk += m["disk_spill_bytes"]
-            mem += m["memory_spill_bytes"]
+        # tempdb session space (TempdbConsumption.sql:2-7): this session's
+        # spill bytes are its tempdb allocation; database_id 2 IS tempdb
+        # (DB_NAME() UDF)
         sid = self.engine._session["session_id"]
-        space = [
-            (sid, 2, self._compute_ids()[0], disk // 8192, mem // 8192)
-        ]
-        self._df(
-            space,
-            "session_id string, database_id int, pdw_node_id int,"
-            " user_objects_alloc_page_count long,"
-            " internal_objects_alloc_page_count long",
-        ).createOrReplaceTempView("pdw_sys_dm_pdw_nodes_db_session_space_usage")
+        self._view(
+            "dm_pdw_nodes_db_session_space_usage",
+            f"""
+            SELECT '{sid}' AS session_id, 2 AS database_id,
+                   {_FIRST_COMPUTE_ID} AS pdw_node_id,
+                   COALESCE(SUM(disk_spill_bytes), 0) DIV 8192
+                     AS user_objects_alloc_page_count,
+                   COALESCE(SUM(memory_spill_bytes), 0) DIV 8192
+                     AS internal_objects_alloc_page_count
+            FROM meta_task_requests
+            """,
+        )
 
         # waits (UserActivities.sql:16-22): admission-control queue states
         waits = [
@@ -459,15 +446,12 @@ class PdwSysCatalog:
         # per-distribution SQL requests + memory grants
         # (query_memory_usage.sql:24-42: pr ⋈ psqlr on request_id,
         #  psqlr.spid ⋈ mem.session_id)
-        from .wlm import TOTAL_SLOTS
-
-        _, maxmem = self._jvm_memory()
         slot_kb = maxmem // TOTAL_SLOTS // 1024
         grants, sqlreqs = [], []
         for r in self.engine._requests:
             spid = object_id(r.request_id) % 100000
             sqlreqs.append(
-                (r.request_id, 0, self._compute_ids()[0], -1, r.status, None,
+                (r.request_id, 0, _FIRST_COMPUTE_ID, -1, r.status, None,
                  dt.datetime.fromtimestamp(r.start_time or r.submit_time),
                  dt.datetime.fromtimestamp(r.end_time) if r.end_time else None,
                  r.total_elapsed_ms, None, spid, r.command)
@@ -477,7 +461,7 @@ class PdwSysCatalog:
                 # reference's slots-to-memory model (M2/M3, wlm.py)
                 grant_kb = self.engine.wlm.slots_for(r.resource_class) * slot_kb
                 grants.append(
-                    (self._compute_ids()[0], spid, grant_kb, grant_kb, grant_kb)
+                    (_FIRST_COMPUTE_ID, spid, grant_kb, grant_kb, grant_kb)
                 )
         self._df(
             sqlreqs,
@@ -494,22 +478,24 @@ class PdwSysCatalog:
         ).createOrReplaceTempView("pdw_sys_dm_pdw_nodes_exec_query_memory_grants")
 
         # DMS workers (vw_query_step_details.sql:24-33): our data-movement
-        # worker = a shuffle stage; bytes/rows from the status REST API
-        dms = []
-        for row in self.engine.task_requests().collect():
-            moved = row.shuffle_read_bytes + row.shuffle_write_bytes
-            rows_moved = row.shuffle_read_rows + row.shuffle_write_rows
-            elapsed = max(row.executor_run_ms, 1)
-            dms.append(
-                (row.request_id, 0, row.stage_id, "Complete",
-                 moved * 1000 // elapsed, moved, rows_moved, elapsed)
+        # worker = a stage, with its shuffle bytes/rows
+        self._view(
+            "dm_pdw_dms_workers",
+            """
+            SELECT request_id, 0 AS step_index, stage_id AS dms_step_index,
+                   'Complete' AS status,
+                   moved * 1000 DIV elapsed AS bytes_per_sec,
+                   moved AS bytes_processed, rows_moved AS rows_processed,
+                   elapsed AS total_elapsed_time
+            FROM (
+              SELECT request_id, stage_id,
+                     shuffle_read_bytes + shuffle_write_bytes AS moved,
+                     shuffle_read_rows + shuffle_write_rows AS rows_moved,
+                     GREATEST(executor_run_ms, 1) AS elapsed
+              FROM meta_task_requests
             )
-        self._df(
-            dms,
-            "request_id string, step_index int, dms_step_index int,"
-            " status string, bytes_per_sec long, bytes_processed long,"
-            " rows_processed long, total_elapsed_time long",
-        ).createOrReplaceTempView("pdw_sys_dm_pdw_dms_workers")
+            """,
+        )
 
         # principals + role membership (vw_security_role_members.sql:8-16)
         roles = sorted({r for r, _m in self.engine._role_members})
@@ -525,15 +511,6 @@ class PdwSysCatalog:
             "role_principal_id int, member_principal_id int",
         ).createOrReplaceTempView("pdw_sys_database_role_members")
 
-        # object-class catalog slices (clean.sql:4-13 existence guards)
-        self.spark.sql(
-            "SELECT name, object_id, schema_id FROM pdw_sys_objects"
-            " WHERE type = 'V'"
-        ).createOrReplaceTempView("pdw_sys_views")
-        self._df(
-            [], "name string, object_id long, schema_id long"
-        ).createOrReplaceTempView("pdw_sys_procedures")
-
         # loader backup runs (LatestBackup.sql:2-10)
         self.engine.ops.backup_runs().selectExpr(
             "run_id", "start_time", "end_time",
@@ -543,7 +520,7 @@ class PdwSysCatalog:
         # databases / SLO / operation status / TDE
         # (slo_status.sql:4-15, transparent_data_encryption_status.sql:1-10)
         dbs = sorted(
-            {d.name for d in self.spark.catalog.listDatabases()}
+            set(schemas)
             | {self.engine.ops.database_name}
             | set(self.engine.ops._encrypted)
         )

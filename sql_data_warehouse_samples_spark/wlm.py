@@ -58,11 +58,13 @@ class AdmissionController:
         need = self.slots_for(resource_class)
         t0 = time.time()
         with self._cv:
-            while self._used + need > self.total_slots:
+            if self._used + need > self.total_slots:
+                # one Queued row per waiting request, not per wake-up
                 self._waits.append(
                     (request_id, resource_class, "Queued", 0.0, need)
                 )
-                self._cv.wait(timeout=5)
+                while self._used + need > self.total_slots:
+                    self._cv.wait(timeout=5)
             self._used += need
             self._waits.append(
                 (request_id, resource_class, "Granted", round(time.time() - t0, 3), need)

@@ -154,6 +154,49 @@ def test_wlm_slots_and_queueing():
     assert any(w[2] == "Queued" for w in waits)
 
 
+def test_wlm_one_queued_row_per_waiting_request():
+    """A waiter that wakes and still cannot be admitted stays one Queued
+    row: 4 slots, a mediumrc (3) and a smallrc (1) held, a second mediumrc
+    waits; the smallrc's release wakes it without room, the first
+    mediumrc's release admits it."""
+    import threading
+    import time
+
+    from sql_data_warehouse_samples_spark.wlm import AdmissionController
+
+    ac = AdmissionController(total_slots=4)
+    release = {"m1": threading.Event(), "s1": threading.Event()}
+
+    def hold(rid, rc):
+        with ac.admit(rid, rc):
+            release[rid].wait()
+
+    holders = [
+        threading.Thread(target=hold, args=("m1", "mediumrc")),
+        threading.Thread(target=hold, args=("s1", "smallrc")),
+    ]
+    for t in holders:
+        t.start()
+    while ac.slots_used() < 4:
+        time.sleep(0.01)
+    def wait_turn():
+        with ac.admit("m2", "mediumrc"):
+            pass
+
+    waiter = threading.Thread(target=wait_turn)
+    waiter.start()
+    time.sleep(0.2)
+    release["s1"].set()
+    time.sleep(0.2)
+    assert waiter.is_alive()
+    release["m1"].set()
+    waiter.join(timeout=10)
+    for t in holders:
+        t.join()
+    states = [w[2] for w in ac.waits_log() if w[0] == "m2"]
+    assert states == ["Queued", "Granted"]
+
+
 def test_memory_grant_formula():
     from sql_data_warehouse_samples_spark.wlm import memory_grant_mb
 
@@ -975,17 +1018,25 @@ def test_impacted_tables_report(engine, spark):
         "testfact.li_imp", li, round_robin_layout(), mode="overwrite"
     )
     try:
-        args = (engine.spark, engine.catalog, engine.meta, ["testfact.li_imp"])
-        kw = {"min_rows": 1000, "stats": engine.stats}
-        rep = impacted_tables(*args, **kw).collect()
+        def report():
+            return impacted_tables(
+                engine.spark,
+                engine.catalog,
+                engine.meta.partition_stats("testfact.li_imp"),
+                ["testfact.li_imp"],
+                min_rows=1000,
+                stats=engine.stats,
+            ).collect()
+
+        rep = report()
         assert len(rep) == 1 and rep[0].stat_info == "missing stats"
 
         engine.stats.create_statistics("testfact.li_imp")
-        assert impacted_tables(*args, **kw).collect() == []
+        assert report() == []
 
         # grow the table ~2x without re-analyzing -> outdated stats
         engine.catalog.insert_into("testfact.li_imp", li)
-        rep2 = impacted_tables(*args, **kw).collect()
+        rep2 = report()
         assert len(rep2) == 1 and rep2[0].stat_info == "outdated stats"
         assert rep2[0].cmp_row_count == 2 * rep2[0].ctl_row_count
     finally:

@@ -14,7 +14,8 @@ import pytest
 
 REF = "/root/reference/samples"
 
-pytestmark = pytest.mark.skipif(
+#: on every test that opens a reference file; the rest run without it
+needs_ref = pytest.mark.skipif(
     not os.path.isdir(REF), reason="reference checkout not present"
 )
 
@@ -81,6 +82,7 @@ SCRIPTS = [
 ]
 
 
+@needs_ref
 @pytest.mark.parametrize(
     "relpath,cols,min_rows", SCRIPTS, ids=[s[0].rsplit("/", 1)[1] for s in SCRIPTS]
 )
@@ -90,6 +92,7 @@ def test_reference_script_verbatim(sysengine, relpath, cols, min_rows):
     assert df.count() >= min_rows
 
 
+@needs_ref
 def test_impacted_tables_detectors_fire(sysengine):
     """ImpactedTables' detection CTEs produce findings when thresholds
     permit: a stats-free table reports the PDW 1000-row control-node
@@ -113,6 +116,7 @@ def test_impacted_tables_detectors_fire(sysengine):
         sysengine.register_monitoring_views(["sysfact.li"])
 
 
+@needs_ref
 def test_reference_slo_status_first_statement_verbatim(sysengine):
     """slo_status.sql's SELECT runs verbatim (its WHILE poll loop is
     procedural T-SQL — Engine.ops.wait_for_scale is that loop's API)."""
@@ -126,6 +130,7 @@ def test_reference_slo_status_first_statement_verbatim(sysengine):
     assert rows[0].ServiceObject.startswith("DW")
 
 
+@needs_ref
 def test_skew_detection_accounts_every_distribution(sysengine):
     """SkewDetection aggregates per-distribution reserved GB; the hash table
     was written with the 60-way layout so all 60 distributions report."""
@@ -134,6 +139,7 @@ def test_skew_detection_accounts_every_distribution(sysengine):
     assert all(r.Data_Size_GB > 0 for r in rows)
 
 
+@needs_ref
 def test_generate_rebuild_all_verbatim(sysengine):
     """samples/scripts/indexes/generate_rebuild_all.sql (the statement-
     generator the index-maintenance loop consumes) runs verbatim over the
@@ -156,6 +162,7 @@ def test_generate_rebuild_all_verbatim(sysengine):
 WWI = "/root/reference/samples/databases/wide-world-importers/tables"
 
 
+@needs_ref
 def test_wwi_schema_ddl_deploys_verbatim(spark, tmp_path_factory):
     """The entire Wide World Importers physical schema (15 CREATE TABLE
     scripts: bracketed space-named columns, NVARCHAR/DECIMAL/BIT/
@@ -231,6 +238,7 @@ MONITORING_DEPLOY = [
 ]
 
 
+@needs_ref
 def test_monitoring_solution_deploys_verbatim(sysengine):
     """The ENTIRE monitoring solution deploys byte-for-byte: the schema
     script, all 14 view-definition scripts (PRINT/GO batches included),
@@ -315,6 +323,7 @@ def test_sys_catalog_join_spine_consistency(sysengine):
     assert dangling == 0
 
 
+@needs_ref
 def test_sqlops_dashboard_manifest_runs_every_widget(sysengine):
     """samples/sqlops/package.json (the Azure Data Studio extension
     manifest) parsed from the reference and executed: every insight
