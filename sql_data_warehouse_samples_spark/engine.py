@@ -21,6 +21,7 @@ import itertools
 import os
 import threading
 import time
+from collections import deque
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
@@ -29,6 +30,7 @@ from pyspark.sql import types as T
 
 from .catalog import Catalog, TableLayout
 from .meta import Meta
+from .operators._frames import small_df, utc
 from .plans.steps import plan_steps
 from .wlm import AdmissionController
 
@@ -45,11 +47,18 @@ class RequestRecord:
     end_time: float | None = None
     total_elapsed_ms: int | None = None
     error_message: str | None = None
+    #: sys.dm_pdw_request_steps rows ``(step_index, operation_type, detail,
+    #: row_count)``; always replaced whole, never appended to
+    steps: list[tuple] = field(default_factory=list)
 
 
 #: request ids are also Spark job groups, so they are unique per process:
 #: two engines on one SparkContext must not claim each other's jobs
 _request_ids = itertools.count(1)
+
+#: requests (with their steps) an Engine keeps: sys.dm_pdw_exec_requests
+#: retains the last 10,000
+REQUEST_HISTORY = 10_000
 
 _REQUESTS_SCHEMA = T.StructType(
     [
@@ -62,6 +71,8 @@ _REQUESTS_SCHEMA = T.StructType(
         T.StructField("submit_time", T.TimestampType()),
         T.StructField("total_elapsed_ms", T.LongType()),
         T.StructField("error_message", T.StringType()),
+        # the DMV's own name for elapsed ms (vw_query_steps.sql:10)
+        T.StructField("total_elapsed_time", T.LongType()),
     ]
 )
 
@@ -87,8 +98,9 @@ class Engine:
         from .pdw_catalog import PdwSysCatalog
 
         self.pdw_sys = PdwSysCatalog(self)
-        self._requests: list[RequestRecord] = []
-        self._steps: list[tuple] = []  # (request_id, step_index, op, detail, row_count)
+        self._requests: deque[RequestRecord] = deque(maxlen=REQUEST_HISTORY)
+        # set once register_monitoring_views has created its SQL views
+        self._views_defined = False
         # sys.dm_pdw_exec_sessions parity: one session per Engine handle
         # (UserActivitiesDetails.sql:1-3); loads tracked for the
         # UserActivities "Loads" quadrant (UserActivities.sql:26-31)
@@ -133,11 +145,23 @@ class Engine:
             self._requests.append(rec)
         return rec
 
+    def _history(self) -> list[RequestRecord]:
+        with self._lock:
+            return list(self._requests)
+
     @contextmanager
     def _running(self, rec: RequestRecord, description: str):
         """Run a request's work under its own job group (the status store
         attributes its jobs to it, sys.dm_pdw_sql_requests); status and
-        elapsed time are recorded however the work ends."""
+        elapsed time are recorded however the work ends.
+
+        The job group is left set on exit, on purpose: ``sql`` returns a
+        lazy frame whose stages run in the caller's later action, and only
+        this group ties them to the request.  Restoring the previous group
+        would detach a report's own stages until one entry point holds the
+        request through the action; until then the thread's later jobs
+        (statistics, loads, a caller's unrelated actions) also count under
+        the last request."""
         rec.start_time = time.time()
         self.spark.sparkContext.setJobGroup(rec.request_id, description)
         try:
@@ -194,14 +218,13 @@ class Engine:
                 else:
                     hit = self.result_cache.lookup(key)
                     if hit is not None:
-                        self._steps.append(
-                            (rec.request_id, 0, "Return", "ResultCacheHit", None)
-                        )
+                        rec.steps = [(0, "Return", "ResultCacheHit", None)]
                         return hit
                     out = self.result_cache.store(key, df)
             # a miss's steps are the query's own, not the cached frame's
-            for i, (op, detail) in enumerate(plan_steps(df)):
-                self._steps.append((rec.request_id, i, op, detail, None))
+            rec.steps = [
+                (i, op, detail, None) for i, (op, detail) in enumerate(plan_steps(df))
+            ]
             return out
 
     def tsql(self, query: str, resource_class: str = "smallrc") -> DataFrame:
@@ -613,9 +636,7 @@ class Engine:
         if identity_col:
             layout.identity_column = identity_col
 
-        from .operators._frames import empty_df
-
-        empty = empty_df(self.spark, T.StructType(fields))
+        empty = small_df(self.spark, [], T.StructType(fields))
         self.create_table_as(table, empty, layout)
         return True
 
@@ -640,56 +661,47 @@ class Engine:
 
     def exec_requests(self) -> DataFrame:
         """sys.dm_pdw_exec_requests parity (vw_active_queries.sql:9)."""
-        import datetime as dt
-
-        rows = [
-            (
-                r.request_id,
-                self._session["session_id"],
-                r.command,
-                r.label,
-                r.resource_class,
-                r.status,
-                dt.datetime.fromtimestamp(r.submit_time),
-                r.total_elapsed_ms,
-                r.error_message,
-            )
-            for r in self._requests
-        ]
-        from pyspark.sql import functions as F
-
-        # the DMV's own name for elapsed ms (vw_query_steps.sql:10)
-        return self.spark.createDataFrame(rows, _REQUESTS_SCHEMA).withColumn(
-            "total_elapsed_time", F.col("total_elapsed_ms")
+        sid = self._session["session_id"]
+        return small_df(
+            self.spark,
+            [
+                (r.request_id, sid, r.command, r.label, r.resource_class,
+                 r.status, utc(r.submit_time), r.total_elapsed_ms,
+                 r.error_message, r.total_elapsed_ms)
+                for r in self._history()
+            ],
+            _REQUESTS_SCHEMA,
         )
 
     def finalize_request(self, request_id: str, df: DataFrame) -> None:
-        """Refresh a request's step rows with executed-plan metrics (the
+        """Replace a request's step rows with executed-plan metrics (the
         per-step row_count of sys.dm_pdw_request_steps) after the caller has
         materialized the DataFrame."""
         from .plans.steps import executed_steps_with_metrics
 
-        with self._lock:
-            self._steps = [s for s in self._steps if s[0] != request_id]
-            for i, (op, detail, rc) in enumerate(executed_steps_with_metrics(df)):
-                self._steps.append((request_id, i, op, detail, rc))
+        steps = [
+            (i, op, detail, rc)
+            for i, (op, detail, rc) in enumerate(executed_steps_with_metrics(df))
+        ]
+        for rec in reversed(self._history()):
+            if rec.request_id == request_id:
+                rec.steps = steps
+                return
 
     def request_steps(self) -> DataFrame:
         """sys.dm_pdw_request_steps parity (vw_query_steps.sql:14-19;
         location_type/status/total_elapsed_time are the columns
         vw_query_step_details.sql:15-19 projects)."""
-        from pyspark.sql import functions as F
-
-        return (
-            self.spark.createDataFrame(
-                self._steps or [("", -1, "", "", None)],
-                "request_id string, step_index int, operation_type string,"
-                " detail string, row_count long",
-            )
-            .filter("step_index >= 0")
-            .withColumn("location_type", F.lit("Compute"))
-            .withColumn("status", F.lit("Complete"))
-            .withColumn("total_elapsed_time", F.lit(None).cast("long"))
+        return small_df(
+            self.spark,
+            [
+                (r.request_id, i, op, detail, rc, "Compute", "Complete", None)
+                for r in self._history()
+                for i, op, detail, rc in r.steps
+            ],
+            "request_id string, step_index int, operation_type string,"
+            " detail string, row_count long, location_type string,"
+            " status string, total_elapsed_time long",
         )
 
     def task_requests(self) -> DataFrame:
@@ -705,9 +717,10 @@ class Engine:
         API (metrics.py); empty when the Spark UI is off."""
         from .metrics import request_stages
 
-        rows = request_stages(self.spark, [r.request_id for r in self._requests])
-        return self.spark.createDataFrame(
-            rows or [("", -1, -1, "", 0, 0, 0) + (0,) * 10],
+        rows = request_stages(self.spark, [r.request_id for r in self._history()])
+        return small_df(
+            self.spark,
+            rows,
             "request_id string, job_id int, stage_id int, stage_name string,"
             " num_tasks int, completed_tasks int, failed_tasks int,"
             " shuffle_read_bytes long, shuffle_read_rows long,"
@@ -715,7 +728,7 @@ class Engine:
             " memory_spill_bytes long, disk_spill_bytes long,"
             " peak_memory_bytes long, input_bytes long, output_bytes long,"
             " executor_run_ms long",
-        ).filter("job_id >= 0")
+        )
 
     def pdw_nodes(self) -> DataFrame:
         """sys.dm_pdw_nodes parity: one row per executor (compute node) plus
@@ -723,37 +736,16 @@ class Engine:
         status REST API (metrics.py)."""
         from .metrics import executor_metrics
 
-        rows = executor_metrics(self.spark)
-        cols = (
-            "node_id string, node_type string, host_port string,"
-            " is_active boolean, rdd_blocks long, memory_used_bytes long,"
-            " disk_used_bytes long, total_cores long, max_tasks long,"
-            " active_tasks long, completed_tasks long, failed_tasks long,"
-            " total_task_ms long, total_gc_ms long, input_bytes long,"
-            " shuffle_read_bytes long, shuffle_write_bytes long,"
-            " max_memory_bytes long"
-        )
-        names = [c.strip().split(" ")[0] for c in cols.split(",")]
-        data = [tuple(r[n] for n in names) for r in rows] or [
-            ("", "", "", False) + (0,) * 14
-        ]
-        return self.spark.createDataFrame(data, cols).filter("node_id != ''")
+        return _nodes_df(self.spark, executor_metrics(self.spark))
 
     def exec_sessions(self) -> DataFrame:
         """sys.dm_pdw_exec_sessions parity (UserActivitiesDetails.sql:1-3)."""
-        import datetime as dt
-
         s = self._session
-        return self.spark.createDataFrame(
+        return small_df(
+            self.spark,
             [
-                (
-                    s["session_id"],
-                    s["status"],
-                    s["login_name"],
-                    dt.datetime.fromtimestamp(s["login_time"]),
-                    s["app_name"],
-                    len(self._requests),
-                )
+                (s["session_id"], s["status"], s["login_name"],
+                 utc(s["login_time"]), s["app_name"], len(self._requests))
             ],
             "session_id string, status string, login_name string,"
             " login_time timestamp, app_name string, request_count int",
@@ -767,17 +759,18 @@ class Engine:
         Carries the reference's column names too (``type``,
         ``concurrency_slots_used`` — SlotUsage.sql:3-12) so the sqlops
         monitoring scripts run near-verbatim through the rewriter."""
-        rows = [
-            w + ("UserConcurrencyResourceType",) for w in self.wlm.waits_log()
-        ] or [("", "", "", 0.0, -1, "")]
-        df = self.spark.createDataFrame(
-            rows,
-            "request_id string, resource_class string, state string,"
-            " wait_sec double, slots int, type string",
-        ).filter("slots >= 0")
         from pyspark.sql import functions as F
 
-        return df.withColumn("concurrency_slots_used", F.col("slots")).withColumn(
+        return small_df(
+            self.spark,
+            [
+                w + ("UserConcurrencyResourceType", w[4])
+                for w in self.wlm.waits_log()
+            ],
+            "request_id string, resource_class string, state string,"
+            " wait_sec double, slots int, type string,"
+            " concurrency_slots_used int",
+        ).withColumn(
             # when the request entered the queue (queued_queries.sql:4
             # computes queued_sec as GETDATE() - request_time)
             "request_time",
@@ -786,291 +779,103 @@ class Engine:
 
     def register_monitoring_views(self, tables: list[str] | None = None) -> None:
         """Port of the solutions/monitoring view corpus (SURVEY §2.10):
-        registers the DMV surfaces + the derived views the reference ships.
+        registers the DMV surfaces, the derived views the reference ships
+        and the raw ``sys.*`` catalog (pdw_catalog.py); ``tables`` are the
+        tables whose files feed the storage views.
 
-        vw_active_queries (microsoft.vw_active_queries.sql:6-11),
-        vw_query_queue (microsoft.vw_query_queue.sql:8-16),
-        vw_query_slots (microsoft.vw_query_slots.sql:6-16), plus the
-        meta.* relations and size/skew views from meta.py.
+        Base relations are replaced on every call, each a local relation
+        of rows read on the driver, so a call runs no Spark job:
+
+        * engine state — meta_requests, meta_request_steps,
+          meta_resource_waits, meta_sessions, meta_load_runs,
+          meta_statistics, meta_role_members, meta_backup_runs,
+          meta_operation_status, vw_slo_status, vw_tde_status and the
+          external-object catalog (meta_external_tables,
+          meta_external_data_sources, meta_external_file_formats,
+          meta_credentials);
+        * the catalog walk and the parquet footers (meta.py) — meta_tables,
+          meta_columns, meta_partition_stats, meta_rowgroups, and
+          vw_impacted_tables from those rows and the statistics ledger;
+        * the status REST API (metrics.py) — meta_task_requests, meta_nodes;
+        * the ``pdw_sys_*`` relations ``PdwSysCatalog.register`` builds from
+          the ledgers: schemas, partitions, stats, dm_pdw_nodes and its
+          os_performance_counters, dm_pdw_waits, dm_pdw_dms_external_work,
+          dm_pdw_sql_requests, dm_pdw_nodes_exec_query_memory_grants,
+          database_principals, database_role_members, databases,
+          database_service_objectives.
+
+        Every other relation — ``meta.VIEWS`` (__table_sizes_detail,
+        vw_tables_with_skew), ``_VIEWS`` below (the other ``vw_*`` views and
+        meta_memory) and ``pdw_catalog.VIEWS`` (the other ``pdw_sys_*``
+        relations) — is SQL text over those names, created once per Engine
+        by the first call: a SQL temp view resolves the relations it names
+        each time it is read, while a DataFrame-backed one would keep the
+        relations it was built over.
         """
-        self.exec_requests().createOrReplaceTempView("meta_requests")
-        self.request_steps().createOrReplaceTempView("meta_request_steps")
-        self.resource_waits().createOrReplaceTempView("meta_resource_waits")
-        schemas = self.meta.register_views(tables)
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_active_queries AS
-            SELECT request_id, status, submit_time, total_elapsed_ms,
-                   resource_class, label, command
-            FROM meta_requests
-            WHERE status NOT IN ('Completed', 'Failed', 'Cancelled')
-            """
-        )
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_query_queue AS
-            SELECT request_id, resource_class, wait_sec AS queued_sec, slots
-            FROM meta_resource_waits
-            WHERE state = 'Queued'
-            """
-        )
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_query_slots AS
-            SELECT resource_class,
-                   SUM(CASE WHEN state = 'Granted' THEN slots ELSE 0 END) AS granted_slots,
-                   SUM(CASE WHEN state = 'Queued' THEN 1 ELSE 0 END) AS queued_requests
-            FROM meta_resource_waits
-            GROUP BY resource_class
-            """
-        )
-        # concurrency pivot (running_queued_queries_slots.sql:1-12)
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_running_queued_slots AS
-            SELECT
-              SUM(CASE WHEN state = 'Granted' THEN 1 ELSE 0 END) AS running_queries,
-              SUM(CASE WHEN state = 'Granted' THEN slots ELSE 0 END) AS running_queries_slots,
-              SUM(CASE WHEN state = 'Queued' THEN 1 ELSE 0 END) AS queued_queries,
-              SUM(CASE WHEN state = 'Queued' THEN slots ELSE 0 END) AS queued_queries_slots
-            FROM meta_resource_waits
-            """
-        )
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_query_steps AS
-            SELECT s.request_id, s.step_index, s.operation_type,
-                   s.row_count, s.detail
-            FROM meta_request_steps s
-            """
-        )
-        # per-"distribution" execution (sys.dm_pdw_sql_requests,
-        # vw_sql_requests.sql:8-22): our distribution = task; one row per
-        # executed stage with its task fan-out + DMS-analogue byte counters
-        # from the status REST API
-        self.task_requests().createOrReplaceTempView("meta_task_requests")
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_sql_requests AS
-            SELECT request_id, job_id, stage_id, stage_name,
-                   num_tasks, completed_tasks, failed_tasks,
-                   shuffle_read_bytes, shuffle_read_rows,
-                   shuffle_write_bytes, shuffle_write_rows,
-                   memory_spill_bytes, disk_spill_bytes, peak_memory_bytes,
-                   input_bytes, output_bytes, executor_run_ms
-            FROM meta_task_requests
-            """
-        )
-        # step details + the request's shuffle totals (the reference joins
-        # per-step DMS worker bytes/rows, microsoft.vw_query_step_details
-        # .sql:24-33; our steps are plan-level, so the stage counters roll
-        # up per request)
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_query_step_details AS
-            SELECT r.request_id, r.label, r.command, r.resource_class,
-                   r.total_elapsed_ms,
-                   s.step_index, s.operation_type, s.row_count, s.detail,
-                   COALESCE(t.shuffle_read_bytes, 0) AS shuffle_read_bytes,
-                   COALESCE(t.shuffle_read_rows, 0) AS shuffle_read_rows,
-                   COALESCE(t.shuffle_write_bytes, 0) AS shuffle_write_bytes,
-                   COALESCE(t.shuffle_write_rows, 0) AS shuffle_write_rows
-            FROM meta_requests r
-            JOIN meta_request_steps s ON r.request_id = s.request_id
-            LEFT JOIN (
-              SELECT request_id,
-                     SUM(shuffle_read_bytes) AS shuffle_read_bytes,
-                     SUM(shuffle_read_rows) AS shuffle_read_rows,
-                     SUM(shuffle_write_bytes) AS shuffle_write_bytes,
-                     SUM(shuffle_write_rows) AS shuffle_write_rows
-              FROM meta_task_requests GROUP BY request_id
-            ) t ON r.request_id = t.request_id
-            """
-        )
-        # memory/tempdb monitoring (query_memory_usage.sql:22-42,
-        # MemoryConsumption.sql:24-35, TempdbConsumption.sql:2-7): Spark's
-        # peak execution memory = the memory grant actually used; disk
-        # spill = tempdb consumption
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW meta_memory AS
-            SELECT request_id, job_id, stage_id,
-                   peak_memory_bytes, memory_spill_bytes, disk_spill_bytes
-            FROM meta_task_requests
-            """
-        )
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_memory_consumption AS
-            SELECT m.request_id, r.label, r.resource_class,
-                   MAX(m.peak_memory_bytes) AS peak_memory_bytes,
-                   ROUND(MAX(m.peak_memory_bytes) / 1024.0, 3) AS peak_memory_kb,
-                   SUM(m.memory_spill_bytes) AS memory_spill_bytes,
-                   SUM(m.disk_spill_bytes) AS disk_spill_bytes
-            FROM meta_memory m
-            JOIN meta_requests r ON m.request_id = r.request_id
-            GROUP BY m.request_id, r.label, r.resource_class
-            """
-        )
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_tempdb_usage AS
-            SELECT request_id,
-                   SUM(disk_spill_bytes) AS tempdb_bytes,
-                   ROUND(SUM(disk_spill_bytes) / 1e6, 3) AS tempdb_mb
-            FROM meta_memory
-            GROUP BY request_id
-            """
-        )
-        # node-level resource DMV (sys.dm_pdw_nodes)
-        self.pdw_nodes().createOrReplaceTempView("meta_nodes")
-        # external-object catalog (sys.external_* / database_credentials)
-        self.external.register_views()
-        # sessions + the four-quadrant activity monitor
-        # (UserActivities.sql:1-31: active sessions / active queries /
-        #  queued queries / running loads)
-        self.exec_sessions().createOrReplaceTempView("meta_sessions")
-        import datetime as dt
+        from .maintenance import IMPACTED_SCHEMA, impacted_rows
+        from .meta import VIEWS as META_VIEWS
+        from .metrics import executor_metrics
+        from .pdw_catalog import VIEWS as PDW_VIEWS
 
-        self.spark.createDataFrame(
-            [
-                (
-                    e["path"],
-                    e["table"],
-                    e["rows_loaded"],
-                    e["rows_rejected"],
-                    float(e["elapsed_sec"]),
-                )
-                for e in self._load_log
-            ]
-            or [("", "", -1, 0, 0.0)],
-            "path string, table string, rows_loaded long, rows_rejected long,"
-            " elapsed_sec double",
-        ).filter("rows_loaded >= 0").createOrReplaceTempView("meta_load_runs")
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_user_activities AS
-            SELECT
-              (SELECT COUNT(*) FROM meta_sessions
-               WHERE status <> 'Closed') AS Active_Sessions,
-              (SELECT COUNT(*) FROM meta_requests
-               WHERE status NOT IN ('Completed','Failed','Cancelled')) AS Active_Queries,
-              (SELECT COUNT(*) FROM meta_resource_waits
-               WHERE state = 'Queued') AS Queued_Queries,
-              (SELECT COUNT(*) FROM meta_load_runs) AS Loads
-            """
-        )
-        self._register_statistics_views()
-        # ops surfaces: backups, SLO/scale operations, TDE
-        # (LatestBackup.sql:2-10, slo_status.sql:1-31,
-        #  transparent_data_encryption_status.sql:1-9)
-        self.ops.backup_runs().createOrReplaceTempView("meta_backup_runs")
-        self.ops.latest_backup().createOrReplaceTempView("vw_latest_backup")
-        self.ops.slo_status().createOrReplaceTempView("vw_slo_status")
-        self.ops.operation_status().createOrReplaceTempView("meta_operation_status")
-        self.ops.tde_status(schemas).createOrReplaceTempView("vw_tde_status")
-        self.spark.createDataFrame(
-            self._role_members, "role_name string, member_name string"
-        ).createOrReplaceTempView("meta_role_members")
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_security_role_members AS
-            SELECT role_name, member_name FROM meta_role_members
-            """
-        )
-        if tables:
-            # full-fidelity per-distribution space accounting (microsoft.
-            # vw_table_sizes.sql:4-99): reserved/data/index/unused pages +
-            # KB/MB/GB/TB, node + distribution identity columns.  The
-            # reference's row_count / distribution_policy / index_type
-            # column names carry straight through, plus used_bytes and
-            # distribution_policy for engine-side convenience.
-            self.meta.table_sizes_detail().createOrReplaceTempView(
-                "__table_sizes_detail"
-            )
-            self.spark.sql(
-                """
-                CREATE OR REPLACE TEMP VIEW vw_table_sizes AS
-                SELECT d.*,
-                       d.reserved_space_page_count * 8192 AS used_bytes,
-                       d.distribution_policy_name AS distribution_policy
-                FROM __table_sizes_detail d
-                """
-            )
-            # the four space rollups the reference derives from vw_table_sizes
-            self.spark.sql(
-                """
-                CREATE OR REPLACE TEMP VIEW vw_table_space_summary AS
-                SELECT database_name, schema_name, table_name, two_part_name,
-                       distribution_policy_name, distribution_column,
-                       index_type_desc,
-                       COUNT(DISTINCT distribution_id) AS nbr_partitions,
-                       COUNT(*) AS nbr_files,
-                       SUM(row_count) AS table_row_count,
-                       SUM(row_count) AS row_count,
-                       SUM(reserved_space_GB) AS table_reserved_space_GB,
-                       SUM(data_space_GB) AS table_data_space_GB,
-                       SUM(index_space_GB) AS table_index_space_GB,
-                       SUM(unused_space_GB) AS table_unused_space_GB
-                FROM vw_table_sizes
-                GROUP BY 1, 2, 3, 4, 5, 6, 7
-                """
-            )
-            self.spark.sql(
-                """
-                CREATE OR REPLACE TEMP VIEW vw_table_space_by_distribution AS
-                SELECT schema_name, table_name, distribution_id,
-                       SUM(row_count) AS total_node_distribution_row_count,
-                       SUM(row_count) AS row_count,
-                       SUM(reserved_space_MB) AS total_node_distribution_reserved_space_MB,
-                       SUM(data_space_MB) AS total_node_distribution_data_space_MB,
-                       SUM(index_space_MB) AS total_node_distribution_index_space_MB,
-                       SUM(unused_space_MB) AS total_node_distribution_unused_space_MB
-                FROM vw_table_sizes
-                GROUP BY 1, 2, 3
-                """
-            )
-            self.spark.sql(
-                """
-                CREATE OR REPLACE TEMP VIEW vw_table_space_by_distribution_type AS
-                SELECT distribution_policy_name,
-                       COUNT(DISTINCT two_part_name) AS table_count,
-                       SUM(row_count) AS table_type_row_count,
-                       SUM(row_count) AS row_count,
-                       SUM(reserved_space_GB) AS table_type_reserved_space_GB,
-                       SUM(data_space_GB) AS table_type_data_space_GB,
-                       SUM(index_space_GB) AS table_type_index_space_GB,
-                       SUM(unused_space_GB) AS table_type_unused_space_GB
-                FROM vw_table_sizes GROUP BY 1
-                """
-            )
-            self.spark.sql(
-                """
-                CREATE OR REPLACE TEMP VIEW vw_table_space_by_index_type AS
-                SELECT index_type_desc,
-                       COUNT(DISTINCT two_part_name) AS table_count,
-                       SUM(row_count) AS table_type_row_count,
-                       SUM(row_count) AS row_count,
-                       SUM(reserved_space_GB) AS table_type_reserved_space_GB,
-                       SUM(data_space_GB) AS table_type_data_space_GB,
-                       SUM(index_space_GB) AS table_type_index_space_GB,
-                       SUM(unused_space_GB) AS table_type_unused_space_GB
-                FROM vw_table_sizes GROUP BY 1
-                """
-            )
-            self.meta.tables_with_skew().createOrReplaceTempView(
-                "vw_tables_with_skew"
-            )
+        schemas, table_rows, footers = self.meta._register(tables)
+        executors = executor_metrics(self.spark)
+        distribution = {r[2]: r[4] for r in table_rows}
+        base = {
+            "meta_requests": self.exec_requests(),
+            "meta_request_steps": self.request_steps(),
+            "meta_resource_waits": self.resource_waits(),
+            "meta_task_requests": self.task_requests(),
+            "meta_nodes": _nodes_df(self.spark, executors),
+            "meta_sessions": self.exec_sessions(),
+            # UserActivities.sql:26-31's "Loads" quadrant
+            "meta_load_runs": small_df(
+                self.spark,
+                [
+                    (e["path"], e["table"], e["rows_loaded"],
+                     e["rows_rejected"], float(e["elapsed_sec"]))
+                    for e in self._load_log
+                ],
+                "path string, table string, rows_loaded long,"
+                " rows_rejected long, elapsed_sec double",
+            ),
+            # one row per ANALYZE (microsoft.vw_statistics_age.sql:5-22)
+            "meta_statistics": small_df(
+                self.spark,
+                [
+                    (e["table"], ",".join(e["columns"]), utc(e["analyzed_at"]),
+                     e.get("mode", "default"), float(e.get("sample_pct", 100.0)))
+                    for e in self.stats._ledger
+                ],
+                "table_name string, stats_columns string,"
+                " analyzed_at timestamp, scan_mode string, sample_pct double",
+            ),
+            "meta_role_members": small_df(
+                self.spark, self._role_members, "role_name string, member_name string"
+            ),
+            # ops surfaces (LatestBackup.sql:2-10, slo_status.sql:1-31,
+            # transparent_data_encryption_status.sql:1-9)
+            "meta_backup_runs": self.ops.backup_runs(),
+            "meta_operation_status": self.ops.operation_status(),
+            "vw_slo_status": self.ops.slo_status(),
+            "vw_tde_status": self.ops.tde_status(schemas),
             # stats-drift + skew classification (sqlops ImpactedTables:1-56)
-            from .maintenance import impacted_tables
-
-            footers = self.spark.table("meta_partition_stats")
-            impacted_tables(
-                self.spark, self.catalog, footers, tables, stats=self.stats
-            ).createOrReplaceTempView("vw_impacted_tables")
-        # the raw sys.* PDW catalog (pdw_catalog.py) — what the sqlops
-        # scripts actually join — reshaped from the views above
-        self.pdw_sys.register(schemas)
+            "vw_impacted_tables": small_df(
+                self.spark,
+                impacted_rows(
+                    [(s, t, n) for s, t, _path, _dist, n, *_ in footers],
+                    tables or [], self.stats.last_analyzed_rows, distribution.get,
+                ),
+                IMPACTED_SCHEMA,
+            ),
+        }
+        for name, df in base.items():
+            df.createOrReplaceTempView(name)
+        self.external.register_views()
+        self.pdw_sys.register(schemas, table_rows, executors)
+        if not self._views_defined:
+            for name, sql in {**META_VIEWS, **_VIEWS, **PDW_VIEWS}.items():
+                self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} AS {sql}")
+            self._views_defined = True
         from pyspark.sql import types as T
 
         cur_db = self.spark.catalog.currentDatabase()
@@ -1080,37 +885,6 @@ class Engine:
             "DB_NAME",
             lambda dbid: "tempdb" if dbid == 2 else cur_db,
             T.StringType(),
-        )
-
-    def _register_statistics_views(self) -> None:
-        """meta_statistics + vw_statistics_age (microsoft.vw_statistics_age.
-        sql:5-22): one row per ANALYZE from the stats ledger."""
-        import datetime as dt
-
-        rows = [
-            (
-                e["table"],
-                ",".join(e["columns"]),
-                dt.datetime.fromtimestamp(e["analyzed_at"]),
-                e.get("mode", "default"),
-                float(e.get("sample_pct", 100.0)),
-            )
-            for e in self.stats._ledger
-        ] or [("", "", None, "", 0.0)]
-        self.spark.createDataFrame(
-            rows,
-            "table_name string, stats_columns string, analyzed_at timestamp,"
-            " scan_mode string, sample_pct double",
-        ).filter("table_name != ''").createOrReplaceTempView("meta_statistics")
-        self.spark.sql(
-            """
-            CREATE OR REPLACE TEMP VIEW vw_statistics_age AS
-            SELECT table_name,
-                   MAX(analyzed_at) AS last_analyzed,
-                   DATEDIFF(current_date(), MAX(analyzed_at)) AS age_days
-            FROM meta_statistics
-            GROUP BY table_name
-            """
         )
 
     def refresh_replicated_tables(self, schemas: list[str] | None = None) -> list[str]:
@@ -1143,17 +917,15 @@ class Engine:
 
     def replicated_state(self) -> DataFrame:
         """sys.pdw_replicated_table_cache_state parity."""
-        import datetime as dt
-
-        rows = [
-            (t, state, dt.datetime.fromtimestamp(ts), n)
-            for t, (state, ts, n) in self._replicated_state.items()
-        ] or [("", "", None, -1)]
-        return self.spark.createDataFrame(
-            rows,
+        return small_df(
+            self.spark,
+            [
+                (t, state, utc(ts), n)
+                for t, (state, ts, n) in self._replicated_state.items()
+            ],
             "table_name string, cache_state string, refreshed_at timestamp,"
             " row_count long",
-        ).filter("row_count >= 0")
+        )
 
     def set_role_members(self, role: str, members: list[str]) -> None:
         """Replace the member list of a role (static authz config)."""
@@ -1218,3 +990,197 @@ class Engine:
             "n_rows": n_rows,
             "verified": True,
         }
+
+
+_NODES_SCHEMA = (
+    "node_id string, node_type string, host_port string,"
+    " is_active boolean, rdd_blocks long, memory_used_bytes long,"
+    " disk_used_bytes long, total_cores long, max_tasks long,"
+    " active_tasks long, completed_tasks long, failed_tasks long,"
+    " total_task_ms long, total_gc_ms long, input_bytes long,"
+    " shuffle_read_bytes long, shuffle_write_bytes long,"
+    " max_memory_bytes long"
+)
+
+
+def _nodes_df(spark: SparkSession, executors: list[dict]) -> DataFrame:
+    """meta_nodes: ``metrics.executor_metrics`` rows as a local relation."""
+    names = [c.split()[0] for c in _NODES_SCHEMA.split(",")]
+    return small_df(
+        spark, [tuple(e[n] for n in names) for e in executors], _NODES_SCHEMA
+    )
+
+
+#: the monitoring views derived from the base relations, as SQL text
+#: (``Engine.register_monitoring_views`` creates them once, in this order)
+_VIEWS = {
+    # microsoft.vw_active_queries.sql:6-11
+    "vw_active_queries": """
+        SELECT request_id, status, submit_time, total_elapsed_ms,
+               resource_class, label, command
+        FROM meta_requests
+        WHERE status NOT IN ('Completed', 'Failed', 'Cancelled')""",
+    # microsoft.vw_query_queue.sql:8-16
+    "vw_query_queue": """
+        SELECT request_id, resource_class, wait_sec AS queued_sec, slots
+        FROM meta_resource_waits
+        WHERE state = 'Queued'""",
+    # microsoft.vw_query_slots.sql:6-16
+    "vw_query_slots": """
+        SELECT resource_class,
+               SUM(CASE WHEN state = 'Granted' THEN slots ELSE 0 END) AS granted_slots,
+               SUM(CASE WHEN state = 'Queued' THEN 1 ELSE 0 END) AS queued_requests
+        FROM meta_resource_waits
+        GROUP BY resource_class""",
+    # concurrency pivot (running_queued_queries_slots.sql:1-12)
+    "vw_running_queued_slots": """
+        SELECT
+          SUM(CASE WHEN state = 'Granted' THEN 1 ELSE 0 END) AS running_queries,
+          SUM(CASE WHEN state = 'Granted' THEN slots ELSE 0 END) AS running_queries_slots,
+          SUM(CASE WHEN state = 'Queued' THEN 1 ELSE 0 END) AS queued_queries,
+          SUM(CASE WHEN state = 'Queued' THEN slots ELSE 0 END) AS queued_queries_slots
+        FROM meta_resource_waits""",
+    "vw_query_steps": """
+        SELECT s.request_id, s.step_index, s.operation_type,
+               s.row_count, s.detail
+        FROM meta_request_steps s""",
+    # per-"distribution" execution (sys.dm_pdw_sql_requests,
+    # vw_sql_requests.sql:8-22): our distribution = task; one row per
+    # executed stage with its task fan-out + DMS-analogue byte counters
+    "vw_sql_requests": """
+        SELECT request_id, job_id, stage_id, stage_name,
+               num_tasks, completed_tasks, failed_tasks,
+               shuffle_read_bytes, shuffle_read_rows,
+               shuffle_write_bytes, shuffle_write_rows,
+               memory_spill_bytes, disk_spill_bytes, peak_memory_bytes,
+               input_bytes, output_bytes, executor_run_ms
+        FROM meta_task_requests""",
+    # step details + the request's shuffle totals (the reference joins
+    # per-step DMS worker bytes/rows, microsoft.vw_query_step_details
+    # .sql:24-33; our steps are plan-level, so the stage counters roll up
+    # per request)
+    "vw_query_step_details": """
+        SELECT r.request_id, r.label, r.command, r.resource_class,
+               r.total_elapsed_ms,
+               s.step_index, s.operation_type, s.row_count, s.detail,
+               COALESCE(t.shuffle_read_bytes, 0) AS shuffle_read_bytes,
+               COALESCE(t.shuffle_read_rows, 0) AS shuffle_read_rows,
+               COALESCE(t.shuffle_write_bytes, 0) AS shuffle_write_bytes,
+               COALESCE(t.shuffle_write_rows, 0) AS shuffle_write_rows
+        FROM meta_requests r
+        JOIN meta_request_steps s ON r.request_id = s.request_id
+        LEFT JOIN (
+          SELECT request_id,
+                 SUM(shuffle_read_bytes) AS shuffle_read_bytes,
+                 SUM(shuffle_read_rows) AS shuffle_read_rows,
+                 SUM(shuffle_write_bytes) AS shuffle_write_bytes,
+                 SUM(shuffle_write_rows) AS shuffle_write_rows
+          FROM meta_task_requests GROUP BY request_id
+        ) t ON r.request_id = t.request_id""",
+    # memory/tempdb monitoring (query_memory_usage.sql:22-42,
+    # MemoryConsumption.sql:24-35, TempdbConsumption.sql:2-7): Spark's peak
+    # execution memory = the memory grant actually used; disk spill =
+    # tempdb consumption
+    "meta_memory": """
+        SELECT request_id, job_id, stage_id,
+               peak_memory_bytes, memory_spill_bytes, disk_spill_bytes
+        FROM meta_task_requests""",
+    "vw_memory_consumption": """
+        SELECT m.request_id, r.label, r.resource_class,
+               MAX(m.peak_memory_bytes) AS peak_memory_bytes,
+               ROUND(MAX(m.peak_memory_bytes) / 1024.0, 3) AS peak_memory_kb,
+               SUM(m.memory_spill_bytes) AS memory_spill_bytes,
+               SUM(m.disk_spill_bytes) AS disk_spill_bytes
+        FROM meta_memory m
+        JOIN meta_requests r ON m.request_id = r.request_id
+        GROUP BY m.request_id, r.label, r.resource_class""",
+    "vw_tempdb_usage": """
+        SELECT request_id,
+               SUM(disk_spill_bytes) AS tempdb_bytes,
+               ROUND(SUM(disk_spill_bytes) / 1e6, 3) AS tempdb_mb
+        FROM meta_memory
+        GROUP BY request_id""",
+    # the four-quadrant activity monitor (UserActivities.sql:1-31: active
+    # sessions / active queries / queued queries / running loads)
+    "vw_user_activities": """
+        SELECT
+          (SELECT COUNT(*) FROM meta_sessions
+           WHERE status <> 'Closed') AS Active_Sessions,
+          (SELECT COUNT(*) FROM meta_requests
+           WHERE status NOT IN ('Completed','Failed','Cancelled')) AS Active_Queries,
+          (SELECT COUNT(*) FROM meta_resource_waits
+           WHERE state = 'Queued') AS Queued_Queries,
+          (SELECT COUNT(*) FROM meta_load_runs) AS Loads""",
+    # microsoft.vw_statistics_age.sql:5-22
+    "vw_statistics_age": """
+        SELECT table_name,
+               MAX(analyzed_at) AS last_analyzed,
+               DATEDIFF(current_date(), MAX(analyzed_at)) AS age_days
+        FROM meta_statistics
+        GROUP BY table_name""",
+    # LatestBackup.sql:2-10: TOP 1 by run_id DESC with duration
+    "vw_latest_backup": """
+        SELECT start_time, end_time, progress_percent,
+               CAST(CAST(end_time AS DOUBLE) - CAST(start_time AS DOUBLE)
+                    AS BIGINT) AS duration_seconds
+        FROM meta_backup_runs
+        ORDER BY run_id DESC LIMIT 1""",
+    # microsoft.vw_security_role_members.sql:10-12
+    "vw_security_role_members": """
+        SELECT role_name, member_name FROM meta_role_members""",
+    # full-fidelity per-distribution space accounting (microsoft.
+    # vw_table_sizes.sql:4-99) over meta.py's __table_sizes_detail: the
+    # reference's row_count / distribution_policy / index_type column names
+    # carry straight through, plus used_bytes and distribution_policy for
+    # engine-side convenience
+    "vw_table_sizes": """
+        SELECT d.*,
+               d.reserved_space_page_count * 8192 AS used_bytes,
+               d.distribution_policy_name AS distribution_policy
+        FROM __table_sizes_detail d""",
+    # the four space rollups the reference derives from vw_table_sizes
+    "vw_table_space_summary": """
+        SELECT database_name, schema_name, table_name, two_part_name,
+               distribution_policy_name, distribution_column,
+               index_type_desc,
+               COUNT(DISTINCT distribution_id) AS nbr_partitions,
+               COUNT(*) AS nbr_files,
+               SUM(row_count) AS table_row_count,
+               SUM(row_count) AS row_count,
+               SUM(reserved_space_GB) AS table_reserved_space_GB,
+               SUM(data_space_GB) AS table_data_space_GB,
+               SUM(index_space_GB) AS table_index_space_GB,
+               SUM(unused_space_GB) AS table_unused_space_GB
+        FROM vw_table_sizes
+        GROUP BY 1, 2, 3, 4, 5, 6, 7""",
+    "vw_table_space_by_distribution": """
+        SELECT schema_name, table_name, distribution_id,
+               SUM(row_count) AS total_node_distribution_row_count,
+               SUM(row_count) AS row_count,
+               SUM(reserved_space_MB) AS total_node_distribution_reserved_space_MB,
+               SUM(data_space_MB) AS total_node_distribution_data_space_MB,
+               SUM(index_space_MB) AS total_node_distribution_index_space_MB,
+               SUM(unused_space_MB) AS total_node_distribution_unused_space_MB
+        FROM vw_table_sizes
+        GROUP BY 1, 2, 3""",
+    "vw_table_space_by_distribution_type": """
+        SELECT distribution_policy_name,
+               COUNT(DISTINCT two_part_name) AS table_count,
+               SUM(row_count) AS table_type_row_count,
+               SUM(row_count) AS row_count,
+               SUM(reserved_space_GB) AS table_type_reserved_space_GB,
+               SUM(data_space_GB) AS table_type_data_space_GB,
+               SUM(index_space_GB) AS table_type_index_space_GB,
+               SUM(unused_space_GB) AS table_type_unused_space_GB
+        FROM vw_table_sizes GROUP BY 1""",
+    "vw_table_space_by_index_type": """
+        SELECT index_type_desc,
+               COUNT(DISTINCT two_part_name) AS table_count,
+               SUM(row_count) AS table_type_row_count,
+               SUM(row_count) AS row_count,
+               SUM(reserved_space_GB) AS table_type_reserved_space_GB,
+               SUM(data_space_GB) AS table_type_data_space_GB,
+               SUM(index_space_GB) AS table_type_index_space_GB,
+               SUM(unused_space_GB) AS table_type_unused_space_GB
+        FROM vw_table_sizes GROUP BY 1""",
+}

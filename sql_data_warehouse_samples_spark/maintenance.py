@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .catalog import Catalog
 from .meta import Meta
+from .operators._frames import small_df
 
 ROWGROUP_TARGET_ROWS = 1_048_576  # TableHealthCount.sql:15
 POOR_SEGMENT_THRESHOLD = 100_000  # TableHealthCount.sql:48
@@ -92,10 +93,10 @@ class StatisticsService:
             }
         else:
             cols = ", ".join(f"`{c}`" for c in columns)
+            # also records the table's row count and size: no second scan
             self.spark.sql(
                 f"ANALYZE TABLE {q} COMPUTE STATISTICS FOR COLUMNS {cols}"
             )
-            self.spark.sql(f"ANALYZE TABLE {q} COMPUTE STATISTICS")
             # record the analyzed row count — the control-node belief the
             # ImpactedTables drift check compares against (Spark drops the
             # catalog estimate on writes, the ledger keeps the last one)
@@ -237,6 +238,14 @@ def catalog_row_estimate(spark: SparkSession, table: str) -> int | None:
     return None
 
 
+#: vw_impacted_tables / ``impacted_tables`` columns
+IMPACTED_SCHEMA = (
+    "table string, distribution_type string, partitions int,"
+    " ctl_row_count long, cmp_row_count long, skew_percent double,"
+    " stat_info string, skew_info string"
+)
+
+
 def impacted_tables(
     spark: SparkSession,
     catalog: Catalog,
@@ -247,14 +256,44 @@ def impacted_tables(
     outdated_stats_pct: float = 20.0,
     stats: "StatisticsService | None" = None,
 ) -> DataFrame:
-    """ImpactedTables report (sqlops/MonitoringScripts/ImpactedTables:1-56):
-    tables whose optimizer statistics are missing or drifted from the actual
-    stored rows, or whose per-distribution layout is skewed.
+    """ImpactedTables report (sqlops/MonitoringScripts/ImpactedTables:1-56)
+    over ``partition_stats`` rows (``Meta.partition_stats`` or the
+    registered ``meta_partition_stats``) of ``tables``; see
+    ``impacted_rows``.  The control-node belief is the catalog statistics
+    estimate, else the ``stats`` ledger's last analyzed row count."""
 
-    * cmp_row_count — actual rows from parquet footers (compute-node truth):
-      ``partition_stats`` rows (``Meta.partition_stats`` or the registered
-      ``meta_partition_stats``) of ``tables``
-    * ctl_row_count — catalog statistics estimate (control-node belief)
+    def belief(t: str) -> int | None:
+        n = catalog_row_estimate(spark, t)
+        return n if n is not None or stats is None else stats.last_analyzed_rows(t)
+
+    footers = partition_stats.select("schema_name", "table_name", "row_count").collect()
+    return small_df(
+        spark,
+        impacted_rows(
+            footers, tables, belief, lambda t: catalog.get_layout(t).distribution,
+            min_rows, min_skew_percent, outdated_stats_pct,
+        ),
+        IMPACTED_SCHEMA,
+    )
+
+
+def impacted_rows(
+    footers,
+    tables: list[str],
+    belief,
+    distribution,
+    min_rows: int = 1_000_000,
+    min_skew_percent: float = 10.0,
+    outdated_stats_pct: float = 20.0,
+) -> list[tuple]:
+    """ImpactedTables rows: tables whose optimizer statistics are missing
+    or drifted from the actual stored rows, or whose per-distribution layout
+    is skewed.  ``footers`` are ``(schema_name, table_name, row_count)``
+    rows, one per file; ``belief(t)`` and ``distribution(t)`` give a
+    table's statistics row count (None: never analyzed) and distribution.
+
+    * cmp_row_count — actual rows from parquet footers (compute-node truth)
+    * ctl_row_count — statistics estimate (control-node belief)
     * stat_info     — 'missing stats' (never analyzed) or 'outdated stats'
       (|ctl−cmp|·100/cmp > ``outdated_stats_pct``)
     * skew_info     — 'data skew' when (max−min)·100/total ≥
@@ -262,29 +301,18 @@ def impacted_tables(
     Only tables with cmp_row_count > ``min_rows`` AND at least one finding
     are returned, like the reference's final filter.
     """
-    per_table = {
-        r["t"]: r
-        for r in partition_stats.groupBy(
-            F.concat_ws(".", "schema_name", "table_name").alias("t")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("partitions"),
-            F.sum("row_count").alias("cmp"),
-            F.min("row_count").alias("mn"),
-            F.max("row_count").alias("mx"),
-        )
-        .collect()
-    }
+    files: dict[str, list[int]] = {}
+    for schema_name, table_name, row_count in footers:
+        files.setdefault(f"{schema_name}.{table_name}", []).append(row_count)
     rows = []
     for t in tables:
-        ps = per_table.get(t, {"partitions": 0, "cmp": None, "mn": None, "mx": None})
-        cmp_rows = ps["cmp"] or 0
+        counts = files.get(t, [])
+        cmp_rows = sum(counts)
         skew_pct = (
-            round((ps["mx"] - ps["mn"]) * 100.0 / cmp_rows, 2) if cmp_rows else 0.0
+            round((max(counts) - min(counts)) * 100.0 / cmp_rows, 2)
+            if cmp_rows else 0.0
         )
-        ctl_rows = catalog_row_estimate(spark, t)
-        if ctl_rows is None and stats is not None:
-            ctl_rows = stats.last_analyzed_rows(t)
+        ctl_rows = belief(t)
         if ctl_rows is None:
             stat_info = "missing stats"
         elif cmp_rows and abs(ctl_rows - cmp_rows) * 100.0 / cmp_rows > outdated_stats_pct:
@@ -292,27 +320,12 @@ def impacted_tables(
         else:
             stat_info = None
         skew_info = "data skew" if skew_pct >= min_skew_percent else None
-        layout = catalog.get_layout(t)
         if cmp_rows > min_rows and (stat_info or skew_info):
             rows.append(
-                (
-                    t,
-                    layout.distribution,
-                    int(ps["partitions"]),
-                    int(ctl_rows) if ctl_rows is not None else None,
-                    int(cmp_rows),
-                    float(skew_pct),
-                    stat_info,
-                    skew_info,
-                )
+                (t, distribution(t), len(counts), ctl_rows, cmp_rows,
+                 float(skew_pct), stat_info, skew_info)
             )
-    return spark.createDataFrame(
-        rows
-        or [("", "", 0, None, -1, 0.0, None, None)],
-        "table string, distribution_type string, partitions int,"
-        " ctl_row_count long, cmp_row_count long, skew_percent double,"
-        " stat_info string, skew_info string",
-    ).filter("cmp_row_count >= 0")
+    return rows
 
 
 def health_report(spark: SparkSession, catalog: Catalog, meta: Meta, tables: list[str]) -> DataFrame:
@@ -338,7 +351,8 @@ def health_report(spark: SparkSession, catalog: Catalog, meta: Meta, tables: lis
                 bool(skew is not None and skew < (1 - SKEW_ALERT_RATIO) and h["total_rows"] > 0),
             )
         )
-    return spark.createDataFrame(
+    return small_df(
+        spark,
         rows,
         "table string, total_rows long, n_rowgroups long, avg_rows_per_rowgroup double,"
         " needs_rebuild boolean, min_max_ratio double, skew_flag boolean",

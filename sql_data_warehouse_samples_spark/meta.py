@@ -3,16 +3,21 @@
 The reference's largest query workload is its monitoring corpus over
 ``sys.*`` catalog views and ``sys.dm_pdw_*`` DMVs.  This module decides
 where catalog and storage facts come from; ``register_views`` reads each
-source once:
+source once and registers its rows as Arrow local relations
+(``operators/_frames.py``), so a registration runs no Spark job:
 
 | view                                  | source                             |
 |---------------------------------------|------------------------------------|
-| meta_tables / meta_columns            | one spark.catalog walk + layouts   |
+| meta_tables / meta_columns            | one catalog walk (SHOW DATABASES / |
+|                                       | TABLES / VIEWS, column listing)    |
+|                                       | + layouts                          |
 | meta_partition_stats / meta_rowgroups | one parquet footer read per file   |
 
-``pdw_catalog.py`` reshapes these views into the raw ``sys.*`` relations.
-Row-group metadata is read with pyarrow from the table's files — the exact
-analogue of the engine reading columnstore segment catalogs.
+``VIEWS`` holds the views over these relations (space detail, skew) as SQL
+text, and ``pdw_catalog.VIEWS`` reshapes them into the raw ``sys.*``
+relations; ``Engine.register_monitoring_views`` creates both once per
+Engine.  Row-group metadata is read with pyarrow from the table's files —
+the exact analogue of the engine reading columnstore segment catalogs.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .catalog import Catalog
+from .operators._frames import small_df
 
 _TABLES_SCHEMA = T.StructType(
     [
@@ -91,28 +97,33 @@ class Meta:
     # --- sys.schemas / sys.tables / sys.columns --------------------------
 
     def _walk(self) -> tuple[list[str], list[tuple], list[tuple]]:
-        """One pass over ``spark.catalog``: (database names, meta_tables
-        rows, meta_columns rows).  ``listTables`` repeats every temporary
+        """One pass over the session catalog: (database names, meta_tables
+        rows, meta_columns rows).  A table listing repeats every temporary
         view under each database; those are session objects, not tables of
         that schema, so they are skipped."""
+        jcat = self.spark.catalog._jcatalog
         schemas, tables, columns = [], [], []
-        for db in self.spark.catalog.listDatabases():
-            schemas.append(db.name)
-            for t in self.spark.catalog.listTables(db.name):
-                if t.isTemporary:
+        for (schema,) in self.spark.sql("SHOW DATABASES").collect():
+            schemas.append(schema)
+            views = {r[1] for r in self.spark.sql(f"SHOW VIEWS IN `{schema}`").collect()}
+            for _ns, name, temporary in self.spark.sql(
+                f"SHOW TABLES IN `{schema}`"
+            ).collect():
+                if temporary:
                     continue
+                is_view = name in views
                 layout = None
-                if t.tableType != "VIEW":
+                if not is_view:
                     try:
-                        layout = self.catalog.get_layout(f"{db.name}.{t.name}")
+                        layout = self.catalog.get_layout(f"{schema}.{name}")
                     except Exception:  # noqa: BLE001 — non-managed tables
                         layout = None
                 tables.append(
                     (
-                        db.name,
-                        t.name,
-                        f"{db.name}.{t.name}",
-                        t.tableType == "VIEW",
+                        schema,
+                        name,
+                        f"{schema}.{name}",
+                        is_view,
                         layout.distribution if layout else None,
                         layout.distribution_column if layout else None,
                         ",".join(layout.sort_columns) if layout else None,
@@ -120,30 +131,35 @@ class Meta:
                     )
                 )
                 try:
-                    cols = self.spark.catalog.listColumns(t.name, db.name)
+                    # PySpark's listColumns reads this local Dataset through
+                    # toLocalIterator, one Spark job per partition
+                    cols = jcat.listColumns(schema, name).collectAsList()
                 except Exception:  # noqa: BLE001 — unresolvable view
                     continue
                 for i, c in enumerate(cols):
-                    columns.append((db.name, t.name, c.name, i, c.dataType, c.nullable))
+                    columns.append(
+                        (schema, name, c.name(), i, c.dataType(), c.nullable())
+                    )
         return schemas, tables, columns
 
     def tables(self) -> DataFrame:
-        return self.spark.createDataFrame(self._walk()[1], _TABLES_SCHEMA)
+        return small_df(self.spark, self._walk()[1], _TABLES_SCHEMA)
 
     def columns(self) -> DataFrame:
-        return self.spark.createDataFrame(self._walk()[2], _COLUMNS_SCHEMA)
+        return small_df(self.spark, self._walk()[2], _COLUMNS_SCHEMA)
 
     # --- parquet footers: partition stats and row groups -----------------
 
     def _table_files(self, table: str) -> list[str]:
-        loc = (
-            self.spark.sql(f"DESCRIBE FORMATTED {Catalog._q(table)}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
+        # collected whole: a filter over the command's result runs a job
+        loc = [
+            r["data_type"]
+            for r in self.spark.sql(f"DESCRIBE FORMATTED {Catalog._q(table)}").collect()
+            if r["col_name"] == "Location"
+        ]
         if not loc:
             return []
-        path = loc[0]["data_type"].replace("file:", "")
+        path = loc[0].replace("file:", "")
         out = []
         for root, dirs, files in os.walk(path):
             # Spark's listing skips _/. children (an uncommitted generation)
@@ -215,17 +231,13 @@ class Meta:
     def partition_stats(self, table: str) -> DataFrame:
         """Per-file (≈ per-distribution) row counts and bytes from parquet
         footers — the skew-detection input (vw_tables_with_skew.sql:9-20)."""
-        return self.spark.createDataFrame(
-            self._footers([table])[0], _PARTITION_STATS_SCHEMA
-        )
+        return small_df(self.spark, self._footers([table])[0], _PARTITION_STATS_SCHEMA)
 
     def rowgroups(self, table: str) -> DataFrame:
         """Parquet row-group physical stats — CCI rowgroup health parity
         (RowgroupDetails.sql:1-24; rowgroup target 1,048,576 rows,
         TableHealthCount.sql:15); trim reasons as in ``_footers``."""
-        return self.spark.createDataFrame(
-            self._footers([table])[1], _ROWGROUPS_SCHEMA
-        )
+        return small_df(self.spark, self._footers([table])[1], _ROWGROUPS_SCHEMA)
 
     # --- monitoring views (the 14-view corpus, ported) -------------------
 
@@ -234,6 +246,14 @@ class Meta:
         meta_partition_stats / meta_rowgroups from one footer pass over
         ``tables`` (empty when no table is given, so no earlier table's
         rows survive).  Returns the database names the walk saw."""
+        return self._register(tables)[0]
+
+    def _register(
+        self, tables: list[str] | None
+    ) -> tuple[list[str], list[tuple], list[tuple]]:
+        """``register_views``, also handing back the meta_tables and
+        meta_partition_stats rows: (database names, table rows,
+        partition-stats rows)."""
         schemas, table_rows, column_rows = self._walk()
         stats, rowgroups = self._footers(tables or [])
         for rows, schema, name in [
@@ -242,8 +262,8 @@ class Meta:
             (stats, _PARTITION_STATS_SCHEMA, "meta_partition_stats"),
             (rowgroups, _ROWGROUPS_SCHEMA, "meta_rowgroups"),
         ]:
-            self.spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
-        return schemas
+            small_df(self.spark, rows, schema).createOrReplaceTempView(name)
+        return schemas, table_rows, stats
 
     def table_sizes(self) -> DataFrame:
         """Port of microsoft.vw_table_sizes (vw_table_sizes.sql:4-99):
@@ -282,82 +302,96 @@ class Meta:
         * node/distribution identity: single-node harness → pdw_node 0; one
           file = one distribution, like the 60-way PDW layout.
         """
-        return self.spark.sql(
-            """
-            WITH base AS (
-              SELECT
-                current_timestamp()                         AS execution_time,
-                t.schema_name                               AS database_name,
-                t.schema_name, t.table_name, t.two_part_name,
-                regexp_extract(p.file_path, '[^/]+$', 0)    AS node_table_name,
-                1                                           AS node_table_name_seq,
-                t.distribution_policy                       AS distribution_policy_name,
-                t.distribution_column,
-                p.distribution_id,
-                CASE t.index_type WHEN 'CCI' THEN 5
-                                  WHEN 'heap' THEN 0 ELSE 1 END AS index_type,
-                t.index_type                                AS index_type_desc,
-                0                                           AS pdw_node_id,
-                'COMPUTE'                                   AS pdw_node_type,
-                'localhost'                                 AS pdw_node_name,
-                concat('Distribution_', p.distribution_id + 1) AS dist_name,
-                p.distribution_id + 1                       AS dist_position,
-                1                                           AS partition_nmbr,
-                CAST(CEIL(p.used_bytes / 8192.0) AS BIGINT) AS reserved_space_page_count,
-                CAST(0 AS BIGINT)                           AS unused_space_page_count,
-                CAST(CEIL(p.data_bytes / 8192.0) AS BIGINT) AS data_space_page_count,
-                p.row_count
-              FROM meta_tables t
-              JOIN meta_partition_stats p
-                ON t.schema_name = p.schema_name AND t.table_name = p.table_name
-              WHERE NOT t.is_view
-            ),
-            pages AS (
-              SELECT *,
-                reserved_space_page_count - unused_space_page_count
-                  - data_space_page_count AS index_space_page_count
-              FROM base
-            )
-            SELECT *,
-              reserved_space_page_count * 8.0D      AS reserved_space_KB,
-              reserved_space_page_count * 8.0D / 1e3 AS reserved_space_MB,
-              reserved_space_page_count * 8.0D / 1e6 AS reserved_space_GB,
-              reserved_space_page_count * 8.0D / 1e9 AS reserved_space_TB,
-              unused_space_page_count * 8.0D        AS unused_space_KB,
-              unused_space_page_count * 8.0D / 1e3   AS unused_space_MB,
-              unused_space_page_count * 8.0D / 1e6   AS unused_space_GB,
-              unused_space_page_count * 8.0D / 1e9   AS unused_space_TB,
-              data_space_page_count * 8.0D          AS data_space_KB,
-              data_space_page_count * 8.0D / 1e3     AS data_space_MB,
-              data_space_page_count * 8.0D / 1e6     AS data_space_GB,
-              data_space_page_count * 8.0D / 1e9     AS data_space_TB,
-              index_space_page_count * 8.0D         AS index_space_KB,
-              index_space_page_count * 8.0D / 1e3    AS index_space_MB,
-              index_space_page_count * 8.0D / 1e6    AS index_space_GB,
-              index_space_page_count * 8.0D / 1e9    AS index_space_TB
-            FROM pages
-            """
-        )
+        return self.spark.sql(_TABLE_SIZES_DETAIL)
 
     def tables_with_skew(self, threshold: float = 0.10) -> DataFrame:
         """Port of microsoft.vw_tables_with_skew (vw_tables_with_skew.sql:
         9-20): hash tables whose min/max per-distribution row ratio < 0.10."""
-        return self.spark.sql(
-            f"""
-            SELECT two_part_name, min_rows, max_rows, total_rows, skew_ratio
-            FROM (
-              SELECT t.two_part_name,
-                     MIN(p.row_count) AS min_rows,
-                     MAX(p.row_count) AS max_rows,
-                     SUM(p.row_count) AS total_rows,
-                     MIN(p.row_count * 1.000) / NULLIF(MAX(p.row_count * 1.000), 0)
-                       AS skew_ratio
-              FROM meta_tables t
-              JOIN meta_partition_stats p
-                ON t.schema_name = p.schema_name AND t.table_name = p.table_name
-              WHERE t.distribution_policy = 'hash'
-              GROUP BY t.two_part_name
-            )
-            WHERE skew_ratio < {1 - threshold}
-            """
-        )
+        return self.spark.sql(_skew_sql(threshold))
+
+
+_TABLE_SIZES_DETAIL = """
+    WITH base AS (
+      SELECT
+        current_timestamp()                         AS execution_time,
+        t.schema_name                               AS database_name,
+        t.schema_name, t.table_name, t.two_part_name,
+        regexp_extract(p.file_path, '[^/]+$', 0)    AS node_table_name,
+        1                                           AS node_table_name_seq,
+        t.distribution_policy                       AS distribution_policy_name,
+        t.distribution_column,
+        p.distribution_id,
+        CASE t.index_type WHEN 'CCI' THEN 5
+                          WHEN 'heap' THEN 0 ELSE 1 END AS index_type,
+        t.index_type                                AS index_type_desc,
+        0                                           AS pdw_node_id,
+        'COMPUTE'                                   AS pdw_node_type,
+        'localhost'                                 AS pdw_node_name,
+        concat('Distribution_', p.distribution_id + 1) AS dist_name,
+        p.distribution_id + 1                       AS dist_position,
+        1                                           AS partition_nmbr,
+        CAST(CEIL(p.used_bytes / 8192.0) AS BIGINT) AS reserved_space_page_count,
+        CAST(0 AS BIGINT)                           AS unused_space_page_count,
+        CAST(CEIL(p.data_bytes / 8192.0) AS BIGINT) AS data_space_page_count,
+        p.row_count
+      FROM meta_tables t
+      JOIN meta_partition_stats p
+        ON t.schema_name = p.schema_name AND t.table_name = p.table_name
+      WHERE NOT t.is_view
+    ),
+    pages AS (
+      SELECT *,
+        reserved_space_page_count - unused_space_page_count
+          - data_space_page_count AS index_space_page_count
+      FROM base
+    )
+    -- one task: a row per file is driver-sized, and every rollup of these
+    -- doubles then sums a table's rows in one partial aggregate, so the
+    -- totals do not depend on how the plan splits its input
+    SELECT /*+ COALESCE(1) */ *,
+      reserved_space_page_count * 8.0D      AS reserved_space_KB,
+      reserved_space_page_count * 8.0D / 1e3 AS reserved_space_MB,
+      reserved_space_page_count * 8.0D / 1e6 AS reserved_space_GB,
+      reserved_space_page_count * 8.0D / 1e9 AS reserved_space_TB,
+      unused_space_page_count * 8.0D        AS unused_space_KB,
+      unused_space_page_count * 8.0D / 1e3   AS unused_space_MB,
+      unused_space_page_count * 8.0D / 1e6   AS unused_space_GB,
+      unused_space_page_count * 8.0D / 1e9   AS unused_space_TB,
+      data_space_page_count * 8.0D          AS data_space_KB,
+      data_space_page_count * 8.0D / 1e3     AS data_space_MB,
+      data_space_page_count * 8.0D / 1e6     AS data_space_GB,
+      data_space_page_count * 8.0D / 1e9     AS data_space_TB,
+      index_space_page_count * 8.0D         AS index_space_KB,
+      index_space_page_count * 8.0D / 1e3    AS index_space_MB,
+      index_space_page_count * 8.0D / 1e6    AS index_space_GB,
+      index_space_page_count * 8.0D / 1e9    AS index_space_TB
+    FROM pages
+"""
+
+
+def _skew_sql(threshold: float) -> str:
+    return f"""
+    SELECT two_part_name, min_rows, max_rows, total_rows, skew_ratio
+    FROM (
+      SELECT t.two_part_name,
+             MIN(p.row_count) AS min_rows,
+             MAX(p.row_count) AS max_rows,
+             SUM(p.row_count) AS total_rows,
+             MIN(p.row_count * 1.000) / NULLIF(MAX(p.row_count * 1.000), 0)
+               AS skew_ratio
+      FROM meta_tables t
+      JOIN meta_partition_stats p
+        ON t.schema_name = p.schema_name AND t.table_name = p.table_name
+      WHERE t.distribution_policy = 'hash'
+      GROUP BY t.two_part_name
+    )
+    WHERE skew_ratio < {1 - threshold}
+    """
+
+
+#: views over the meta_* relations, as SQL text (``Engine.
+#: register_monitoring_views`` creates them once, before its own)
+VIEWS = {
+    "__table_sizes_detail": _TABLE_SIZES_DETAIL,
+    "vw_tables_with_skew": _skew_sql(0.10),
+}

@@ -1,77 +1,56 @@
-"""Driver-sized literal DataFrames, Arrow-backed.
+"""Driver-held rows as Arrow-backed local relations.
 
-``spark.createDataFrame(<python list>)`` produces an RDD-backed plan:
-EVERY action on it (a tiny sidecar write, a broadcast collect) runs
-Python-worker tasks — measured ~4 s per 1-row parquet write on
+This is the package's one path from rows held in Python to a relation: the
+engine's DMVs and ledgers (``engine.py``, ``meta.py``, ``pdw_catalog.py``,
+``ops.py``, ``sources/external.py``, ``maintenance.impacted_tables``) and
+the operators' small literal frames (centroids, query terms, constants).
+
+``spark.createDataFrame(<python list>)`` produces an RDD-backed plan: the
+rows go through ``SparkContext.parallelize`` and EVERY action on the frame
+runs Python-worker tasks — measured ~4 s per 1-row parquet write on
 local[32] (r11, scripts-level probe; 32 parallelize slices each spin a
-worker, and the pool does not stay warm between sparse jobs).  Routing
-the same rows through a pandas DataFrame makes createDataFrame use the
-Arrow path — the data ships as JVM-side Arrow batches and every action
-runs pure-JVM: the identical write drops to ~0.15-0.3 s.
+worker, and the pool does not stay warm between sparse jobs).  An empty
+list is parallelized into ``defaultParallelism`` no-op slices, which also
+defeats Catalyst's ``PropagateEmptyRelation`` rule, so a join against a
+provably-empty ledger still plans and runs its full tree.
 
-Values are bit-identical either way (python float → float64 → Arrow
-double is exact; the schema string pins the Spark-side types), so
-oracle-compared results cannot move — only the job shape changes.
+Here the rows become a typed pyarrow table first, so ``createDataFrame``
+returns a ``LocalRelation``: building it runs no Spark job, every action
+on it runs pure-JVM, and an empty one is folded away at plan time.  Values
+keep their Python meaning (ints stay exact, ``NaN`` stays ``NaN``, ``None``
+is NULL); the schema string pins the Spark-side types.
 """
 
 from __future__ import annotations
 
-try:  # pragma: no cover - environment probe
-    import pandas as _pd
-    import pyarrow  # noqa: F401
+import datetime as dt
+import functools
 
-    _HAS_ARROW = True
-except Exception:  # pragma: no cover
-    _HAS_ARROW = False
-
-
-def small_df(spark, rows, schema: str, columns: list[str]):
-    """A literal DataFrame from driver-held ``rows`` (list of tuples),
-    Arrow-backed when the environment allows (see module docstring).
-    ``schema`` is the usual DDL string; ``columns`` names the tuple
-    positions for the pandas intermediate.  Empty ``rows`` route through
-    ``empty_df`` (pandas cannot carry the types of an empty frame, but a
-    typed pyarrow table can)."""
-    rows = list(rows)
-    if not rows:
-        from pyspark.sql.types import StructType
-
-        return empty_df(spark, StructType.fromDDL(schema))
-    if _HAS_ARROW:
-        return spark.createDataFrame(
-            _pd.DataFrame(rows, columns=columns), schema=schema
-        )
-    return spark.createDataFrame(rows, schema)
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
-def empty_df(spark, schema):
-    """An EMPTY DataFrame with ``schema`` (a StructType) as a zero-row
-    LocalRelation rather than an RDD-backed frame.
+def small_df(spark, rows, schema):
+    """A local relation holding ``rows`` (tuples in ``schema`` order, or an
+    empty iterable).  ``schema`` is a DDL string or a ``StructType``."""
+    if isinstance(schema, str):
+        schema = _parse(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
 
-    ``spark.createDataFrame([], schema)`` parallelizes an empty list into
-    ``defaultParallelism`` slices: every downstream action schedules that
-    many no-op tasks, and — far worse for multi-stage operators — the
-    frame defeats Catalyst's ``PropagateEmptyRelation`` rule, so a join
-    against a provably-empty ledger still plans (and runs) its full
-    banding/window/join tree.  The pyarrow path produces a 0-partition
-    LocalRelation the optimizer folds away at plan time: a first-ingest
-    near-dup check against an empty ledger becomes a no-op in the PLAN,
-    not 32 scheduled tasks per stage (r12 job-trace measurement).
-    Typed pyarrow arrays carry nested types (array<long> signatures)
-    that an empty pandas frame cannot."""
-    if _HAS_ARROW:
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
 
-            arrow_schema = to_arrow_schema(schema)
-            tab = pa.table(
-                {
-                    f.name: pa.array([], type=f.type)
-                    for f in arrow_schema
-                }
-            )
-            return spark.createDataFrame(tab, schema=schema)
-        except Exception:  # pragma: no cover - exotic types fall back
-            pass
-    return spark.createDataFrame([], schema)
+@functools.lru_cache(maxsize=None)
+def _parse(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)  # a JVM round trip, so parsed once
+
+
+def utc(epoch: float | None) -> dt.datetime | None:
+    """An epoch-seconds reading as an aware UTC datetime for a timestamp
+    column: the instant survives whatever the session or system time zone
+    is (a naive datetime would be read in the session zone)."""
+    return None if epoch is None else dt.datetime.fromtimestamp(epoch, dt.timezone.utc)

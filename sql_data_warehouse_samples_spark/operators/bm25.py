@@ -178,7 +178,6 @@ def _bm25_scores(
                 spark,
                 [(int(consts[0]), float(consts[1]))],
                 "n_docs: long, avgdl: double",
-                ["n_docs", "avgdl"],
             )
             if consts is not None
             else base.agg(
@@ -203,7 +202,7 @@ def _bm25_scores(
     else:
         toks = tokens(text_col)
         vocab_df = F.broadcast(
-            small_df(spark, [(t,) for t in vocab], "term: string", ["term"])
+            small_df(spark, [(t,) for t in vocab], "term: string")
         )
         tok_rows = docs.select(
             F.col(id_col), F.size(toks).alias("dl"), F.explode(toks).alias("term")
@@ -225,7 +224,6 @@ def _bm25_scores(
                 spark,
                 [(int(consts[0]), float(consts[1]))],
                 "n_docs: long, avgdl: double",
-                ["n_docs", "avgdl"],
             )
             if consts is not None
             else docs.select(F.size(toks).alias("dl")).agg(
@@ -312,7 +310,6 @@ def bm25_topk(
     spark = docs.sparkSession
     qterms = small_df(
         spark, [(0, t) for t in terms], "query_id: long, term: string",
-        ["query_id", "term"],
     )
     scored = _bm25_scores(
         docs, qterms, terms, id_col, text_col, k1, b,
@@ -379,7 +376,7 @@ def bm25_topk_batch(
             for t in query_terms(r[1] or "")
         ]
         qterms = small_df(
-            spark, pairs, "query_id: long, term: string", ["query_id", "term"]
+            spark, pairs, "query_id: long, term: string"
         )
         vocab = sorted({t for _, t in pairs})
     else:
@@ -892,7 +889,7 @@ class Bm25Index:
         ``vocab`` is already deduplicated, so no distinct exchange — the
         driver-side set() below folds hash collisions instead)."""
         vdf = small_df(
-            self.spark, [(t,) for t in vocab], "term: string", ["term"]
+            self.spark, [(t,) for t in vocab], "term: string"
         )
         rows = vdf.select(
             F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b")
@@ -937,7 +934,6 @@ class Bm25Index:
             ]
             qterms = small_df(
                 self.spark, pairs, "query_id: long, term: string",
-                ["query_id", "term"],
             )
             vocab = sorted({t for _, t in pairs})
         else:
@@ -962,7 +958,6 @@ class Bm25Index:
             vocab_df = F.broadcast(
                 small_df(
                     self.spark, [(t,) for t in vocab], "term: string",
-                    ["term"],
                 )
             )
             hits = pruned.join(vocab_df, "term")
@@ -970,7 +965,7 @@ class Bm25Index:
         dfreq = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
         consts_df = small_df(
             self.spark, [(self.n_docs, self.avgdl)],
-            "n_docs: long, avgdl: double", ["n_docs", "avgdl"],
+            "n_docs: long, avgdl: double",
         )
         scored = _score_hits(
             hits, qterms, dfreq, consts_df, k1, b, self.id_col
@@ -981,7 +976,6 @@ class Bm25Index:
         """Single-query convenience over ``topk_batch`` (drops query_id)."""
         q = small_df(
             self.spark, [(0, query)], "query_id: long, query: string",
-            ["query_id", "query"],
         )
         return (
             self.topk_batch(q, k=k, k1=k1, b=b)

@@ -209,7 +209,6 @@ def connected_components(
             e.sparkSession,
             sorted(comp.items()),
             f"{id_col}: {utype}, component: {utype}",
-            [id_col, "component"],
         )
     if labeled is None:
         # fixed point: every canonical edge is (root, child) with root =

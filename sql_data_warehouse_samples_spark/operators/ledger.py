@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ._frames import empty_df
+from ._frames import small_df
 
 LEDGER_SCHEMA = StructType(
     [
@@ -114,7 +114,7 @@ class ContentHashLedger:
 
         live = self._live()
         if not fs_exists(live, self.spark):  # nothing ingested yet
-            return empty_df(self.spark, LEDGER_SCHEMA)
+            return small_df(self.spark, [], LEDGER_SCHEMA)
         return (
             self.spark.read.schema(LEDGER_SCHEMA)
             .option("recursiveFileLookup", "true")
@@ -400,7 +400,7 @@ class MinHashSignatureLedger:
 
         live = self._live()
         if not fs_exists(live, self.spark):  # nothing ingested yet
-            return empty_df(self.spark, self._sig_schema())
+            return small_df(self.spark, [], self._sig_schema())
         return (
             self.spark.read.schema(self._sig_schema())
             .option("recursiveFileLookup", "true")

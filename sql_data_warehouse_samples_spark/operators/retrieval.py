@@ -210,7 +210,6 @@ def mine_hard_negatives(
         spark,
         [(int(query_id), query)],
         "query_id: long, query: string",
-        ["query_id", "query"],
     )
     pos_pairs = positives.select(
         F.lit(int(query_id)).cast("long").alias("query_id"),

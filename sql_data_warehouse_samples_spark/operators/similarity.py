@@ -310,7 +310,6 @@ def assign_centroids(
             spark,
             [(int(c), [float(x) for x in v]) for c, v in cent_list],
             "cid: long, vec: array<double>",
-            ["cid", "vec"],
         )
         .agg(F.sort_array(F.collect_list(F.struct("cid", "vec"))).alias("__cents"))
     )
@@ -480,7 +479,6 @@ def ivf_topk(
         corpus.sparkSession,
         [(cid, vec) for cid, vec in centroids],
         "centroid_id long, __cent array<double>",
-        ["centroid_id", "__cent"],
     )
 
     c = _spread(
@@ -1466,14 +1464,12 @@ def _write_quantizer(spark, lists_dir, centroids, books=None, params=None):
         spark,
         list(centroids),
         "centroid_id long, __cent array<double>",
-        ["centroid_id", "__cent"],
         ).coalesce(1).write.mode("overwrite").parquet(f"{q}/centroids")
     if books is not None:
         small_df(
             spark,
             [(j, c, v) for j, b in enumerate(books) for c, v in b],
             "j long, code long, vec array<double>",
-            ["j", "code", "vec"],
         ).coalesce(1).write.mode("overwrite").parquet(f"{q}/codebooks")
     if params is not None:
         residual, m, k_pq = params
@@ -1481,7 +1477,6 @@ def _write_quantizer(spark, lists_dir, centroids, books=None, params=None):
             spark,
             [(bool(residual), m, k_pq)],
             "residual boolean, m long, k_pq long",
-            ["residual", "m", "k_pq"],
         ).coalesce(1).write.mode("overwrite").parquet(f"{q}/params")
 
 
@@ -1679,7 +1674,6 @@ class IvfIndex:
             spark,
             list(self.centroids),
             "centroid_id long, __cent array<double>",
-            ["centroid_id", "__cent"],
             )
         q = queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
@@ -1841,7 +1835,6 @@ class IvfIndex:
             spark,
             list(self.centroids),
             "centroid_id long, __cent array<double>",
-            ["centroid_id", "__cent"],
             )
         d2 = F.round(l2sq(F.col("__cvec"), F.col("__cent")), 6)
         return (
@@ -2028,7 +2021,7 @@ def _ivf_lists_forget(
         f"{c} {'string' if c == '__bk' else 'long'}" for c in part_cols
     )
     touched_df = F.broadcast(
-        small_df(spark, touched, part_schema, part_cols)
+        small_df(spark, touched, part_schema)
     )
     cids = sorted({t[0] for t in touched})
     kept = (
@@ -2205,7 +2198,6 @@ class IvfPqIndex:
                 spark,
                 list(centroids),
                 "centroid_id long, __cent array<double>",
-                ["centroid_id", "__cent"],
                 )
             enc_src = assigned.join(F.broadcast(cents_df), "centroid_id").withColumn(
                 "__evec",
@@ -2311,7 +2303,6 @@ class IvfPqIndex:
             spark,
             list(self.centroids),
             "centroid_id long, __cent array<double>",
-            ["centroid_id", "__cent"],
             )
         qvec = F.col(vec_col)
 
@@ -2500,7 +2491,6 @@ class IvfPqIndex:
                 spark,
                 list(self.centroids),
                 "centroid_id long, __cent array<double>",
-                ["centroid_id", "__cent"],
                 )
             enc_src = assigned.join(
                 F.broadcast(cents_df), "centroid_id"
@@ -2650,7 +2640,6 @@ class IvfPqIndex:
                 spark,
                 list(new_cents),
                 "centroid_id long, __cent array<double>",
-                ["centroid_id", "__cent"],
                 )
             enc_src = assigned.join(
                 F.broadcast(cents_df), "centroid_id"

@@ -25,6 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog
+from .operators._frames import small_df, utc
 from .wlm import ScaleLadder
 
 
@@ -82,51 +83,24 @@ class OpsService:
         return run
 
     def backup_runs(self) -> DataFrame:
-        import datetime as dt
-
-        rows = [
-            (
-                r.run_id,
-                dt.datetime.fromtimestamp(r.start_time),
-                dt.datetime.fromtimestamp(r.end_time) if r.end_time else None,
-                r.progress,
-                r.status,
-                len(r.tables),
-                r.rows_backed_up,
-                r.dest,
-            )
-            for r in self._backup_runs
-        ] or [(-1, None, None, 0, "", 0, 0, "")]
-        return self.spark.createDataFrame(
-            rows,
+        return small_df(
+            self.spark,
+            [
+                (r.run_id, utc(r.start_time), utc(r.end_time), r.progress,
+                 r.status, len(r.tables), r.rows_backed_up, r.dest)
+                for r in self._backup_runs
+            ],
             "run_id int, start_time timestamp, end_time timestamp,"
             " progress_percent int, status string, n_tables int,"
             " rows_backed_up long, dest string",
-        ).filter("run_id >= 0")
-
-    def latest_backup(self) -> DataFrame:
-        """LatestBackup.sql:2-10: TOP 1 by run_id DESC with duration."""
-        from pyspark.sql import functions as F
-
-        return (
-            self.backup_runs()
-            .orderBy(F.desc("run_id"))
-            .limit(1)
-            .withColumn(
-                "duration_seconds",
-                (F.col("end_time").cast("double") - F.col("start_time").cast("double"))
-                .cast("long"),
-            )
-            .select(
-                "start_time", "end_time", "progress_percent", "duration_seconds"
-            )
         )
 
     # --- SLO / scale operations (slo_status.sql) -------------------------
 
     def slo_status(self) -> DataFrame:
         """sys.database_service_objectives parity: Name/Edition/ServiceObject."""
-        return self.spark.createDataFrame(
+        return small_df(
+            self.spark,
             [(self.database_name, "DataWarehouse", f"DW{self.ladder.current}c")],
             "Name string, Edition string, ServiceObject string",
         )
@@ -134,24 +108,15 @@ class OpsService:
     def operation_status(self) -> DataFrame:
         """sys.dm_operation_status parity over the scale ladder's history —
         the relation slo_status.sql:17-31 polls for IN_PROGRESS scales."""
-        import datetime as dt
-
-        rows = [
-            (
-                op,
-                "Database",
-                f"DW{frm}c -> DW{to}c",
-                dt.datetime.fromtimestamp(t0),
-                dt.datetime.fromtimestamp(t1),
-                state,
-            )
-            for (op, frm, to, t0, t1, state) in self.ladder.history
-        ] or [("", "", "", None, None, "")]
-        return self.spark.createDataFrame(
-            rows,
+        return small_df(
+            self.spark,
+            [
+                (op, "Database", f"DW{frm}c -> DW{to}c", utc(t0), utc(t1), state)
+                for (op, frm, to, t0, t1, state) in self.ladder.history
+            ],
             "operation string, resource_type_desc string, detail string,"
             " start_time timestamp, end_time timestamp, state_desc string",
-        ).filter("operation != ''")
+        )
 
     def wait_for_scale(self, poll_sec: float = 0.1, timeout_sec: float = 30.0) -> str:
         """The slo_status.sql WHILE loop: block until the latest ALTER
@@ -178,7 +143,7 @@ class OpsService:
             (name, "TRUE" if self._encrypted.get(name, False) else "FALSE")
             for name in dbs
         ]
-        return self.spark.createDataFrame(rows, "name string, Encrypted string")
+        return small_df(self.spark, rows, "name string, Encrypted string")
 
 
 # --- ADF management-operations pipeline (samples/adf/management-operations)

@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.tsql import tsql_type_to_spark
+from ..operators._frames import small_df
 from .csv_loader import ColumnSpec, CsvLoader, LoadOptions
 
 
@@ -357,54 +358,45 @@ class ExternalObjects:
         / database_credentials parity views (GenerateLoadScript-V1.sql:11-15,
         sp_create_statistics.sql:54 exclusion joins).  Secrets stay masked."""
         self.describe().createOrReplaceTempView("meta_external_tables")
-        ds_rows = [
-            (d.name, d.source_type, d.location, d.credential)
-            for d in self.data_sources.values()
-        ] or [("", "", "", None)]
-        self.spark.createDataFrame(
-            ds_rows,
-            "name string, source_type string, location string, credential string",
-        ).filter("name != ''").createOrReplaceTempView("meta_external_data_sources")
-        ff_rows = [
+        for name, rows, schema in [
             (
-                f.name,
-                f.format_type,
-                f.field_terminator,
-                f.string_delimiter,
-                f.date_format,
-                f.use_type_default,
-                f.compression,
-            )
-            for f in self.file_formats.values()
-        ] or [("", "", "", "", None, False, None)]
-        self.spark.createDataFrame(
-            ff_rows,
-            "name string, format_type string, field_terminator string,"
-            " string_delimiter string, date_format string,"
-            " use_type_default boolean, compression string",
-        ).filter("name != ''").createOrReplaceTempView("meta_external_file_formats")
-        cred_rows = [
-            (c.name, c.identity, c.has_secret) for c in self.credentials.values()
-        ] or [("", "", False)]
-        self.spark.createDataFrame(
-            cred_rows, "name string, identity string, has_secret boolean"
-        ).filter("name != ''").createOrReplaceTempView("meta_credentials")
+                "meta_external_data_sources",
+                [
+                    (d.name, d.source_type, d.location, d.credential)
+                    for d in self.data_sources.values()
+                ],
+                "name string, source_type string, location string,"
+                " credential string",
+            ),
+            (
+                "meta_external_file_formats",
+                [
+                    (f.name, f.format_type, f.field_terminator,
+                     f.string_delimiter, f.date_format, f.use_type_default,
+                     f.compression)
+                    for f in self.file_formats.values()
+                ],
+                "name string, format_type string, field_terminator string,"
+                " string_delimiter string, date_format string,"
+                " use_type_default boolean, compression string",
+            ),
+            (
+                "meta_credentials",
+                [(c.name, c.identity, c.has_secret) for c in self.credentials.values()],
+                "name string, identity string, has_secret boolean",
+            ),
+        ]:
+            small_df(self.spark, rows, schema).createOrReplaceTempView(name)
 
     def describe(self) -> DataFrame:
         """sys.external_tables-style listing (secrets never surfaced)."""
-        rows = [
-            (
-                t.name,
-                self.resolve_path(t),
-                t.data_source,
-                t.file_format,
-                t.reject_value,
-                len(t.columns),
-            )
-            for t in self.tables.values()
-        ] or [("", "", "", "", None, 0)]
-        return self.spark.createDataFrame(
-            rows,
+        return small_df(
+            self.spark,
+            [
+                (t.name, self.resolve_path(t), t.data_source, t.file_format,
+                 t.reject_value, len(t.columns))
+                for t in self.tables.values()
+            ],
             "table_name string, location string, data_source string,"
             " file_format string, reject_value int, n_columns int",
-        ).filter("table_name != ''")
+        )

@@ -1051,7 +1051,7 @@ def s12_hard_negatives(spark, sf_dir):
     # spread exchange would shuffle the whole vector payload to filter a
     # few dozen rows (r12 job-trace: a 0.6 s 32-task stage for 22 rows)
     e = tbl(spark, sf_dir, "embeddings", spread=False)
-    positives = small_df(spark, [(0,), (1,)], "doc_id: long", ["doc_id"])
+    positives = small_df(spark, [(0,), (1,)], "doc_id: long")
     return mine_hard_negatives(
         d,
         _S11_QUERY,
@@ -1156,10 +1156,10 @@ def s13_hard_negatives_batch(spark, sf_dir):
     # probe-only embeddings side: unspread (the s12 rationale)
     e = tbl(spark, sf_dir, "embeddings", spread=False)
     queries = small_df(
-        spark, _S13, "query_id: long, query: string", ["query_id", "query"]
+        spark, _S13, "query_id: long, query: string"
     )
     positives = small_df(
-        spark, _S13_POS, "query_id: long, doc_id: long", ["query_id", "doc_id"]
+        spark, _S13_POS, "query_id: long, doc_id: long"
     )
     return mine_hard_negatives_batch(
         d,

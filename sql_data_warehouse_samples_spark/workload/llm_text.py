@@ -958,7 +958,6 @@ def d22_admission_pipeline(spark, sf_dir):
             d.sparkSession,
             [(9000, periodic(3))],
             "doc_id: long, text: string",
-            ["doc_id", "text"],
         )
     )
     batch = (
@@ -975,7 +974,6 @@ def d22_admission_pipeline(spark, sf_dir):
                 d.sparkSession,
                 [(500000, periodic(2))],
                 "doc_id: long, text: string",
-                ["doc_id", "text"],
             )
         )
         .unionByName(
@@ -2475,7 +2473,6 @@ def t17_bpe_merges(spark, sf_dir):
         spark,
         [(i + 1, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "merge_rank int, left_sym string, right_sym string, pair_count long",
-        ["merge_rank", "left_sym", "right_sym", "pair_count"],
     )
 
 

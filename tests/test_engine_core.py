@@ -227,6 +227,35 @@ def test_statistics_service(engine):
     assert "testfact.lineitem_h" not in stats.stale_tables()
 
 
+def test_create_statistics_records_rows_and_size(engine, spark):
+    """The column ANALYZE alone records the table-level statistics: the
+    catalog's row count and size are the table's rows and the bytes of its
+    files, and the ledger keeps the same row count."""
+    from sql_data_warehouse_samples_spark.catalog import TableLayout
+
+    engine.create_table_as(
+        "testfact.stats_rows",
+        spark.range(1234).selectExpr("id", "id % 5 AS g"),
+        TableLayout(),
+        mode="overwrite",
+    )
+    try:
+        engine.stats.create_statistics("testfact.stats_rows", ["id", "g"])
+        size = sum(
+            os.path.getsize(f)
+            for f in engine.meta._table_files("testfact.stats_rows")
+        )
+        got = [
+            r.data_type
+            for r in spark.sql("DESCRIBE EXTENDED testfact.stats_rows").collect()
+            if r.col_name == "Statistics"
+        ]
+        assert got == [f"{size} bytes, 1234 rows"]
+        assert engine.stats.last_analyzed_rows("testfact.stats_rows") == 1234
+    finally:
+        engine.catalog.drop_table("testfact.stats_rows")
+
+
 def test_statistics_sample_mode(engine):
     """SAMPLE n PERCENT mode (sp_create_statistics.sql:66-85 create_type=3):
     approximate TABLESAMPLE stats, ledger records the mode."""
@@ -1966,7 +1995,7 @@ def test_tsql_dml_lands_in_request_log(engine, spark):
     )
     n_before = len(engine._requests)
     engine.tsql("DELETE FROM testfact.dml_log WHERE id = 1")
-    recs = engine._requests[n_before:]
+    recs = list(engine._requests)[n_before:]
     assert len(recs) == 1
     assert recs[0].status == "Completed"
     assert "DELETE FROM testfact.dml_log" in recs[0].command

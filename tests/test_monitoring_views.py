@@ -5,9 +5,12 @@ status REST API."""
 
 from __future__ import annotations
 
+import collections
 import decimal
 import json
 import os
+import re
+import threading
 
 import pytest
 from pyspark.sql import types as T
@@ -194,11 +197,11 @@ def test_registration_reads_each_source_once(moneng, monkeypatch):
     /jobs, /stages and /executors, no status-tracker call, one listing of
     each monitored table's files and one footer read per file, and at most
     one catalog listing per database."""
-    import collections
     import urllib.request
 
     import pyarrow.parquet as pq
     from pyspark import SparkContext
+    from pyspark.sql import SparkSession
     from pyspark.sql.catalog import Catalog as SparkCatalog
 
     from sql_data_warehouse_samples_spark.meta import Meta
@@ -224,6 +227,8 @@ def test_registration_reads_each_source_once(moneng, monkeypatch):
     spy(SparkCatalog, "listDatabases", lambda *a, **kw: ("listDatabases",))
     spy(SparkCatalog, "listTables",
         lambda self, db=None, *a, **kw: ("listTables", db))
+    spy(SparkSession, "sql",
+        lambda self, q, *a, **kw: tuple(re.findall(r"^SHOW \w+|`[^`]*`", q)) or ("sql",))
 
     moneng.register_monitoring_views(TABLES)
 
@@ -236,8 +241,10 @@ def test_registration_reads_each_source_once(moneng, monkeypatch):
     footers = {k[1]: n for k, n in calls.items() if k[0] == "footer"}
     files = {r.file_path for r in moneng.spark.table("meta_partition_stats").collect()}
     assert set(footers) == files and set(footers.values()) == {1}
-    assert calls[("listDatabases",)] <= 1
+    assert calls[("listDatabases",)] + calls[("SHOW DATABASES",)] <= 1
     assert all(n == 1 for k, n in calls.items() if k[0] == "listTables")
+    listings = {k: n for k, n in calls.items() if k[0] in ("SHOW TABLES", "SHOW VIEWS")}
+    assert listings and set(listings.values()) == {1}
 
 
 def test_task_requests_match_status_tracker(moneng):
@@ -282,3 +289,141 @@ def test_request_ids_unique_across_engines(spark):
         stages.append({r.stage_id for r in eng.task_requests().collect()})
     assert stages[0] and stages[1]
     assert not stages[0] & stages[1]
+
+
+def test_warm_registration_replaces_only_base_relations(moneng, monkeypatch):
+    """After the first registration a registration builds no frame through
+    ``parallelize``, runs no Spark job and creates no view: it replaces the
+    base relations the views defined once read."""
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    moneng.sql(f"SELECT MIN(v) AS m FROM {SCHEMA}.fact").collect()
+    calls = collections.Counter()
+    parallelize, sql = SparkContext.parallelize, SparkSession.sql
+
+    def counted_parallelize(self, *a, **kw):
+        calls["parallelize"] += 1
+        return parallelize(self, *a, **kw)
+
+    def counted_sql(self, query, *a, **kw):
+        calls["create_view"] += bool(re.match(r"(?is)\s*CREATE\b.*?\bVIEW\b", query))
+        return sql(self, query, *a, **kw)
+
+    monkeypatch.setattr(SparkContext, "parallelize", counted_parallelize)
+    monkeypatch.setattr(SparkSession, "sql", counted_sql)
+    sc = moneng.spark.sparkContext
+    sc.setJobGroup("warm-registration", "warm registration")
+    try:
+        moneng.register_monitoring_views(TABLES)
+        jobs = list(sc.statusTracker().getJobIdsForGroup("warm-registration"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert calls["parallelize"] == 0 and calls["create_view"] == 0
+    assert jobs == []
+
+
+def test_views_read_the_latest_registration(moneng, tmp_path):
+    """A request, a statistics run and a load made after a registration
+    show up in the views (defined once, as SQL text) after the next one."""
+    from sql_data_warehouse_samples_spark.pdw_catalog import object_id
+    from sql_data_warehouse_samples_spark.sources.csv_loader import (
+        ColumnSpec,
+        LoadOptions,
+    )
+
+    s = moneng.spark
+    loads = s.table("vw_user_activities").first().Loads
+    moneng.sql(
+        f"SELECT grp, COUNT(*) AS n FROM {SCHEMA}.dim GROUP BY grp", label="later"
+    ).collect()
+    rid = moneng._requests[-1].request_id
+    moneng.stats.create_statistics(f"{SCHEMA}.dim", ["name"])
+    csv = tmp_path / "rows.csv"
+    csv.write_text("1,a\n2,b\n")
+    moneng.load_csv(
+        str(csv), f"{SCHEMA}.loaded",
+        [ColumnSpec("id", "bigint"), ColumnSpec("s", "string")], LoadOptions(),
+    )
+
+    def steps():
+        return s.sql(
+            f"SELECT * FROM vw_query_step_details WHERE request_id = '{rid}'"
+        ).count()
+
+    assert steps() == 0
+    moneng.register_monitoring_views(TABLES)
+    assert steps() == len(moneng._requests[-1].steps) > 0
+    assert s.sql(
+        f"SELECT * FROM pdw_sys_dm_pdw_sql_requests WHERE request_id = '{rid}'"
+    ).count() == 1
+    dim = object_id(f"{SCHEMA}.dim")
+    assert [
+        r.name
+        for r in s.sql(f"SELECT name FROM pdw_sys_stats WHERE object_id = {dim}").collect()
+    ] == ["stat_name"]
+    assert s.table("vw_user_activities").first().Loads == loads + 1
+
+
+def test_exec_requests_submit_time_is_the_request_instant(moneng):
+    """The DMV's submit_time is the instant the request was submitted,
+    whatever the session and system time zones."""
+    got = {
+        r.request_id: r.t
+        for r in moneng.exec_requests()
+        .selectExpr("request_id", "CAST(submit_time AS DOUBLE) AS t")
+        .collect()
+    }
+    recs = list(moneng._requests)
+    assert recs and set(got) == {r.request_id for r in recs}
+    for r in recs:
+        assert abs(got[r.request_id] - r.submit_time) < 1e-3
+
+
+def test_concurrent_requests_keep_their_steps(spark):
+    """Four threads submitting requests while a fifth finalizes an earlier
+    one: no request loses its step rows."""
+    from sql_data_warehouse_samples_spark.engine import Engine
+
+    eng = Engine(spark)
+    done = eng.sql("SELECT id % 3 AS k, COUNT(*) AS n FROM range(100) GROUP BY id % 3")
+    done.collect()
+    first = eng._requests[-1].request_id
+    stop = threading.Event()
+
+    def submit(t):
+        for i in range(8):
+            eng.sql(f"SELECT id, {t} AS t FROM range({i + 2}) WHERE id > 0")
+
+    def finalize():
+        while not stop.is_set():
+            eng.finalize_request(first, done)
+
+    finalizer = threading.Thread(target=finalize)
+    submitters = [threading.Thread(target=submit, args=(t,)) for t in range(4)]
+    finalizer.start()
+    for t in submitters:
+        t.start()
+    for t in submitters:
+        t.join()
+    stop.set()
+    finalizer.join()
+    rows = collections.Counter(r.request_id for r in eng.request_steps().collect())
+    assert len(eng._requests) == 33
+    for r in eng._requests:
+        assert rows[r.request_id] == len(r.steps) > 0, r.request_id
+
+
+def test_request_history_is_bounded(spark, monkeypatch):
+    """The request log keeps the newest requests only, and their steps go
+    with them."""
+    from sql_data_warehouse_samples_spark import engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "REQUEST_HISTORY", 3)
+    eng = engine_mod.Engine(spark)
+    for i in range(5):
+        eng.sql(f"SELECT {i} AS x", label=f"q{i}")
+    kept = {r.request_id for r in eng._requests}
+    assert {r.label for r in eng.exec_requests().collect()} == {"q2", "q3", "q4"}
+    assert {r.request_id for r in eng.exec_requests().collect()} == kept
+    assert {r.request_id for r in eng.request_steps().collect()} == kept

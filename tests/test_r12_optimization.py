@@ -111,7 +111,7 @@ def test_bm25_index_local_vocab_matches_distributed(spark, tmp_path):
     idx = Bm25Index.build(d, str(tmp_path / "idx"), n_buckets=8)
     qrows = [(0, "spark hash join window"), (1, "  quality   filter ")]
     schema = "query_id: long, query: string"
-    q_local = small_df(spark, qrows, schema, ["query_id", "query"])
+    q_local = small_df(spark, qrows, schema)
     assert q_local.isLocal()
     qp = str(tmp_path / "queries.parquet")
     q_local.write.parquet(qp)
