@@ -99,6 +99,8 @@ class Engine:
 
         self.pdw_sys = PdwSysCatalog(self)
         self._requests: deque[RequestRecord] = deque(maxlen=REQUEST_HISTORY)
+        # requests submitted over the session, past the history's cap too
+        self._request_count = 0
         # set once register_monitoring_views has created its SQL views
         self._views_defined = False
         # sys.dm_pdw_exec_sessions parity: one session per Engine handle
@@ -143,6 +145,7 @@ class Engine:
                 resource_class=resource_class,
             )
             self._requests.append(rec)
+            self._request_count += 1
         return rec
 
     def _history(self) -> list[RequestRecord]:
@@ -745,7 +748,7 @@ class Engine:
             self.spark,
             [
                 (s["session_id"], s["status"], s["login_name"],
-                 utc(s["login_time"]), s["app_name"], len(self._requests))
+                 utc(s["login_time"]), s["app_name"], self._request_count)
             ],
             "session_id string, status string, login_name string,"
             " login_time timestamp, app_name string, request_count int",
@@ -819,6 +822,7 @@ class Engine:
 
         schemas, table_rows, footers = self.meta._register(tables)
         executors = executor_metrics(self.spark)
+        # the walk's names are lower case; ``tables`` may not be
         distribution = {r[2]: r[4] for r in table_rows}
         base = {
             "meta_requests": self.exec_requests(),
@@ -863,7 +867,8 @@ class Engine:
                 self.spark,
                 impacted_rows(
                     [(s, t, n) for s, t, _path, _dist, n, *_ in footers],
-                    tables or [], self.stats.last_analyzed_rows, distribution.get,
+                    tables or [], self.stats.last_analyzed_rows,
+                    lambda t: distribution.get(t.lower()),
                 ),
                 IMPACTED_SCHEMA,
             ),

@@ -104,8 +104,11 @@ class StatisticsService:
         self._ledger.append(entry)
 
     def last_analyzed_rows(self, table: str) -> int | None:
+        """The row count the last ANALYZE of ``table`` recorded (names
+        match case-insensitively, like the catalog's); None if never."""
+        table = table.lower()
         for e in reversed(self._ledger):
-            if e["table"] == table and e.get("row_count") is not None:
+            if e["table"].lower() == table and e.get("row_count") is not None:
                 return e["row_count"]
         return None
 
@@ -224,9 +227,8 @@ class CompactionService:
 
 
 def catalog_row_estimate(spark: SparkSession, table: str) -> int | None:
-    """Optimizer row estimate from catalog statistics (the control-node
-    count the reference's ImpactedTables calls ctl_row_count) — None when
-    the table was never ANALYZEd."""
+    """Optimizer row estimate from catalog statistics — None when the
+    table was never ANALYZEd, or was written since (Spark drops it)."""
     import re
 
     rows = spark.sql(f"DESCRIBE EXTENDED {Catalog._q(table)}").collect()
@@ -238,43 +240,12 @@ def catalog_row_estimate(spark: SparkSession, table: str) -> int | None:
     return None
 
 
-#: vw_impacted_tables / ``impacted_tables`` columns
+#: vw_impacted_tables columns
 IMPACTED_SCHEMA = (
     "table string, distribution_type string, partitions int,"
     " ctl_row_count long, cmp_row_count long, skew_percent double,"
     " stat_info string, skew_info string"
 )
-
-
-def impacted_tables(
-    spark: SparkSession,
-    catalog: Catalog,
-    partition_stats: DataFrame,
-    tables: list[str],
-    min_rows: int = 1_000_000,
-    min_skew_percent: float = 10.0,
-    outdated_stats_pct: float = 20.0,
-    stats: "StatisticsService | None" = None,
-) -> DataFrame:
-    """ImpactedTables report (sqlops/MonitoringScripts/ImpactedTables:1-56)
-    over ``partition_stats`` rows (``Meta.partition_stats`` or the
-    registered ``meta_partition_stats``) of ``tables``; see
-    ``impacted_rows``.  The control-node belief is the catalog statistics
-    estimate, else the ``stats`` ledger's last analyzed row count."""
-
-    def belief(t: str) -> int | None:
-        n = catalog_row_estimate(spark, t)
-        return n if n is not None or stats is None else stats.last_analyzed_rows(t)
-
-    footers = partition_stats.select("schema_name", "table_name", "row_count").collect()
-    return small_df(
-        spark,
-        impacted_rows(
-            footers, tables, belief, lambda t: catalog.get_layout(t).distribution,
-            min_rows, min_skew_percent, outdated_stats_pct,
-        ),
-        IMPACTED_SCHEMA,
-    )
 
 
 def impacted_rows(
@@ -293,7 +264,8 @@ def impacted_rows(
     table's statistics row count (None: never analyzed) and distribution.
 
     * cmp_row_count — actual rows from parquet footers (compute-node truth)
-    * ctl_row_count — statistics estimate (control-node belief)
+    * ctl_row_count — ``belief(t)``: the statistics ledger's row count
+      (control-node belief, ``StatisticsService.last_analyzed_rows``)
     * stat_info     — 'missing stats' (never analyzed) or 'outdated stats'
       (|ctl−cmp|·100/cmp > ``outdated_stats_pct``)
     * skew_info     — 'data skew' when (max−min)·100/total ≥

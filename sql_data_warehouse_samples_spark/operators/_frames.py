@@ -2,8 +2,8 @@
 
 This is the package's one path from rows held in Python to a relation: the
 engine's DMVs and ledgers (``engine.py``, ``meta.py``, ``pdw_catalog.py``,
-``ops.py``, ``sources/external.py``, ``maintenance.impacted_tables``) and
-the operators' small literal frames (centroids, query terms, constants).
+``ops.py``, ``sources/external.py``) and the operators' small literal
+frames (centroids, query terms, constants).
 
 ``spark.createDataFrame(<python list>)`` produces an RDD-backed plan: the
 rows go through ``SparkContext.parallelize`` and EVERY action on the frame
@@ -33,10 +33,17 @@ from pyspark.sql.types import StructType
 
 def small_df(spark, rows, schema):
     """A local relation holding ``rows`` (tuples in ``schema`` order, or an
-    empty iterable).  ``schema`` is a DDL string or a ``StructType``."""
+    empty iterable).  ``schema`` is a DDL string or a ``StructType``; a row
+    whose width is not the schema's raises ``ValueError``."""
     if isinstance(schema, str):
         schema = _parse(schema)
     arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    widths = {len(r) for r in rows} - {len(arrow)}
+    if widths:
+        raise ValueError(
+            f"rows of {sorted(widths)} fields for a {len(arrow)}-field schema"
+        )
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.table(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow

@@ -1036,26 +1036,29 @@ def test_view_scripting(engine, spark):
         engine.catalog.drop_schema("viewscript", cascade=True)
 
 
-def test_impacted_tables_report(engine, spark):
-    """ImpactedTables parity: missing stats -> analyzed-healthy ->
-    outdated stats after unanalyzed growth; skew classification."""
-    from sql_data_warehouse_samples_spark.catalog import round_robin_layout
-    from sql_data_warehouse_samples_spark.maintenance import impacted_tables
+def test_impacted_tables_report(engine, spark, monkeypatch):
+    """ImpactedTables parity, read from vw_impacted_tables: missing stats
+    -> analyzed-healthy -> outdated stats after unanalyzed growth; skew
+    classification.  Only the 1M-row floor is lowered to fixture scale
+    (like the reference's @minRows literal); table names match
+    case-insensitively."""
+    import functools
 
+    from sql_data_warehouse_samples_spark import maintenance
+    from sql_data_warehouse_samples_spark.catalog import round_robin_layout
+
+    monkeypatch.setattr(
+        maintenance, "impacted_rows",
+        functools.partial(maintenance.impacted_rows, min_rows=1000),
+    )
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     engine.create_table_as(
         "testfact.li_imp", li, round_robin_layout(), mode="overwrite"
     )
     try:
-        def report():
-            return impacted_tables(
-                engine.spark,
-                engine.catalog,
-                engine.meta.partition_stats("testfact.li_imp"),
-                ["testfact.li_imp"],
-                min_rows=1000,
-                stats=engine.stats,
-            ).collect()
+        def report(table="testfact.li_imp"):
+            engine.register_monitoring_views([table])
+            return engine.spark.table("vw_impacted_tables").collect()
 
         rep = report()
         assert len(rep) == 1 and rep[0].stat_info == "missing stats"
@@ -1065,9 +1068,10 @@ def test_impacted_tables_report(engine, spark):
 
         # grow the table ~2x without re-analyzing -> outdated stats
         engine.catalog.insert_into("testfact.li_imp", li)
-        rep2 = report()
+        rep2 = report("TestFact.Li_Imp")
         assert len(rep2) == 1 and rep2[0].stat_info == "outdated stats"
         assert rep2[0].cmp_row_count == 2 * rep2[0].ctl_row_count
+        assert rep2[0].distribution_type == "round_robin"
     finally:
         engine.catalog.drop_table("testfact.li_imp")
 

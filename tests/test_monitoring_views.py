@@ -427,3 +427,15 @@ def test_request_history_is_bounded(spark, monkeypatch):
     assert {r.label for r in eng.exec_requests().collect()} == {"q2", "q3", "q4"}
     assert {r.request_id for r in eng.exec_requests().collect()} == kept
     assert {r.request_id for r in eng.request_steps().collect()} == kept
+    # the session still counts every request it ran
+    assert eng.exec_sessions().first().request_count == 5
+
+
+def test_small_df_rejects_rows_of_another_width(spark):
+    from sql_data_warehouse_samples_spark.operators._frames import small_df
+
+    assert small_df(spark, [(1, "a")], "x long, y string").collect()[0].y == "a"
+    with pytest.raises(ValueError):
+        small_df(spark, [(1, "a", 2)], "x long, y string")
+    with pytest.raises(ValueError):
+        small_df(spark, [(1, "a"), (2,)], "x long, y string")
