@@ -901,13 +901,19 @@ class Engine:
         import time as _time
 
         refreshed = []
-        for db in self.spark.catalog.listDatabases():
-            if schemas is not None and db.name not in schemas:
+        # SHOW commands, like Meta._walk: PySpark's catalog listings read
+        # the JVM result through Spark jobs
+        for (db,) in self.spark.sql("SHOW DATABASES").collect():
+            if schemas is not None and db not in schemas:
                 continue
-            for t in self.spark.catalog.listTables(db.name):
-                if t.isTemporary or t.tableType == "VIEW":
+            views = {
+                r[1] for r in self.spark.sql(f"SHOW VIEWS IN `{db}`").collect()
+            }
+            tables = self.spark.sql(f"SHOW TABLES IN `{db}`").collect()
+            for _ns, t, temporary in tables:
+                if temporary or t in views:
                     continue
-                name = f"{db.name}.{t.name}"
+                name = f"{db}.{t}"
                 try:
                     layout = self.catalog.get_layout(name)
                 except Exception:  # noqa: BLE001 — non-managed tables

@@ -431,7 +431,7 @@ def corpus_maintenance_window(
     settled_keys=(),
     prune_unreplayable: bool = True,
     skip_compact_below: int | None = None,
-    reclaim_grace_after_s: float | None = None,
+    grace_min_age_s: float | None = None,
 ) -> dict:
     """The worked maintenance runbook, as one call — everything a corpus
     under an ``admission_sink`` needs at maintenance cadence, in the
@@ -487,14 +487,14 @@ def corpus_maintenance_window(
     Tombstone pruning and the consts refresh still run for skipped
     surfaces (they are not file-count problems).
 
-    ``reclaim_grace_after_s`` (r12 — grace reclamation): when set, a
-    final step runs ``dirswap.reclaim_grace`` over every swap surface
-    this window touches (both ledgers, each index's compact surfaces
-    and its tombstone table), reclaiming reader-grace copies older than
-    this many seconds — generations lineage beyond the current one, and
-    the rename strategy's ``__old`` copies, which otherwise persist
-    until the surface's NEXT publish (a full second copy of every
-    rarely-published ledger/index).  Size it above the longest scan a
+    ``grace_min_age_s`` (grace reclamation): when set, a final step
+    runs ``dirswap.gc_generations(keep=1, min_age_s=...)`` over every
+    swap surface this window touches (both ledgers, each index's compact
+    surfaces and its tombstone table), reclaiming reader-grace
+    generations older than this many seconds — the lineage beyond the
+    current generation, which otherwise persists until the surface's
+    NEXT publish (a full second copy of every rarely-published
+    ledger/index).  Size it above the longest scan a
     reader could hold across a publish; ``0.0`` reclaims everything
     (quiesced-cluster semantics).  Reported as ``grace_reclaimed``
     (list of removed paths).
@@ -555,10 +555,10 @@ def corpus_maintenance_window(
         )
         report["consts_n_docs"] = n_docs
         report["consts_avgdl"] = avgdl
-    if reclaim_grace_after_s is not None:
+    if grace_min_age_s is not None:
         import os
 
-        from .operators.dirswap import reclaim_grace
+        from .operators.dirswap import gc_generations
 
         surfaces: list[str] = []
         if pipeline is not None:
@@ -568,8 +568,8 @@ def corpus_maintenance_window(
             surfaces.append(os.path.join(idx.path, "tombstones"))
         removed: list[str] = []
         for s in surfaces:
-            removed += reclaim_grace(
-                s, spark, min_age_s=reclaim_grace_after_s or None
+            removed += gc_generations(
+                s, spark, keep=1, min_age_s=grace_min_age_s or None
             )
         report["grace_reclaimed"] = removed
     return report
@@ -1010,7 +1010,7 @@ class IndexMaintenanceScheduler:
     blocked drift rows inside it skip their pointless retrain.  Pass
     ``skip_compact_below`` in ``window_kwargs`` to census-gate the
     per-surface compact steps inside fired windows, and
-    ``reclaim_grace_after_s`` to reclaim reader-grace copies at the
+    ``grace_min_age_s`` to reclaim reader-grace copies at the
     same cadence (see ``corpus_maintenance_window``)."""
 
     def __init__(

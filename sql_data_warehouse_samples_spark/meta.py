@@ -321,8 +321,8 @@ _TABLE_SIZES_DETAIL = """
         t.distribution_policy                       AS distribution_policy_name,
         t.distribution_column,
         p.distribution_id,
-        CASE t.index_type WHEN 'CCI' THEN 5
-                          WHEN 'heap' THEN 0 ELSE 1 END AS index_type,
+        CASE lower(t.index_type) WHEN 'cci' THEN 5
+                                 WHEN 'heap' THEN 0 ELSE 1 END AS index_type,
         t.index_type                                AS index_type_desc,
         0                                           AS pdw_node_id,
         'COMPUTE'                                   AS pdw_node_type,

@@ -499,11 +499,10 @@ class Bm25Index:
         self.spark = spark
         # the maintenance surface (meta sidecar reads, dirswap staged
         # swaps, u<N> counters, tombstone/keyed-batch dir checks) is
-        # scheme-dispatched — local paths and atomic-rename stores
-        # (hdfs/abfs/...) run the staged-swap protocol; object stores run
-        # the pointer-file generations protocol (reads and in-place
-        # writes resolve through dirswap.read_path, rewrites publish via
-        # a _CURRENT pointer); only unknown schemes are refused
+        # scheme-dispatched, and every store runs the pointer-file
+        # generations protocol (reads and in-place writes resolve through
+        # dirswap.read_path, rewrites publish via a _CURRENT pointer);
+        # only unknown schemes are refused
         self.path = require_swap_capable(path)
         m = json.loads(
             fs_read_bytes(os.path.join(path, "_BM25_META.json"), spark)
@@ -757,7 +756,7 @@ class Bm25Index:
         if not pairs.isEmpty():
             _merge_tombstones(os.path.join(self.path, "tombstones"), pairs)
         kept = pre_posts.join(purge, self.id_col, "left_anti")
-        stage = stage_path(posts_p, "forget", self.spark)
+        stage = stage_path(posts_p, self.spark)
         kept.write.mode("overwrite").partitionBy("__tb", "__bk").parquet(stage)
         # REAL verify (the ledger/IVF pattern): an unreadable staged tree
         # must raise so swap_in keeps the live index, never promote junk
@@ -772,7 +771,7 @@ class Bm25Index:
             read_path(lens_p, self.spark)
         )
         kept_lens = pre_lens.join(purge, self.id_col, "left_anti")
-        stage_l = stage_path(lens_p, "forget", self.spark)
+        stage_l = stage_path(lens_p, self.spark)
         kept_lens.write.mode("overwrite").partitionBy("__bk").parquet(stage_l)
         swap_in(
             lens_p,
@@ -850,7 +849,7 @@ class Bm25Index:
             # one task -> one file per surviving (__tb, __bk) partition
             .repartition("__tb", "__bk")
         )
-        stage = stage_path(posts_p, "compact", self.spark)
+        stage = stage_path(posts_p, self.spark)
         posts.write.mode("overwrite").partitionBy("__tb", "__bk").parquet(
             stage
         )
@@ -866,7 +865,7 @@ class Bm25Index:
             .withColumn("__bk", folded)
             .repartition("__bk")
         )
-        stage_l = stage_path(lens_p, "compact", self.spark)
+        stage_l = stage_path(lens_p, self.spark)
         lens.write.mode("overwrite").partitionBy("__bk").parquet(stage_l)
         swap_in(
             lens_p, stage_l,
@@ -1033,7 +1032,7 @@ def _merge_tombstones(ts_dir: str, pairs: DataFrame) -> None:
     live = read_path(ts_dir)
     if _has_parquet_data(ts_dir):
         merged = spark.read.parquet(live).unionByName(pairs).distinct()
-        stage = stage_path(ts_dir, "merge")
+        stage = stage_path(ts_dir)
         merged.coalesce(1).write.mode("overwrite").parquet(stage)
         swap_in(
             ts_dir, stage, verify=lambda p: spark.read.parquet(p).first()
@@ -1060,9 +1059,9 @@ def _has_parquet_data(path: str) -> bool:
 def _tombstoned_ids(spark, ts_dir: str, key: str, id_col: str):
     """The ids forget() tombstoned under ``key`` (None when no tombstone
     table exists) — the frame a keyed replay anti-joins its batch
-    against.  Heals a crashed merge swap before reading; a torn FIRST
-    write also reads as no-tombstones, which is sound because forget()
-    tombstones before it purges (nothing was purged yet)."""
+    against.  A crashed merge publish reads as the previous table; a
+    torn FIRST write also reads as no-tombstones, which is sound because
+    forget() tombstones before it purges (nothing was purged yet)."""
     from .dirswap import read_path
 
     live = read_path(ts_dir)
@@ -1139,7 +1138,7 @@ def prune_tombstones(
     if kept.isEmpty():
         remove_surface(ts_dir, spark)
         return pruned
-    stage = stage_path(ts_dir, "merge")
+    stage = stage_path(ts_dir)
     kept.coalesce(1).write.mode("overwrite").parquet(stage)
     swap_in(ts_dir, stage, verify=lambda p: spark.read.parquet(p).first())
     return pruned

@@ -1,51 +1,31 @@
-"""Crash-safe commit protocols for parquet rewriters — a RENAME
-strategy (staged-directory swap) for atomic-rename stores and a
-GENERATIONS strategy (immutable generation dirs behind a pointer file)
-for object stores, selected by URI scheme, over local-FS and Hadoop-FS
-backends behind one scheme-dispatched surface.
+"""The crash-safe commit protocol for parquet rewriters' swap surfaces:
+immutable generation directories behind one pointer object, over
+local-FS and Hadoop-FS backends behind one scheme-dispatched surface.
 
 The ledger and the persisted serving indexes rewrite by writing a
-staged directory (``stage_path``) and publishing it (``swap_in``);
+staged generation (``stage_path``) and publishing it (``swap_in``);
 readers resolve the current physical directory with ``read_path``.
-What publishing means depends on the store:
-
-RENAME strategy (local, HDFS, ADLS-Gen2/HNS, ViewFs, Ozone, Alluxio —
-stores with atomic directory rename).  A swap is two renames —
-``mv live old; mv stage live`` — and a crash between them leaves NO
-live directory.  The recovery contract keeps the live path restorable:
-
-* ``swap_in`` verifies the STAGED directory (caller-supplied check,
-  called with the directory to check) BEFORE touching the live path —
-  a bad stage aborts with the previous data still live and untouched.
-* After the swap the same check runs against the new live directory
-  (catches rename-level corruption); a failure there triggers an
-  AUTOMATIC ROLLBACK — the bad tree is moved aside to ``<live>__bad``
-  and the displaced ``__old`` copy is restored as live — so the caller
-  never observes a live path holding unverified data.
-* ``recover`` heals the one non-atomic window (crash between the two
-  renames): live missing + ``__old`` present → move it back.
-  ``read_path`` calls it before returning, so a crashed compact
-  self-heals on the next read instead of erroring until manual surgery.
-
-GENERATIONS strategy (s3/gs/wasb/oss/... — object stores, whose
-"rename" is copy+delete: non-atomic and O(data), so the swap contract
-cannot stand on it).  This is the manifest/pointer pattern every table
-format uses on blob storage, and the same ``_CURRENT`` pattern the
-tokenizer version store proved out:
+This is the manifest/pointer pattern every table format uses (immutable
+data plus one metadata switch, as in POLARIS), and the same ``_CURRENT``
+pattern the tokenizer version store uses.  It needs no directory rename,
+so it runs unchanged on local, HDFS and object stores:
 
 * ``stage_path`` allocates a FRESH numbered generation directory under
   ``<live>__gens/`` — numbers are monotone over every directory ever
   created there (torn publishes included), so a generation name is
   NEVER reused.
-* ``swap_in`` verifies the staged generation, then commits by
-  atomically writing the ``<live>__gens/_CURRENT.json`` pointer (one
-  small object; object-store PUT is atomic on close — readers see the
-  old pointer or the new, never a torn one).  No data moves at publish
-  time.  A crash BEFORE the pointer write leaves the staged generation
-  unreferenced — invisible to every reader and reaped by the next
-  publish's GC — and the numbering guarantees its name is not reused.
-* ``read_path`` resolves the pointer to the current generation (or the
-  plain live directory before the first publish).
+* ``swap_in`` verifies the staged generation (caller-supplied check,
+  called with the directory), then commits by writing the
+  ``<live>__gens/_CURRENT.json`` pointer through ``atomic_write`` —
+  readers see the old pointer or the new, never a torn one.  No data
+  moves at publish time.  A verify failure or a crash BEFORE the
+  pointer commit leaves the pointer, and therefore every reader,
+  untouched; the staged generation is unreferenced, invisible and
+  reaped by the next publish's GC.  No post-commit verify is needed:
+  the published bytes ARE the verified ones (nothing was renamed).
+* ``read_path`` resolves the pointer to the current generation, or the
+  plain live directory before the first publish (a directory written
+  by a build that predates the pointer reads the same way).
 * After the pointer commit, unreferenced stages (torn publishes) are
   garbage-collected and published generations are RETAINED per the
   reader-grace rule below (best-effort; a crash mid-GC leaves invisible
@@ -55,33 +35,27 @@ READER GRACE / GENERATION RETENTION.  A reader that resolved
 ``read_path`` just before a publish holds a physical directory the
 publisher no longer references; reaping it immediately would delete
 files out from under an in-flight scan (at scale a long scan
-overlapping a compact is routine — every table format on blob storage
-retains snapshots for exactly this).  The pointer file therefore
-carries the publish LINEAGE (``history``), and ``gc_generations``
-keeps the newest ``GENERATION_RETAIN`` published generations (the
-current one plus its predecessors; default 2 = one full publish cycle
-of grace) while still reaping torn stages promptly — a stage that
-never published is invisible to every reader and gets no grace.  The
-pre-first-publish plain directory participates as the implicit first
-predecessor.  Call ``gc_generations(live, keep=1)`` at maintenance
-cadence to reclaim the grace copy once no reader can hold it.  The
-RENAME strategy follows the same rule with its one-slot layout: a
-successful swap RETAINS the displaced ``<live>__old`` copy until the
-next publish displaces it.  Note the grace is weaker there — rename
-readers resolve the live path itself, so only already-open file
-handles survive a swap (POSIX rename semantics); path-based re-listing
-sees the new data.  The generations strategy is the snapshot-isolated
-one: readers hold immutable ``gen-<N>`` paths.  The grace covers
+overlapping a compact is routine — every table format retains
+snapshots for exactly this).  The pointer file therefore carries the
+publish LINEAGE (``history``), and ``gc_generations`` keeps the newest
+``GENERATION_RETAIN`` published generations (the current one plus its
+predecessors; default 2 = one full publish cycle of grace) while still
+reaping torn stages promptly — a stage that never published is
+invisible to every reader and gets no grace.  The pre-first-publish
+plain directory participates as the implicit first predecessor.  Call
+``gc_generations(live, keep=1)`` at maintenance cadence to reclaim the
+grace copy once no reader can hold it.  Readers hold immutable
+``gen-<N>`` paths, so the grace is snapshot isolation.  It covers
 PUBLISHES only — the in-place mutation paths (keyed-batch dynamic
 overwrite, appends) rewrite exactly their own subpartitions of the
 CURRENT generation, so a reader racing a keyed replay of that one batch
 can see its files churn; every other partition stays byte-stable.
 
 CONDITIONAL (compare-and-swap) COMMITS.  Both mutable control objects
-— the generations ``_CURRENT`` pointer and the ``_WRITER_LEASE`` record
-— are read-modify-write, which on a plain store is last-writer-wins
-(the documented advisory mode: violations surface loudly one check
-late).  Stores with conditional writes (S3 If-None-Match/If-Match, GCS
+— the ``_CURRENT`` pointer and the ``_WRITER_LEASE`` record — are
+read-modify-write, which on a plain store is last-writer-wins (the
+documented advisory mode: violations surface loudly one check late).
+Stores with conditional writes (S3 If-None-Match/If-Match, GCS
 generation preconditions, Azure ETags) can close those races for real:
 register an adapter with ``register_conditional_store(scheme, store)``
 and the pointer commit becomes a conditional PUT against the tag read
@@ -97,15 +71,13 @@ exactly their own subpartitions, forget re-runs are idempotent.  On a
 real object store those Spark writes additionally need a cloud-safe
 output committer (e.g. the S3A "magic" committer) — that is Spark
 configuration, not this module's protocol.  Single-writer discipline is
-the caller's contract for BOTH strategies (``maintenance.run_quiesced``).
+the caller's contract (``maintenance.run_quiesced``).
 
-Backend dispatch is by URI scheme: a bare path runs on ``os``/``shutil``
-exactly as before; a ``scheme://`` path runs through the Hadoop
-FileSystem API of the active SparkSession (``file://`` included — the
-LocalFileSystem backend, which is also how both strategies stay fully
-testable without a cluster).  ``set_swap_strategy`` overrides the
-per-scheme default — e.g. force ``generations`` for ``abfs`` on a
-flat-namespace (non-HNS) account, whose rename is secretly copy+delete.
+Backend dispatch is by URI scheme: a bare path runs on ``os``/``shutil``;
+a ``scheme://`` path runs through the Hadoop FileSystem API of the
+active SparkSession (``file://`` included — the LocalFileSystem
+backend, which is also how the protocol stays testable without a
+cluster).
 
 The single-file artifact surfaces (the tokenizer version store, the
 BM25 corpus-constants snapshot, the Bloom artifact) never swap
@@ -128,80 +100,35 @@ def _scheme(path: str) -> str:
     return path.split("://", 1)[0] if "://" in path else ""
 
 
-#: schemes whose directory rename is atomic — the property the rename
-#: strategy stands on.  '' = bare local path (os.rename).
+#: schemes whose file rename is atomic — ``atomic_write`` commits there
+#: by tmp + rename.  '' = bare local path (os.replace).
 _ATOMIC_RENAME_SCHEMES = frozenset(
     {"", "file", "hdfs", "viewfs", "abfs", "abfss", "ofs", "alluxio"}
 )
 
 #: object-store schemes: "rename" is copy+delete (non-atomic, O(data)),
-#: single-object PUT is atomic on close — the generations strategy's
-#: exact shape.
+#: single-object PUT is atomic on close — ``atomic_write`` commits there
+#: by a direct overwrite-PUT.
 _OBJECT_STORE_SCHEMES = frozenset(
     {"s3", "s3a", "s3n", "gs", "gcs", "wasb", "wasbs", "oss", "cos",
      "swift"}
 )
 
-#: per-scheme strategy overrides (set_swap_strategy).  The load-bearing
-#: case: abfs on a FLAT-NAMESPACE (non-HNS) account renames as
-#: copy+delete despite the scheme — force 'generations' there.  Tests
-#: use it to run the generations protocol over file:// without a cloud.
-_FORCED_STRATEGY: dict[str, str] = {}
-
-
-def set_swap_strategy(scheme: str, strategy: str | None) -> None:
-    """Override the commit strategy for a URI scheme: ``'rename'``,
-    ``'generations'``, or ``None`` to restore the default.  The operator
-    knob for capability the scheme alone cannot express — abfs/abfss is
-    atomic-rename ONLY on hierarchical-namespace (ADLS Gen2 HNS)
-    accounts; on a flat-namespace blob account call
-    ``set_swap_strategy('abfs', 'generations')`` before opening any
-    ledger/index there."""
-    if strategy is None:
-        _FORCED_STRATEGY.pop(scheme, None)
-        return
-    if strategy not in ("rename", "generations"):
-        raise ValueError(
-            f"strategy must be 'rename' or 'generations', got {strategy!r}"
-        )
-    _FORCED_STRATEGY[scheme] = strategy
-
-
-def swap_strategy(path: str) -> str:
-    """The commit strategy for ``path``: ``'rename'`` (staged-directory
-    swap, atomic-rename stores) or ``'generations'`` (pointer-file
-    commit, object stores).  Unknown schemes are refused loudly rather
-    than assumed safe."""
-    s = _scheme(path)
-    forced = _FORCED_STRATEGY.get(s)
-    if forced is not None:
-        return forced
-    if s in _ATOMIC_RENAME_SCHEMES:
-        return "rename"
-    if s in _OBJECT_STORE_SCHEMES:
-        return "generations"
-    raise ValueError(
-        f"path scheme {s!r} ({path}) has no known commit strategy "
-        f"(atomic-rename stores: {sorted(_ATOMIC_RENAME_SCHEMES - {''})}; "
-        f"object stores: {sorted(_OBJECT_STORE_SCHEMES)}); declare one "
-        "with set_swap_strategy(scheme, 'rename'|'generations')"
-    )
-
 
 def require_swap_capable(path: str) -> str:
-    """Validate that ``path`` lives on a store with a known commit
-    strategy — a strategy PICK now, not an atomic-rename refusal:
-    atomic-rename stores get the staged-directory swap, object stores
-    get the pointer-file generations protocol, and only an UNKNOWN
-    scheme (no safe default either way) is refused.  CAVEAT
-    (abfs/abfss): directory rename is atomic only on
-    HIERARCHICAL-NAMESPACE accounts (ADLS Gen2 with HNS enabled) — a
-    flat-namespace blob account mounted via abfs renames as copy+delete;
-    the scheme alone cannot distinguish the two, so on such accounts
-    declare ``set_swap_strategy('abfs', 'generations')`` first.  Returns
-    the path unchanged (URIs stay URIs — every filesystem op downstream
-    dispatches on the scheme)."""
-    swap_strategy(path)  # raises on unknown schemes
+    """Validate that ``path`` lives on a store whose atomic small-object
+    commit is known — tmp + rename on rename-capable stores, direct PUT
+    on object stores (``atomic_write``, which commits every generation
+    pointer).  An UNKNOWN scheme has no safe default either way and is
+    refused loudly.  Returns the path unchanged (URIs stay URIs — every
+    filesystem op downstream dispatches on the scheme)."""
+    s = _scheme(path)
+    if s not in _ATOMIC_RENAME_SCHEMES and s not in _OBJECT_STORE_SCHEMES:
+        raise ValueError(
+            f"path scheme {s!r} ({path}) has no known commit primitive "
+            f"(atomic-rename stores: {sorted(_ATOMIC_RENAME_SCHEMES - {''})}; "
+            f"object stores: {sorted(_OBJECT_STORE_SCHEMES)})"
+        )
     return path
 
 
@@ -222,7 +149,7 @@ def _active_spark(spark=None):
 class _HadoopFs:
     """Thin wrapper over the JVM Hadoop FileSystem for one path's scheme
     — mirrors exactly the os/shutil surface the local backend uses, so
-    the swap/heal logic above it is backend-agnostic."""
+    the commit logic above it is backend-agnostic."""
 
     def __init__(self, path: str, spark=None):
         spark = _active_spark(spark)
@@ -254,22 +181,6 @@ class _HadoopFs:
         jp = self.jpath(p)
         if self._fs.exists(jp):
             self._fs.delete(jp, True)
-
-    def move(self, src: str, dst: str) -> None:
-        """Directory rename with shutil.move's fail-loudly contract:
-        Hadoop rename() signals failure by RETURNING false (dst exists,
-        src missing, cross-FS), which silent-corrupts a swap — raise.
-        Refused outright on object-store schemes (their rename is
-        copy+delete — a caller reaching here bypassed the strategy
-        dispatch)."""
-        if _scheme(src) in _OBJECT_STORE_SCHEMES:
-            raise OSError(
-                f"directory rename on object-store scheme "
-                f"{_scheme(src)!r} is copy+delete — use the generations "
-                f"commit protocol ({src} -> {dst})"
-            )
-        if not self._fs.rename(self.jpath(src), self.jpath(dst)):
-            raise OSError(f"hadoop rename failed: {src} -> {dst}")
 
     def mkdirs(self, p: str) -> None:
         self._fs.mkdirs(self.jpath(p))
@@ -555,21 +466,6 @@ def _gen_number(name: str) -> int | None:
     return int(tail) if tail.isdigit() else None
 
 
-def _pointer_write(path: str, data: bytes, spark=None) -> None:
-    """Commit the pointer object.  Object stores: direct overwrite-PUT —
-    atomic on close (the store's native commit primitive; a tmp+rename
-    would be the copy+delete this protocol exists to avoid).  Bare local
-    paths (tests forcing the strategy): tmp + os.replace."""
-    h = _hfs(path, spark)
-    if h is None:
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
-    else:
-        h.write_bytes(path, data)
-
-
 def _pointer_read(live: str, spark=None) -> dict | None:
     """The pointer record ({gen, history}) or None before the first
     publish.  ``history`` is the publish lineage, newest first (may be
@@ -603,27 +499,21 @@ def _current_generation(live: str, spark=None) -> str | None:
 
 def read_path(live: str, spark=None) -> str:
     """The physical directory to read (or mutate in place) for logical
-    path ``live`` — THE resolver every reader and in-place writer of a
-    swap surface goes through.  Rename strategy: heals a crashed swap
-    (``recover``) and returns ``live`` itself.  Generations strategy:
-    resolves the ``_CURRENT`` pointer to the published generation, or
-    ``live`` before the first publish."""
-    if swap_strategy(live) == "rename":
-        recover(live, spark)
-        return live
+    path ``live`` — THE resolver every reader, in-place writer and
+    existence check of a swap surface goes through: the published
+    generation the ``_CURRENT`` pointer names, or ``live`` itself before
+    the first publish.  (After two publishes the plain ``live``
+    directory is reaped, so a check on it says nothing.)"""
     cur = _current_generation(live, spark)
     return live if cur is None else os.path.join(_gens_dir(live), cur)
 
 
-def stage_path(live: str, tag: str, spark=None) -> str:
+def stage_path(live: str, spark=None) -> str:
     """Where a rewriter should WRITE its staged replacement for ``live``
-    before publishing it with ``swap_in``.  Rename strategy:
-    ``<live>__<tag>`` (the historical stage names).  Generations
-    strategy: a FRESH ``<live>__gens/gen-<N>`` — N is one past the
-    highest number ever allocated there, torn/abandoned stages included,
-    so a generation name is never reused even across crashes."""
-    if swap_strategy(live) == "rename":
-        return f"{live}__{tag}"
+    before publishing it with ``swap_in``: a FRESH
+    ``<live>__gens/gen-<N>`` — N is one past the highest number ever
+    allocated there, torn/abandoned stages included, so a generation
+    name is never reused even across crashes."""
     gens = _gens_dir(live)
     fs_mkdirs(gens, spark)
     taken = [
@@ -705,92 +595,13 @@ def gc_generations(
     return removed
 
 
-def reclaim_grace(
-    live: str,
-    spark=None,
-    min_age_s: float | None = None,
-) -> list[str]:
-    """Reclaim a swap surface's reader-grace copies at maintenance
-    cadence — the strategy-dispatched form of the module docstring's
-    retention rule, so callers (``corpus_maintenance_window``) need not
-    know which strategy a surface runs on.
-
-    * Generations strategy: ``gc_generations(live, keep=1,
-      min_age_s=...)`` — collapse the retained lineage to the current
-      generation (subject to the time grace).
-    * Rename strategy: delete the ``<live>__old`` copy the last publish
-      retained, once it is older than ``min_age_s`` (unconditionally
-      when ``min_age_s`` is None) — without this, rename backends keep
-      a full second copy of every ledger/index until the NEXT publish
-      reclaims it, roughly doubling storage for surfaces that publish
-      rarely.  ``<live>__bad`` post-mortem trees are NOT touched (they
-      exist only after a failed verify and are operator evidence);
-      ``remove_surface`` reaps those with the table.  Safe alongside
-      ``recover()``: the grace copy is only removed while ``live``
-      itself exists, so the crash-heal path never loses its restore
-      source.
-
-    Returns the removed paths."""
-    if swap_strategy(live) == "generations":
-        return gc_generations(live, spark, keep=1, min_age_s=min_age_s)
-    old = f"{live}__old"
-    if not fs_exists(old, spark) or not fs_exists(live, spark):
-        return []
-    if min_age_s is not None:
-        import time as _time
-
-        try:
-            if (_time.time() - fs_mtime(old, spark)) < min_age_s:
-                return []
-        except Exception:
-            return []  # raced away — nothing to reclaim
-    fs_rmtree(old, spark)
-    return [old]
-
-
 def remove_surface(live: str, spark=None) -> None:
     """Delete a swap surface entirely (e.g. a tombstone table pruned to
-    empty), under either strategy.  Generations order is pointer-first:
-    readers stop resolving before any data disappears, and a crash
-    mid-removal leaves only invisible garbage.  Rename strategy: the
-    crash-parked ``__old``/``__bad`` siblings go too — removing the live
-    table makes them unreferenced (recover() must NOT resurrect a
-    deliberately removed surface from its ``__old``)."""
-    if swap_strategy(live) == "rename":
-        fs_rmtree(live, spark)
-        fs_rmtree(f"{live}__old", spark)
-        fs_rmtree(f"{live}__bad", spark)
-        return
-    gens = _gens_dir(live)
-    ptr = os.path.join(gens, _POINTER)
-    h = _hfs(ptr, spark)
-    if h is None:
-        if os.path.exists(ptr):
-            os.remove(ptr)
-    else:
-        if h.exists(ptr):
-            h.rmtree(ptr)  # single object; Hadoop delete handles files
-    fs_rmtree(gens, spark)
+    empty).  Pointer first: readers stop resolving before any data
+    disappears, and a crash mid-removal leaves only invisible garbage."""
+    fs_rmtree(os.path.join(_gens_dir(live), _POINTER), spark)
+    fs_rmtree(_gens_dir(live), spark)
     fs_rmtree(live, spark)
-
-
-# -- the swap/heal contract ----------------------------------------------
-
-
-def recover(live: str, spark=None) -> bool:
-    """Heal a crashed swap: if ``live`` is missing but ``<live>__old``
-    exists, restore it.  Returns True if a restore happened."""
-    old = f"{live}__old"
-    h = _hfs(live, spark)
-    if h is None:
-        if not os.path.exists(live) and os.path.exists(old):
-            shutil.move(old, live)
-            return True
-        return False
-    if not h.exists(live) and h.exists(old):
-        h.move(old, live)
-        return True
-    return False
 
 
 def swap_in(
@@ -799,123 +610,76 @@ def swap_in(
     verify: Callable[[str], None] | None = None,
     spark=None,
 ) -> None:
-    """Publish ``stage`` as the new content of logical path ``live`` —
-    the strategy-dispatched commit.
-
-    Rename strategy: replace the live directory with the stage.
-    ``verify`` (e.g. a 1-row read of the given directory) is called with
-    ``stage`` before any rename — an exception there aborts with the
-    previous data still live — and with ``live`` after the swap; a
-    post-swap failure rolls back automatically (bad tree parked at
-    ``<live>__bad``, previous data restored as live) and re-raises.
-    Either way the caller never sees unverified data at the live path,
-    and the last good copy is never deleted on a failure path.  A
-    successful swap RETAINS the displaced copy at ``<live>__old`` (the
-    one-slot reader-grace rule — see the module docstring); the NEXT
-    publish reclaims it.  A missing live directory is a FIRST publish:
-    the stage simply becomes live (so builds can bootstrap through the
-    same crash-safe commit).
-
-    Generations strategy (``stage`` must come from ``stage_path``):
-    verify the staged generation, atomically commit the ``_CURRENT``
-    pointer (no data moves; the pointer carries the publish lineage for
-    the retention rule), then GC torn stages and out-of-grace
-    predecessors.  A verify failure aborts with the pointer — and
-    therefore every reader — untouched; the abandoned stage is invisible
-    and reaped later.  No post-commit verify is needed: the published
-    bytes ARE the verified ones (nothing was renamed).
+    """Publish ``stage`` (allocated by ``stage_path``) as the new content
+    of logical path ``live``: verify the staged generation, commit the
+    ``_CURRENT`` pointer through ``atomic_write`` (no data moves; the
+    pointer carries the publish lineage for the retention rule), then GC
+    torn stages and out-of-grace predecessors.  ``verify`` (e.g. a 1-row
+    read of the given directory) is called with ``stage``; a failure
+    there — or a crash anywhere before the pointer commit — leaves the
+    pointer, and therefore every reader, on the previous generation.  A
+    surface with no pointer yet is a FIRST publish (so builds bootstrap
+    through the same crash-safe commit).
     """
-    if swap_strategy(live) == "generations":
-        import json
+    import json
 
-        gens = _gens_dir(live)
-        name = os.path.basename(stage.rstrip("/"))
-        if os.path.dirname(stage.rstrip("/")) != gens or _gen_number(
-            name
-        ) is None:
-            raise ValueError(
-                f"generations publish requires a stage allocated by "
-                f"stage_path({live!r}, ...); got {stage!r}"
-            )
-        if verify is not None:
-            verify(stage)  # raises -> pointer (and every reader) untouched
-        ptr = os.path.join(gens, _POINTER)
-        store = conditional_store(live)
-        tag = None
-        if store is None:
-            prev = _pointer_read(live, spark)
-        else:
-            cur = store.read(ptr)
-            prev = json.loads(cur[0]) if cur is not None else None
-            tag = cur[1] if cur is not None else None
-        # lineage, newest first; the plain pre-publish dir is the
-        # implicit first predecessor.  Recorded to _LINEAGE_DEPTH —
-        # deeper than the GC policy, which picks its own keep at GC time.
-        history = (
-            [prev["gen"], *prev.get("history", [])]
-            if prev is not None
-            else [_PLAIN]
-        )[:_LINEAGE_DEPTH]
-        data = json.dumps({"gen": name, "history": history}).encode()
-        if store is None:
-            _pointer_write(ptr, data, spark)
-        else:
-            # conditional commit: a concurrent publish loses ATOMICALLY
-            # here (the store holds the winner's pointer; this stage
-            # stays invisible and is reaped by the winner's GC) instead
-            # of last-writer-wins silently orphaning the winner's data
-            try:
-                store.put(ptr, data, tag)
-            except CasConflict as e:
-                raise RuntimeError(
-                    f"concurrent publish detected at {ptr}: another "
-                    f"writer committed a pointer since this publish "
-                    "read it — single-writer contract violated; this "
-                    f"stage ({name}) was NOT published"
-                ) from e
-        gc_generations(live, spark)
-        return
-    old = f"{live}__old"
-    bad = f"{live}__bad"
-    h = _hfs(live, spark)
-    _rmtree = (lambda p: shutil.rmtree(p, ignore_errors=True)) if h is None else h.rmtree
-    _move = shutil.move if h is None else h.move
-    _exists = os.path.exists if h is None else h.exists
+    gens = _gens_dir(live)
+    name = os.path.basename(stage.rstrip("/"))
+    if os.path.dirname(stage.rstrip("/")) != gens or _gen_number(
+        name
+    ) is None:
+        raise ValueError(
+            f"publish requires a stage allocated by "
+            f"stage_path({live!r}); got {stage!r}"
+        )
     if verify is not None:
-        verify(stage)  # raises -> live path untouched
-    had_live = _exists(live)
-    if had_live:
-        _rmtree(old)  # reclaim the previous publish's grace copy
-        _move(live, old)
-    _move(stage, live)
-    if verify is not None:
+        verify(stage)  # raises -> pointer (and every reader) untouched
+    ptr = os.path.join(gens, _POINTER)
+    store = conditional_store(live)
+    tag = None
+    if store is None:
+        prev = _pointer_read(live, spark)
+    else:
+        cur = store.read(ptr)
+        prev = json.loads(cur[0]) if cur is not None else None
+        tag = cur[1] if cur is not None else None
+    # lineage, newest first; the plain pre-publish dir is the
+    # implicit first predecessor.  Recorded to _LINEAGE_DEPTH —
+    # deeper than the GC policy, which picks its own keep at GC time.
+    history = (
+        [prev["gen"], *prev.get("history", [])]
+        if prev is not None
+        else [_PLAIN]
+    )[:_LINEAGE_DEPTH]
+    data = json.dumps({"gen": name, "history": history}).encode()
+    if store is None:
+        atomic_write(ptr, data, spark)
+    else:
+        # conditional commit: a concurrent publish loses ATOMICALLY
+        # here (the store holds the winner's pointer; this stage
+        # stays invisible and is reaped by the winner's GC) instead
+        # of last-writer-wins silently orphaning the winner's data
         try:
-            verify(live)
-        except Exception:
-            # roll back: park the bad tree for post-mortem, restore the
-            # displaced good copy as live, then surface the failure
-            _rmtree(bad)
-            _move(live, bad)
-            if had_live:
-                _move(old, live)
-            raise
-    # the displaced __old copy is RETAINED (reader grace) — the next
-    # publish's _rmtree(old) above reclaims it
+            store.put(ptr, data, tag)
+        except CasConflict as e:
+            raise RuntimeError(
+                f"concurrent publish detected at {ptr}: another "
+                f"writer committed a pointer since this publish "
+                "read it — single-writer contract violated; this "
+                f"stage ({name}) was NOT published"
+            ) from e
+    gc_generations(live, spark)
 
 
 def atomic_write(path: str, data: bytes, spark=None) -> None:
-    """Crash-safe small-artifact write: write to a same-directory temp
+    """Crash-safe small-object write: write to a same-directory temp
     file, then atomically replace (``os.replace`` locally; FileContext
     rename-with-OVERWRITE on Hadoop stores) — readers see the old content
-    or the new, never a torn file.  On object-store schemes (and schemes
-    forced to the generations strategy) the commit is a direct
-    overwrite-PUT instead — the store's native atomic primitive; its
-    "rename" is the copy+delete this call exists to avoid."""
+    or the new, never a torn file.  On object-store schemes the commit is
+    a direct overwrite-PUT instead — the store's native atomic primitive;
+    its "rename" is the copy+delete this call exists to avoid."""
     h = _hfs(path, spark)
-    s = _scheme(path)
-    if h is not None and (
-        s in _OBJECT_STORE_SCHEMES or _FORCED_STRATEGY.get(s) == "generations"
-    ):
+    if h is not None and _scheme(path) in _OBJECT_STORE_SCHEMES:
         h.write_bytes(path, data)
         return
     tmp = path + ".tmp"

@@ -48,15 +48,12 @@ LEDGER_SCHEMA = StructType(
 
 
 def _require_local(path: str) -> str:
-    """Validate the ledger path's store: every existence check, dir scan
-    and crash-heal below dispatches on the URI scheme (local ``os`` ops
-    for bare paths, the Hadoop FileSystem API otherwise — the r10
-    dirswap port), so local paths and atomic-rename stores (hdfs/abfs/
-    viewfs/...) both work; object-store schemes run the pointer-file
-    generations commit protocol instead of directory swaps (the r10
-    dirswap strategy pick — reads and in-place writes resolve through
+    """Validate the ledger path's store: every existence check and dir
+    scan below dispatches on the URI scheme (local ``os`` ops for bare
+    paths, the Hadoop FileSystem API otherwise), and every store runs the
+    same generations commit (reads and in-place writes resolve through
     ``dirswap.read_path``, rewrites publish via a ``_CURRENT`` pointer).
-    Only a scheme with NO known strategy is refused loudly."""
+    Only a scheme with NO known commit primitive is refused loudly."""
     from .dirswap import require_swap_capable
 
     return require_swap_capable(path)
@@ -101,15 +98,16 @@ class ContentHashLedger:
         self.path = _require_local(path)
 
     def _live(self) -> str:
-        """The physical ledger directory — heals a crashed swap (rename
-        strategy) or resolves the generation pointer (object stores)."""
+        """The physical ledger directory — the generation the pointer
+        names (``dirswap.read_path``)."""
         from .dirswap import read_path
 
         return read_path(self.path, self.spark)
 
     def hashes(self) -> DataFrame:
         """The ledger as a one-column frame (empty if nothing ingested).
-        Self-heals a compact() interrupted mid-swap first (dirswap)."""
+        A compact() interrupted mid-publish leaves the previous
+        generation current (dirswap)."""
         from .dirswap import fs_exists
 
         live = self._live()
@@ -215,11 +213,11 @@ class ContentHashLedger:
         parallelism).  Daily appends each land as separate small files —
         after a year the ledger scan pays ~365x the open/footer overhead
         it needs; the rebuild tables it like any parquet rewriter
-        (compaction D13 applied to the ledger).  Staged write + verified
-        directory swap (dirswap.swap_in): a failure before the swap leaves
-        the live ledger untouched; a crash mid-swap self-heals on the next
-        read; the displaced copy is deleted only after the new live
-        directory verifies readable.  Returns the distinct-hash count.
+        (compaction D13 applied to the ledger).  Staged generation +
+        verified pointer commit (dirswap.swap_in): a failure or crash
+        before the commit leaves the live ledger untouched, and the
+        displaced generation is kept for reader grace.  Returns the
+        distinct-hash count.
         """
         return self._rewrite(self.hashes().distinct(), n_files)
 
@@ -249,7 +247,7 @@ class ContentHashLedger:
 
         if n_files:
             frame = frame.repartition(n_files)
-        stage = stage_path(self.path, "compact", self.spark)
+        stage = stage_path(self.path, self.spark)
         frame.write.mode("overwrite").parquet(stage)
         # explicit schema: a forget() purging every row writes an EMPTY
         # parquet dir, which schemaless reads cannot infer
@@ -319,8 +317,8 @@ class MinHashSignatureLedger:
         }
 
     def _live(self) -> str:
-        """Physical ledger directory (crash-heal / generation-pointer
-        resolution — see ContentHashLedger._live)."""
+        """Physical ledger directory (generation-pointer resolution —
+        see ContentHashLedger._live)."""
         from .dirswap import read_path
 
         return read_path(self.path, self.spark)
@@ -390,7 +388,8 @@ class MinHashSignatureLedger:
 
     def signatures(self) -> DataFrame:
         """The ledger as a (doc_id, sig) frame (empty before first ingest).
-        Self-heals a compact() interrupted mid-swap (dirswap.recover).
+        A compact() interrupted mid-publish leaves the previous
+        generation current (dirswap.swap_in).
 
         ``recursiveFileLookup`` lets plain appends (files at the root) and
         idempotent keyed appends (one ``batch-<key>/`` subdirectory per
@@ -688,7 +687,7 @@ class MinHashSignatureLedger:
 
         if n_files:
             frame = frame.repartition(n_files)
-        stage = stage_path(self.path, "compact", self.spark)
+        stage = stage_path(self.path, self.spark)
         frame.write.mode("overwrite").parquet(stage)
         # explicit schema: forgetting every row writes an empty dir
         n = (

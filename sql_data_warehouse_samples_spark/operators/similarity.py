@@ -1447,11 +1447,11 @@ def rrf_fuse(
 #: hidden subdirectory of the lists surface holding the quantizer
 #: sidecars (centroids, and for PQ: codebooks + params).  Spark's file
 #: listing skips '_'-prefixed paths, so the lists scan never sees it —
-#: but it RIDES THE SAME COMMIT as the lists: one pointer flip (object
-#: stores) / directory rename (rename stores) publishes quantizer and
-#: lists together, so a crash can never leave new lists served under an
-#: old quantizer or vice versa (the r10 ADVICE finding: the previous
-#: layout overwrote {path}/centroids in place AFTER the lists swap).
+#: but it RIDES THE SAME COMMIT as the lists: one pointer flip publishes
+#: quantizer and lists together, so a crash can never leave new lists
+#: served under an old quantizer or vice versa (the r10 ADVICE finding:
+#: the previous layout overwrote {path}/centroids in place AFTER the
+#: lists swap).
 _QUANT = "_quantizer"
 
 
@@ -1487,8 +1487,7 @@ def _read_sidecar_rows(spark, path: str) -> list[dict]:
     directory/file — ZERO Spark jobs, where the ``spark.read...collect``
     fallback pays a schema-inference job plus a collect job PER SIDECAR
     on every index ``load()`` (r12 job-trace: 6-7 metadata micro-jobs per
-    serving call).  Non-local schemes (the object-store strategy) keep
-    the Spark read."""
+    serving call).  Non-local schemes keep the Spark read."""
     import glob as _glob
     import os
 
@@ -1514,7 +1513,7 @@ def _read_sidecar_rows(spark, path: str) -> list[dict]:
 def _quant_path(spark, path: str, name: str) -> str:
     """Physical path of quantizer sidecar ``name``: the in-generation
     ``_quantizer/`` copy of the CURRENT lists directory when present
-    (resolved through dirswap.read_path — the pointer/heal-aware
+    (resolved through dirswap.read_path — the pointer-aware
     resolver), else the legacy ``{path}/<name>`` sidecar (read-only
     back-compat; any rewrite migrates to the in-generation layout)."""
     from .dirswap import fs_exists, read_path
@@ -1581,9 +1580,8 @@ class IvfIndex:
 
         # the maintenance surface (dirswap staged swaps, u<N> counters,
         # tombstone/keyed-batch dir checks, emptied-partition cleanup) is
-        # scheme-dispatched — local paths and atomic-rename stores work;
-        # object stores are refused loudly (the staged-swap contract
-        # needs atomic directory rename)
+        # scheme-dispatched — every known store runs the generations
+        # commit; unknown schemes are refused loudly
         self.path = require_swap_capable(path)
         self.centroids = centroids
 
@@ -1602,7 +1600,7 @@ class IvfIndex:
         map-only argmin fold ivf_topk uses) and write the lists partitioned
         by centroid_id — one distributed write, no shuffle beyond the
         partitioned-write split.  The write PUBLISHES through the
-        strategy-dispatched commit (stage + ``swap_in``): on a surface
+        generations commit (stage + ``swap_in``): on a surface
         that already carries a generation pointer the rebuild lands in a
         NEW generation readers actually resolve (the r10 ADVICE finding —
         a plain write there was invisible to ``read_path`` and reaped by
@@ -1629,7 +1627,7 @@ class IvfIndex:
             round_to,
         )
         live = f"{path}/lists"
-        stage = stage_path(live, "build", spark)
+        stage = stage_path(live, spark)
         assigned.withColumn("__bk", F.lit(cls._BASE_KEY)).write.partitionBy(
             "centroid_id", "__bk"
         ).mode("overwrite").parquet(stage)
@@ -1811,8 +1809,7 @@ class IvfIndex:
         )
 
     def _lists(self, spark) -> DataFrame:
-        """Open the inverted lists — heals a crashed swap (rename
-        strategy) / resolves the generation pointer (object stores)."""
+        """Open the inverted lists — the generation the pointer names."""
         return spark.read.parquet(self._lists_dir(spark))
 
     def _lists_dir(self, spark) -> str:
@@ -1863,12 +1860,13 @@ class IvfIndex:
         ``add()`` path defers.  Runs Lloyd refinement over the indexed
         vectors (kmeans_centroids: map-only assignment + ~nlist×dim-row
         shuffles), then rewrites the lists through the same verified
-        staged swap as ``compact()`` — searches keep working against the
-        old lists until the swap lands, and a crash self-heals.  The new
-        quantizer rides INSIDE the staged lists directory, so the one
-        commit publishes both — no window where new lists are served
-        under the old centroids (r10 ADVICE: the previous in-place
-        centroids overwrite was delete-then-write on object stores)."""
+        staged publish as ``compact()`` — searches keep working against
+        the old lists until the pointer commits, and a crash leaves them
+        current.  The new quantizer rides INSIDE the staged lists
+        directory, so the one commit publishes both — no window where new
+        lists are served under the old centroids (r10 ADVICE: the previous
+        in-place centroids overwrite was delete-then-write on object
+        stores)."""
         from .dirswap import stage_path, swap_in
 
         corpus = self._lists(spark).select("neighbor_id", "__cvec", "__bk")
@@ -1880,7 +1878,7 @@ class IvfIndex:
             iters=train_iters,
             round_to=round_to,
         )
-        stage = stage_path(f"{self.path}/lists", "retrain", spark)
+        stage = stage_path(f"{self.path}/lists", spark)
         # rows move to their NEW nearest list but keep their __bk (the
         # assignment is a map-only annotation, __bk rides along): a keyed
         # replay after a retrain still finds its stored rows (re-assigned
@@ -1899,11 +1897,10 @@ class IvfIndex:
     def compact(self, spark, files_per_list: int = 1) -> int:
         """Rebuild the inverted lists' accumulated ``add()`` batches into
         ``files_per_list`` files per (centroid, batch) partition (staged
-        write + verified directory swap, dirswap.swap_in: live index
-        untouched until the swap, crash mid-swap self-heals on next open,
-        displaced copy deleted only after the new live directory verifies
-        readable).  Keeps the partition-pruned search's per-list
-        open/footer cost flat as small writes accumulate WITHIN batches;
+        generation + verified pointer commit, dirswap.swap_in: live index
+        untouched until the commit, a crash mid-publish leaves the
+        previous generation current).  Keeps the partition-pruned search's
+        per-list open/footer cost flat as small writes accumulate WITHIN batches;
         the ``__bk`` subpartitions themselves are preserved — folding
         them together would make a later keyed replay see an empty
         ``__bk=k-<key>`` and re-ingest (double count), so per-list footer
@@ -1915,7 +1912,7 @@ class IvfIndex:
 
         lists = self._lists(spark)
         _require_bk_layout(lists, self.path, "IvfIndex", "compact()")
-        stage = stage_path(f"{self.path}/lists", "compact", spark)
+        stage = stage_path(f"{self.path}/lists", spark)
         (
             lists.repartition(files_per_list * max(len(self.centroids), 1),
                               "centroid_id")
@@ -2225,7 +2222,7 @@ class IvfPqIndex:
         from .dirswap import stage_path, swap_in
 
         live = f"{path}/lists"
-        stage = stage_path(live, "build", spark)
+        stage = stage_path(live, spark)
         (
             encoded.join(assigned.select("neighbor_id", "centroid_id"), "neighbor_id")
             .withColumn("__bk", F.lit(IvfIndex._BASE_KEY))
@@ -2676,7 +2673,7 @@ class IvfPqIndex:
         )
         from .dirswap import stage_path, swap_in
 
-        stage = stage_path(f"{self.path}/lists", "retrain", spark)
+        stage = stage_path(f"{self.path}/lists", spark)
         rows.write.partitionBy("centroid_id", "__bk").mode(
             "overwrite"
         ).parquet(stage)
@@ -2703,7 +2700,7 @@ class IvfPqIndex:
 
         lists = self._lists(spark)
         _require_bk_layout(lists, self.path, "IvfPqIndex", "compact()")
-        stage = stage_path(f"{self.path}/lists", "compact", spark)
+        stage = stage_path(f"{self.path}/lists", spark)
         (
             lists.repartition(files_per_list * max(len(self.centroids), 1),
                               "centroid_id")

@@ -363,7 +363,7 @@ VIEWS = {
                               WHEN 0 THEN 'HEAP' ELSE 'CLUSTERED' END
                      AS type_desc
             FROM (
-              SELECT *, CASE COALESCE(index_type, 'CCI') WHEN 'CCI' THEN 5
+              SELECT *, CASE lower(COALESCE(index_type, 'cci')) WHEN 'cci' THEN 5
                           WHEN 'heap' THEN 0 ELSE 1 END AS itype
               FROM meta_tables WHERE NOT is_view
             )""",

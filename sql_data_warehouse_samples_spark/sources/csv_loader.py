@@ -131,6 +131,10 @@ class CsvLoader:
             .option("header", str(opts.header).lower())
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
+            # tokenize every line whole: a pruned parse reads only the
+            # referenced fields and cannot see a short or long line, so
+            # the malformed-row verdict would depend on the projection
+            .option("columnPruning", "false")
         )
         if opts.compression:
             reader = reader.option("compression", opts.compression)
@@ -167,10 +171,21 @@ class CsvLoader:
                 cast = F.coalesce(cast, F.lit(default).cast(spec.data_type))
         return cast.alias(spec.name)
 
+    @staticmethod
+    def _well_formed(columns: list[ColumnSpec]) -> Column:
+        """The line parsed to exactly the declared columns (L5).  The
+        no-op test on the first column keeps a data column in every scan
+        of the loaded frame: Spark refuses a scan whose only column is the
+        corrupt-record column, as a ``count()`` of it would be."""
+        first = F.col(columns[0].name)
+        return F.col("_corrupt_record").isNull() & (
+            first.isNull() | first.isNotNull()
+        )
+
     def _bad_row_flag(self, columns: list[ColumnSpec], opts: LoadOptions) -> Column:
         """A row is bad if it was corrupt (wrong column count → L5) or any
         typed column fails its cast."""
-        flags = [F.col("_corrupt_record").isNotNull()]
+        flags = [~self._well_formed(columns)]
         for spec in columns:
             base = spec.data_type.split("(")[0].lower()
             if base == "string":
@@ -232,16 +247,17 @@ class CsvLoader:
                 f"load failed: {n_bad} rejected rows exceeds REJECT_VALUE={cap}"
             )
 
-        cleaned = staged
         if opts.on_error == "discard":
-            cleaned = cleaned.filter(~F.col("_is_bad"))
-            rows = counts["n_total"] - n_bad
+            cleaned = staged.filter(~F.col("_is_bad"))
+            rows_rejected = n_bad
         else:
-            cleaned = cleaned.filter(F.col("_corrupt_record").isNull())
-            rows = counts["n_total"] - (counts["n_corrupt"] or 0)
+            # substitute: bad values become sentinels; a malformed line
+            # has no values to substitute and is rejected
+            cleaned = staged.filter(self._well_formed(columns))
+            rows_rejected = counts["n_corrupt"] or 0
+        rows = counts["n_total"] - rows_rejected
         out = cleaned.select(*[self._clean_column(s, opts) for s in columns])
         elapsed = round(time.time() - t0, 3)
-        rows_rejected = n_bad if opts.on_error == "discard" else 0
         # audit (S7: COUNT_BIG + elapsed print → our load log)
         self.audit_log.append(
             {

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import threading
 import time
+from collections import deque
 from contextlib import contextmanager
 
 # Resource class → slots, mirroring the reference's static classes
@@ -25,6 +26,10 @@ RESOURCE_CLASS_SLOTS = {
 }
 
 TOTAL_SLOTS = 32
+
+#: waits-log rows an AdmissionController keeps: a Queued and a Granted row
+#: for each of the last 10,000 requests (engine.REQUEST_HISTORY)
+WAITS_HISTORY = 20_000
 
 # DWU ladder (dwuconfigs.json:2-16; ScaleAzureSQLDataWarehouse.ps1:13-40).
 DWU_LADDER = [100, 200, 300, 400, 500, 600, 1000, 1200, 1500, 2000, 3000, 6000]
@@ -42,7 +47,9 @@ class AdmissionController:
         self.total_slots = total_slots
         self._used = 0
         self._cv = threading.Condition()
-        self._waits: list[tuple[str, str, str, float, int]] = []
+        self._waits: deque[tuple[str, str, str, float, int]] = deque(
+            maxlen=WAITS_HISTORY
+        )
 
     def slots_for(self, resource_class: str) -> int:
         try:

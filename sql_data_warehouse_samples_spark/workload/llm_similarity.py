@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity as S
 from ..operators._frames import small_df
+from ..operators.dirswap import read_path
 from . import query
 from ._util import tbl
 
@@ -356,7 +357,7 @@ def _ivf_serving_index(spark, sf_dir):
     # content-fingerprinted cache key (r10 ADVICE): a regenerated
     # dataset at the same path gets a fresh index, never a stale one
     path = serving_cache_dir(sf_dir, "ivf_serving", "embeddings")
-    if _os.path.isdir(_os.path.join(path, "lists")):
+    if _os.path.isdir(read_path(_os.path.join(path, "lists"))):
         return IvfIndex.load(spark, path)
     e = tbl(spark, sf_dir, "embeddings")
     return IvfIndex.build(e, path, nlist=16)  # s04's seed quantizer
@@ -742,7 +743,7 @@ def _ivfpq_serving_index(spark, sf_dir):
     from ._util import serving_cache_dir
 
     path = serving_cache_dir(sf_dir, "ivfpq_serving", "embeddings")
-    if _os.path.isdir(_os.path.join(path, "lists")):
+    if _os.path.isdir(read_path(_os.path.join(path, "lists"))):
         return IvfPqIndex.load(spark, path)
     e = tbl(spark, sf_dir, "embeddings")
     # s10's deterministic codebooks (pq_codebooks seed, m=8, k=16); seed
@@ -799,7 +800,7 @@ def _ivfpq_res_serving_index(spark, sf_dir):
     from ._util import serving_cache_dir
 
     path = serving_cache_dir(sf_dir, "ivfpq_res_serving", "embeddings")
-    if _os.path.isdir(_os.path.join(path, "lists")):
+    if _os.path.isdir(read_path(_os.path.join(path, "lists"))):
         return IvfPqIndex.load(spark, path)
     e = tbl(spark, sf_dir, "embeddings")
     return IvfPqIndex.build(

@@ -65,3 +65,24 @@ def duck():
             )
     yield con
     con.close()
+
+
+@pytest.fixture
+def objstore():
+    """Simulate an object store over ``file://``: the scheme is treated as
+    an object-store scheme (pointer commits become direct PUTs) and the
+    Hadoop backend's rename raises, so any code path that still renames
+    fails the test instead of silently depending on a primitive object
+    stores don't have.  Patched in its own context, so a test's own
+    ``monkeypatch.undo()`` leaves the simulation in place."""
+    from sql_data_warehouse_samples_spark.operators import dirswap as D
+
+    def _forbidden(self, src, dst):
+        raise AssertionError(
+            f"rename on simulated object store: {src} -> {dst}"
+        )
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(D, "_OBJECT_STORE_SCHEMES", D._OBJECT_STORE_SCHEMES | {"file"})
+        mp.setattr(D._HadoopFs, "rename_overwrite", _forbidden)
+        yield

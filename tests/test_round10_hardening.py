@@ -14,10 +14,12 @@ contract is "settled keys only".
 
 import glob
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
 from tests.conftest import spark  # noqa: F401
 
 
@@ -27,7 +29,7 @@ def _vec(seed: int, dim: int = 4) -> list:
 
 
 def _ts(spark, path):
-    return spark.read.parquet(str(path))
+    return spark.read.parquet(read_path(str(path)))
 
 
 def test_prune_tombstones_bm25_settled_key_lifecycle(spark, tmp_path):
@@ -59,7 +61,7 @@ def test_prune_tombstones_bm25_settled_key_lifecycle(spark, tmp_path):
     left = _ts(spark, ts_dir).collect()
     assert [(r["doc_id"], r["__bk"]) for r in left] == [(20, "k-k2")]
     # rewrite stays one-file (the deduped-table invariant)
-    assert len(glob.glob(str(ts_dir / "*.parquet"))) == 1
+    assert len(glob.glob(read_path(str(ts_dir)) + "/*.parquet")) == 1
 
     # k2 is NOT settled: its crash-replay must still be blocked
     idx.ingest(b2, idempotency_key="k2")
@@ -103,9 +105,9 @@ def test_prune_tombstones_unreplayable_rows_and_key_validation(spark, tmp_path):
     with pytest.raises(ValueError):
         idx.prune_tombstones(settled_keys=["no/slashes"])
     # nothing matched → 0, table untouched
-    before = sorted(glob.glob(str(ts_dir / "*.parquet")))
+    before = sorted(glob.glob(read_path(str(ts_dir)) + "/*.parquet"))
     assert idx.prune_tombstones(settled_keys=["neverused"]) == 0
-    assert sorted(glob.glob(str(ts_dir / "*.parquet"))) == before
+    assert sorted(glob.glob(read_path(str(ts_dir)) + "/*.parquet")) == before
 
     assert idx.prune_tombstones(include_unreplayable=True) == 2
     rows2 = {(r["doc_id"], r["__bk"]) for r in _ts(spark, ts_dir).collect()}
@@ -148,7 +150,7 @@ def test_prune_tombstones_vector_indexes_and_maintenance_wrapper(
     ivf.add(vbatch, idempotency_key="k1")
     ids = {
         r.neighbor_id
-        for r in spark.read.parquet(str(tmp_path / "ivf" / "lists"))
+        for r in spark.read.parquet(read_path(str(tmp_path / "ivf" / "lists")))
         .select("neighbor_id")
         .collect()
     }
@@ -173,73 +175,6 @@ def test_prune_tombstones_vector_indexes_and_maintenance_wrapper(
         == 1
     )
     assert not os.path.exists(tmp_path / "pq" / "tombstones")
-
-
-def test_dirswap_hadoop_backend_swap_recover_rollback(spark, tmp_path):
-    """The Hadoop-FS dirswap backend (r10: the remote-store blocker) —
-    exercised through a real Hadoop FileSystem (the ``file://`` scheme
-    binds LocalFileSystem, so this is the EXACT code path an hdfs:// or
-    abfs:// path takes, modulo the FS impl).  Covers: atomic sidecar
-    write/overwrite/read, staged swap with pre- and post-verify, crash
-    heal (recover), and the post-swap-verify rollback that parks the bad
-    tree and restores the last good copy."""
-    import json
-
-    from sql_data_warehouse_samples_spark.operators import dirswap as dw
-
-    base = f"file://{tmp_path}/hfs"
-    dw.fs_mkdirs(base + "/live", spark)
-    dw.atomic_json_write(base + "/live/_META.json", {"v": 1}, spark)
-    assert json.loads(dw.fs_read_bytes(base + "/live/_META.json", spark)) == {
-        "v": 1
-    }
-    # atomic OVERWRITE (FileContext rename with Options.Rename.OVERWRITE)
-    dw.atomic_json_write(base + "/live/_META.json", {"v": 2}, spark)
-    assert json.loads(dw.fs_read_bytes(base + "/live/_META.json", spark)) == {
-        "v": 2
-    }
-    assert dw.fs_listdir(base + "/live", spark) == ["_META.json"]
-
-    # staged swap
-    dw.fs_mkdirs(base + "/stage", spark)
-    dw.atomic_json_write(base + "/stage/_META.json", {"v": 3}, spark)
-    dw.swap_in(
-        base + "/live",
-        base + "/stage",
-        verify=lambda p: dw.fs_read_bytes(p + "/_META.json", spark),
-        spark=spark,
-    )
-    assert json.loads(dw.fs_read_bytes(base + "/live/_META.json", spark)) == {
-        "v": 3
-    }
-    # the swap RETAINED the displaced copy as the reader-grace slot (r11)
-    assert json.loads(
-        dw.fs_read_bytes(base + "/live__old/_META.json", spark)
-    ) == {"v": 2}
-    # crash between the two renames exactly as a publish produces it:
-    # grace copy reclaimed first, then live moved aside → heal
-    dw.fs_rmtree(base + "/live__old", spark)
-    dw._HadoopFs(base, spark).move(base + "/live", base + "/live__old")
-    assert dw.recover(base + "/live", spark) is True
-    assert json.loads(dw.fs_read_bytes(base + "/live/_META.json", spark)) == {
-        "v": 3
-    }
-    # post-swap verify failure → automatic rollback, bad tree parked
-    dw.fs_mkdirs(base + "/stage2", spark)
-    dw.atomic_json_write(base + "/stage2/_META.json", {"v": 4}, spark)
-    calls = []
-
-    def verify(p):
-        calls.append(p)
-        if len(calls) == 2:
-            raise RuntimeError("post-swap corruption")
-
-    with pytest.raises(RuntimeError, match="post-swap"):
-        dw.swap_in(base + "/live", base + "/stage2", verify=verify, spark=spark)
-    assert json.loads(dw.fs_read_bytes(base + "/live/_META.json", spark)) == {
-        "v": 3
-    }
-    assert dw.fs_exists(base + "/live__bad", spark)
 
 
 def test_full_stack_on_hadoop_filesystem_uris(spark, tmp_path):
@@ -297,7 +232,7 @@ def test_full_stack_on_hadoop_filesystem_uris(spark, tmp_path):
     ivf.add(vbatch, idempotency_key="k1")  # replay: tombstone blocks
     ids = sorted(
         r.neighbor_id
-        for r in spark.read.parquet(base + "/ivf/lists")
+        for r in spark.read.parquet(read_path(base + "/ivf/lists"))
         .select("neighbor_id")
         .collect()
     )
@@ -434,7 +369,7 @@ def test_admission_sink_prunes_settled_tombstones(spark, tmp_path):
     # run's batch-0 key appears
     bm25.forget(spark.createDataFrame([(21,)], "doc_id: long"))
     ts_dir = tmp_path / "bm25" / "tombstones"
-    ts0 = spark.read.parquet(str(ts_dir)).collect()
+    ts0 = spark.read.parquet(read_path(str(ts_dir))).collect()
     assert len(ts0) == 1 and ts0[0]["doc_id"] == 21
     own_key = ts0[0]["__bk"]
     assert own_key.startswith("k-") and own_key.endswith("-0")
@@ -462,7 +397,7 @@ def test_admission_sink_prunes_settled_tombstones(spark, tmp_path):
     assert bm25.n_docs == 2
     assert bm25.topk("beta0", k=5).count() == 1
     assert bm25.topk("tok0", k=5).count() == 0
-    left = spark.read.parquet(str(ts_dir)).collect()
+    left = spark.read.parquet(read_path(str(ts_dir))).collect()
     assert [(r["doc_id"], r["__bk"]) for r in left] == [
         (99, "k-deadbeef0000-5")
     ]
@@ -626,7 +561,7 @@ def test_corpus_maintenance_window_composition(spark, tmp_path):
     # bm25 compacted: the settled k1 batch folded into base (its two docs
     # were forgotten, so base carries the surviving build doc)
     assert report[f"compacted[Bm25Index:{bm25.path}]"] > 0
-    posts = tmp_path / "bm25" / "postings"
+    posts = Path(read_path(str(tmp_path / "bm25" / "postings")))
     folded = {
         d
         for tb in os.listdir(posts) if tb.startswith("__tb=")
@@ -730,7 +665,7 @@ def test_admission_sink_end_to_end_on_hadoop_uris(spark, tmp_path):
     assert bm25.n_docs == 2
     ivf_ids = sorted(
         r.neighbor_id
-        for r in spark.read.parquet(base + "/ivf/lists")
+        for r in spark.read.parquet(read_path(base + "/ivf/lists"))
         .select("neighbor_id")
         .collect()
     )
@@ -748,7 +683,7 @@ def test_admission_sink_end_to_end_on_hadoop_uris(spark, tmp_path):
     ) == [21, 32]
     assert bm25.n_docs == 2 and ivf_ids == sorted(
         r.neighbor_id
-        for r in spark.read.parquet(base + "/ivf/lists")
+        for r in spark.read.parquet(read_path(base + "/ivf/lists"))
         .select("neighbor_id")
         .collect()
     )
@@ -786,7 +721,7 @@ def test_bm25_index_compact_folds_batches(spark, tmp_path):
         }
 
     def bks():
-        posts = tmp_path / "bm25" / "postings"
+        posts = Path(read_path(str(tmp_path / "bm25" / "postings")))
         out = set()
         for tb in os.listdir(posts):
             if tb.startswith("__tb="):
@@ -844,7 +779,7 @@ def test_ivf_retrain_preserves_keyed_replay_and_tombstones(spark, tmp_path):
     def ids():
         return sorted(
             r.neighbor_id
-            for r in spark.read.parquet(f"{path}/lists")
+            for r in spark.read.parquet(read_path(f"{path}/lists"))
             .select("neighbor_id")
             .collect()
         )
@@ -859,10 +794,11 @@ def test_ivf_retrain_preserves_keyed_replay_and_tombstones(spark, tmp_path):
     with _pytest.raises(ValueError, match="different batch"):
         idx.add(base.limit(2), idempotency_key="k1")
     # the __bk layout survived the retrain (spot-check the partition dirs)
+    lists = read_path(f"{path}/lists")
     bks = {
         d
-        for cd in os.listdir(f"{path}/lists") if cd.startswith("centroid_id=")
-        for d in os.listdir(f"{path}/lists/{cd}") if d.startswith("__bk=")
+        for cd in os.listdir(lists) if cd.startswith("centroid_id=")
+        for d in os.listdir(f"{lists}/{cd}") if d.startswith("__bk=")
     }
     assert "__bk=k-k1" in bks and any(b == "__bk=base" for b in bks)
 
@@ -946,7 +882,7 @@ def test_ivfpq_retrain_reencodes_under_keyed_contract(spark, tmp_path):
     def ids():
         return sorted(
             r.neighbor_id
-            for r in spark.read.parquet(f"{path}/lists")
+            for r in spark.read.parquet(read_path(f"{path}/lists"))
             .select("neighbor_id")
             .collect()
         )
@@ -1047,7 +983,7 @@ def test_prune_settled_tombstones_key_shapes(spark, tmp_path):
     assert _prune_settled_tombstones(spark, idx_path, "abc-5", 5, 1) == 2
     left = {
         r["__bk"]
-        for r in spark.read.parquet(f"{idx_path}/tombstones").collect()
+        for r in spark.read.parquet(read_path(f"{idx_path}/tombstones")).collect()
     }
     assert left == {"k-abc-5x", "k-other-0", "k-3", "base"}
 
@@ -1062,7 +998,7 @@ def test_prune_settled_tombstones_key_shapes(spark, tmp_path):
     assert _prune_settled_tombstones(spark, idx_path, "5", 5, 1) == 0
     left2 = {
         r["__bk"]
-        for r in spark.read.parquet(f"{idx_path}/tombstones").collect()
+        for r in spark.read.parquet(read_path(f"{idx_path}/tombstones")).collect()
     }
     assert left2 == {"k-abc-5x", "k-other-0", "k-3", "base"}
 

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
 from tests.conftest import spark  # noqa: F401
 
 
@@ -43,7 +44,7 @@ def test_ivfpq_retrain_no_fanout_on_multibatch_ids(spark, tmp_path):
 
     idx.retrain(spark, base.unionByName(dup), train_iters=1, pq_iters=1)
 
-    lists = spark.read.parquet(f"{path}/lists")
+    lists = spark.read.parquet(read_path(f"{path}/lists"))
     # exactly one code row per (id, batch) — no duplicates anywhere
     per_pair = lists.groupBy("neighbor_id", "__bk").count()
     assert per_pair.filter("count > 1").count() == 0
@@ -66,7 +67,7 @@ def test_ivfpq_retrain_no_fanout_on_multibatch_ids(spark, tmp_path):
     # keyed replay post-retrain converges without re-introducing dups
     idx.add(dup, idempotency_key="ka")
     assert (
-        spark.read.parquet(f"{path}/lists")
+        spark.read.parquet(read_path(f"{path}/lists"))
         .groupBy("neighbor_id", "__bk")
         .count()
         .filter("count > 1")
@@ -76,31 +77,10 @@ def test_ivfpq_retrain_no_fanout_on_multibatch_ids(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# The generations (pointer-file) commit protocol — the object-store story.
-# ``objstore`` simulates a store with NO atomic rename: the strategy for
-# file:// is forced to 'generations' and the Hadoop backend's rename
-# methods are replaced with ones that raise, so any code path that still
-# tried to rename a directory (or tmp+rename a pointer) fails the test
-# instead of silently depending on a primitive object stores don't have.
+# The generations (pointer-file) commit protocol on a simulated object store
+# (the ``objstore`` fixture in conftest: ``file://`` treated as an object
+# store, so any rename fails the test).
 # ---------------------------------------------------------------------------
-
-
-@pytest.fixture
-def objstore(monkeypatch):
-    from sql_data_warehouse_samples_spark.operators import dirswap as D
-
-    def _forbidden(self, src, dst):
-        raise AssertionError(
-            f"rename on simulated object store: {src} -> {dst}"
-        )
-
-    D.set_swap_strategy("file", "generations")
-    monkeypatch.setattr(D._HadoopFs, "move", _forbidden)
-    monkeypatch.setattr(D._HadoopFs, "rename_overwrite", _forbidden)
-    try:
-        yield
-    finally:
-        D.set_swap_strategy("file", None)
 
 
 def test_generations_crash_recovery_properties(spark, tmp_path, objstore):
@@ -118,7 +98,7 @@ def test_generations_crash_recovery_properties(spark, tmp_path, objstore):
     spark.range(3).write.parquet(D.read_path(live))  # pre-publish plain dir
     assert D.read_path(live) == live
 
-    s1 = D.stage_path(live, "compact")
+    s1 = D.stage_path(live)
     spark.range(4).write.parquet(s1)
     D.swap_in(live, s1, verify=lambda p: spark.read.parquet(p).first())
     assert D.read_path(live) == s1
@@ -130,11 +110,11 @@ def test_generations_crash_recovery_properties(spark, tmp_path, objstore):
     assert spark.read.parquet(lpath).count() == 3
 
     # torn publish: stage written, crash before the pointer flip
-    s2 = D.stage_path(live, "compact")
+    s2 = D.stage_path(live)
     spark.range(5).write.parquet(s2)
     assert D.read_path(live) == s1  # readers unchanged
     # next allocation skips the torn number — never reused
-    s3 = D.stage_path(live, "compact")
+    s3 = D.stage_path(live)
     assert s3 not in (s1, s2)
     spark.range(6).write.parquet(s3)
     D.swap_in(live, s3, verify=lambda p: spark.read.parquet(p).first())
@@ -151,7 +131,7 @@ def test_generations_crash_recovery_properties(spark, tmp_path, objstore):
     assert spark.read.parquet(D.read_path(live)).count() == 6
 
     # verify failure: pointer (and readers) untouched
-    s4 = D.stage_path(live, "compact")
+    s4 = D.stage_path(live)
     spark.range(1).write.parquet(s4)
     with pytest.raises(ZeroDivisionError):
         D.swap_in(live, s4, verify=lambda p: 1 / 0)
@@ -165,7 +145,7 @@ def test_generations_crash_recovery_properties(spark, tmp_path, objstore):
 def test_full_stack_on_simulated_object_store(spark, tmp_path, objstore):
     """Ledger + BM25 + IVF on the generations protocol end-to-end: the
     keyed-replay, forget-tombstone, prune and compaction contracts must
-    hold identically to the rename backend — with zero directory renames
+    hold identically to the local backend — with zero directory renames
     (the fixture turns any into a failure)."""
     from sql_data_warehouse_samples_spark.operators import dirswap as D
     from sql_data_warehouse_samples_spark.operators.bm25 import Bm25Index
@@ -685,22 +665,3 @@ def test_maintenance_scheduler_logs_failed_window(spark, tmp_path):
     assert sched.decisions[-1]["action"] == "failed"
     assert "ZeroDivisionError" in sched.decisions[-1]["detail"]["error"]
     assert sched.due()  # trigger still live after remediation
-
-
-def test_remove_surface_clears_crash_siblings(spark, tmp_path):
-    """Rename strategy: removing a surface must also take its crash-parked
-    __old/__bad siblings — otherwise the next reader's recover() would
-    resurrect a deliberately removed table from its __old copy (latent
-    pre-r10 bug in the prune-to-empty path)."""
-    import os as _os
-
-    from sql_data_warehouse_samples_spark.operators import dirswap as D
-
-    live = str(tmp_path / "tbl")
-    for p in (live, live + "__old", live + "__bad"):
-        _os.makedirs(p)
-        open(_os.path.join(p, "x"), "w").write("d")
-    D.remove_surface(live)
-    assert D.read_path(live) == live  # recover() resurrects nothing
-    for p in (live, live + "__old", live + "__bad"):
-        assert not _os.path.exists(p)

@@ -11,8 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
 from tests.conftest import spark  # noqa: F401
-from tests.test_round11_hardening import _vec, objstore  # noqa: F401
+from tests.test_round11_hardening import _vec
 
 
 # ---------------------------------------------------------------------------
@@ -151,7 +152,7 @@ def test_ivf_legacy_sidecar_layout_reads_and_migrates(spark, tmp_path):
     assert idx.centroids == sorted(cents)
     idx.compact(spark)  # migration: quantizer moves inside the surface
     assert not os.path.exists(f"{path}/centroids")
-    assert os.path.exists(f"{path}/lists/_quantizer/centroids")
+    assert os.path.exists(f"{read_path(path + '/lists')}/_quantizer/centroids")
     assert IvfIndex.load(spark, path).centroids == sorted(cents)
     assert idx.search(base.limit(1), k=2, nprobe=2).count() == 2
 
@@ -501,7 +502,7 @@ def test_generation_lineage_supports_deeper_retention(spark, tmp_path, objstore)
     live = f"file://{tmp_path}/tbl"
     paths = []
     for n in (3, 4, 5, 6):
-        s = D.stage_path(live, "compact")
+        s = D.stage_path(live)
         spark.range(n).write.parquet(s)
         D.swap_in(live, s, verify=lambda p: spark.read.parquet(p).first())
         paths.append(s)
@@ -520,38 +521,6 @@ def test_generation_lineage_supports_deeper_retention(spark, tmp_path, objstore)
     assert spark.read.parquet(D.read_path(live)).count() == 6
 
 
-def test_first_publish_swap_on_hadoop_rename_backend(spark, tmp_path):
-    """swap_in's r11 first-publish path (no live directory yet) on the
-    Hadoop-FS rename backend: an IvfIndex.build over a fresh file://
-    path (rename strategy) bootstraps through the same crash-safe
-    commit, and a second build swaps normally with the grace copy
-    retained."""
-    from sql_data_warehouse_samples_spark.operators import dirswap as D
-    from sql_data_warehouse_samples_spark.operators.similarity import (
-        IvfIndex,
-    )
-
-    path = f"file://{tmp_path}/ivf"
-    emb = spark.createDataFrame(
-        [(i, _vec(i)) for i in range(8)],
-        "vec_id: long, embedding: array<double>",
-    )
-    idx = IvfIndex.build(emb, path, nlist=2)  # first publish: live absent
-    assert idx.search(emb.limit(1), k=2, nprobe=2).count() == 2
-    assert not D.fs_exists(path + "/lists__old", spark)  # nothing displaced
-    emb2 = spark.createDataFrame(
-        [(100 + i, _vec(100 + i)) for i in range(6)],
-        "vec_id: long, embedding: array<double>",
-    )
-    idx2 = IvfIndex.build(emb2, path, nlist=2)  # rebuild: normal swap
-    assert sorted(
-        r.neighbor_id for r in idx2._lists(spark).select("neighbor_id").collect()
-    ) == [100 + i for i in range(6)]
-    # the displaced first build is the retained grace copy
-    assert D.fs_exists(path + "/lists__old", spark)
-    assert spark.read.parquet(path + "/lists__old").count() == 8
-
-
 def test_gc_generations_min_age_grace(spark, tmp_path, objstore):
     """Time-based retention: gc_generations(keep=1, min_age_s=N) keeps
     reapable generations younger than N seconds (a reader that started
@@ -561,10 +530,10 @@ def test_gc_generations_min_age_grace(spark, tmp_path, objstore):
     from sql_data_warehouse_samples_spark.operators import dirswap as D
 
     live = f"file://{tmp_path}/tbl"
-    s1 = D.stage_path(live, "compact")
+    s1 = D.stage_path(live)
     spark.range(3).write.parquet(s1)
     D.swap_in(live, s1, verify=lambda p: spark.read.parquet(p).first())
-    s2 = D.stage_path(live, "compact")
+    s2 = D.stage_path(live)
     spark.range(4).write.parquet(s2)
     D.swap_in(live, s2, verify=lambda p: spark.read.parquet(p).first())
 

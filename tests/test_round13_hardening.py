@@ -1,7 +1,7 @@
 """Round-12 hardening: the r11 ADVICE lows — the generation-GC age
-probe's exception tolerance on the Hadoop/object backends, strategy-
-dispatched reader-grace reclamation (so the rename strategy's ``__old``
-copies no longer persist until the surface's NEXT publish), the
+probe's exception tolerance on the Hadoop/object backends, reader-grace
+reclamation in the maintenance window (so grace generations no longer
+persist until the surface's NEXT publish), the
 maintenance window's census gate compared per SURFACE instead of
 summed across a step's surface set, and the serving-cache fingerprint's
 walk-order/relative-path key.
@@ -12,13 +12,13 @@ import os
 import pytest
 
 from tests.conftest import spark  # noqa: F401
-from tests.test_round11_hardening import _vec, objstore  # noqa: F401
+from tests.test_round11_hardening import _vec
 
 
-def _publish(D, live: str, tag: str, spark=None, payload: bytes = b"x"):
-    """Stage one file and publish it through the strategy-dispatched
-    commit; returns the stage path that was published."""
-    s = D.stage_path(live, tag, spark)
+def _publish(D, live: str, spark=None, payload: bytes = b"x"):
+    """Stage one file and publish it; returns the stage path that was
+    published."""
+    s = D.stage_path(live, spark)
     h = D._hfs(s, spark)
     if h is None:
         os.makedirs(s, exist_ok=True)
@@ -45,9 +45,9 @@ def test_gc_min_age_tolerates_nonoserror_mtime_failures(
     from sql_data_warehouse_samples_spark.operators import dirswap as D
 
     live = f"file://{tmp_path}/tbl"
-    _publish(D, live, "c0", spark)
-    _publish(D, live, "c1", spark)
-    _publish(D, live, "c2", spark)  # lineage: current + 2 predecessors
+    _publish(D, live, spark)
+    _publish(D, live, spark)
+    _publish(D, live, spark)  # lineage: current + 2 predecessors
 
     def _py4j_mtime(path, spark=None):
         raise RuntimeError(
@@ -67,84 +67,13 @@ def test_gc_min_age_tolerates_nonoserror_mtime_failures(
     assert D.fs_read_bytes(os.path.join(cur, "data.bin"), spark) == b"x"
 
 
-# ---------------------------------------------------------------------------
-# reclaim_grace: the strategy-dispatched grace reclamation (ADVICE r11)
-# ---------------------------------------------------------------------------
-
-
-def test_reclaim_grace_rename_strategy(tmp_path):
-    """Rename strategy: a publish retains ``__old`` until the NEXT
-    publish — reclaim_grace reclaims it at maintenance cadence instead,
-    honoring the time grace, never touching ``__bad`` post-mortem
-    trees, and never removing the crash-heal restore source."""
-    from sql_data_warehouse_samples_spark.operators import dirswap as D
-
-    live = str(tmp_path / "tbl")
-    _publish(D, live, "c0")
-    assert not os.path.exists(live + "__old")  # first publish: no grace
-    _publish(D, live, "c1", payload=b"y")
-    old = live + "__old"
-    assert os.path.exists(old)
-
-    bad = live + "__bad"
-    os.makedirs(bad)
-
-    # still inside the time grace: kept
-    assert D.reclaim_grace(live, min_age_s=3600.0) == []
-    assert os.path.exists(old)
-
-    # unconditional reclaim (quiesced semantics)
-    assert D.reclaim_grace(live) == [old]
-    assert not os.path.exists(old)
-    assert os.path.exists(bad), "__bad is operator evidence — untouched"
-    assert D.reclaim_grace(live) == []  # idempotent
-
-    # crash window (live renamed away, __old is the restore source):
-    # reclaim must NOT take the heal path's only copy
-    _publish(D, live, "c2", payload=b"z")
-    import shutil
-
-    shutil.rmtree(live)  # simulate crash between the two swap renames
-    assert D.reclaim_grace(live) == []
-    assert os.path.exists(old)
-    assert D.recover(live)  # heal still possible
-    with open(os.path.join(live, "data.bin"), "rb") as f:
-        assert f.read() == b"y"
-
-
-def test_reclaim_grace_generations_strategy(spark, tmp_path, objstore):
-    """Generations strategy: reclaim_grace collapses the retained
-    lineage to the current generation (gc keep=1 under the hood)."""
-    from sql_data_warehouse_samples_spark.operators import dirswap as D
-
-    live = f"file://{tmp_path}/tbl"
-    _publish(D, live, "c0", spark)
-    _publish(D, live, "c1", spark, payload=b"y")
-    gens_before = [
-        g
-        for g in D.fs_listdir(live + "__gens", spark)
-        if g.startswith("gen-")
-    ]
-    assert len(gens_before) == 2  # current + default grace predecessor
-
-    removed = D.reclaim_grace(live, spark)
-    assert len(removed) == 1
-    cur = D.read_path(live, spark)
-    assert D.fs_read_bytes(os.path.join(cur, "data.bin"), spark) == b"y"
-    gens_after = [
-        g
-        for g in D.fs_listdir(live + "__gens", spark)
-        if g.startswith("gen-")
-    ]
-    assert gens_after == [os.path.basename(cur)]
-
-
 def test_maintenance_window_reclaims_grace(spark, tmp_path):
-    """corpus_maintenance_window(reclaim_grace_after_s=0.0): after the
-    compacts publish, the window's final step reclaims every touched
-    surface's grace copy — rename backends no longer carry a full
-    second copy of each ledger/index until the next publish."""
+    """corpus_maintenance_window(grace_min_age_s=0.0): after the compacts
+    publish, the window's final step reclaims every touched surface's
+    grace copy — no surface carries a full second copy of each
+    ledger/index until its next publish."""
     from sql_data_warehouse_samples_spark import maintenance as M
+    from sql_data_warehouse_samples_spark.operators import dirswap as D
     from sql_data_warehouse_samples_spark.operators.ledger import (
         AdmissionPipeline,
     )
@@ -164,25 +93,34 @@ def test_maintenance_window_reclaims_grace(spark, tmp_path):
     pipe.admit(docs, idempotency_key="b0")
     ivf = IvfIndex.build(emb, str(tmp_path / "ivf"), nlist=2)
 
+    def gens(surface):
+        return [
+            g for g in D.fs_listdir(surface + "__gens") if g.startswith("gen-")
+        ]
+
     report = M.corpus_maintenance_window(
-        spark, pipe, indexes=(ivf,), reclaim_grace_after_s=0.0
+        spark, pipe, indexes=(ivf,), grace_min_age_s=0.0
     )
     assert "grace_reclaimed" in report
-    # the ledger compact published over existing data -> had an __old
-    assert any(p.endswith("__old") for p in report["grace_reclaimed"])
+    # the ledger compact published over the plain ingest directory,
+    # which stayed as the grace copy until the reclamation step
     for suffix in ("exact", "near"):
         surface = getattr(pipe, suffix).path
-        assert not os.path.exists(surface + "__old")
-    assert not os.path.exists(str(tmp_path / "ivf" / "lists") + "__old")
+        assert surface in report["grace_reclaimed"]
+        assert not os.path.exists(surface)
+        assert len(gens(surface)) == 1
+    lists = str(tmp_path / "ivf" / "lists")
+    assert len(gens(lists)) == 1  # the build's generation was reclaimed
     # the data itself is intact after reclamation
     assert pipe.exact.hashes().count() == 2
     assert ivf._lists(spark).count() == 6
 
     # a second window with a generous grace keeps the fresh copies
     report2 = M.corpus_maintenance_window(
-        spark, pipe, indexes=(ivf,), reclaim_grace_after_s=3600.0
+        spark, pipe, indexes=(ivf,), grace_min_age_s=3600.0
     )
     assert report2["grace_reclaimed"] == []
+    assert len(gens(lists)) == 2
 
 
 # ---------------------------------------------------------------------------
@@ -317,14 +255,14 @@ def test_concurrent_generations_publish_loses_atomically(
     from sql_data_warehouse_samples_spark.operators import dirswap as D
 
     live = f"file://{tmp_path}/tbl"
-    _publish(D, live, "c0", spark)
+    _publish(D, live, spark)
     winner = D.read_path(live, spark)
 
     # the loser stages, then its pointer READ races a concurrent commit:
     # simulate by serving it the pre-publish view (absent pointer)
     stale_read = lambda path: None  # noqa: E731
     monkeypatch.setattr(casstore, "read", stale_read)
-    s = D.stage_path(live, "c1", spark)
+    s = D.stage_path(live, spark)
     D.fs_mkdirs(s, spark)
     D._hfs(s, spark).write_bytes(os.path.join(s, "data.bin"), b"loser")
     with pytest.raises(RuntimeError, match="concurrent publish"):

@@ -231,31 +231,28 @@ def test_signature_ledger_params_sidecar(spark, tmp_path):
 
 
 def test_ledger_rejects_object_store_schemes(spark, tmp_path):
-    """r10 contract (amended this round): ``require_swap_capable`` is a
-    strategy PICK — atomic-rename stores run the staged swap, object
-    stores run the pointer-file generations protocol (s3/gs accepted,
-    dispatched to 'generations'), and only a scheme with NO known
-    strategy is refused loudly."""
+    """``require_swap_capable`` accepts every store whose atomic
+    small-object commit is known — rename-capable stores (tmp + rename)
+    and object stores (direct PUT) — and refuses only a scheme with NO
+    known commit primitive, loudly."""
     from sql_data_warehouse_samples_spark.operators.dirswap import (
         require_swap_capable,
-        swap_strategy,
     )
     from sql_data_warehouse_samples_spark.operators.ledger import (
         ContentHashLedger,
         MinHashSignatureLedger,
     )
 
-    # object stores: accepted, generations strategy (the r10 protocol)
-    assert swap_strategy("s3://bucket/ledger") == "generations"
-    assert swap_strategy("gs://bucket/ledger") == "generations"
+    # object stores: accepted (the pointer commits by direct PUT)
+    assert require_swap_capable("s3://bucket/ledger") == "s3://bucket/ledger"
+    assert require_swap_capable("gs://bucket/ledger") == "gs://bucket/ledger"
     # unknown schemes: still refused loudly rather than assumed safe
     for cls in (ContentHashLedger, MinHashSignatureLedger):
-        with pytest.raises(ValueError, match="no known commit strategy"):
+        with pytest.raises(ValueError, match="no known commit primitive"):
             cls(spark, "weirdfs://bucket/ledger")
     # atomic-rename schemes pass validation (no FS touch at validate time)
     assert require_swap_capable("hdfs://nn/ledger") == "hdfs://nn/ledger"
     assert require_swap_capable("abfss://c@a.dfs.example/x").startswith("abfss")
-    assert swap_strategy("hdfs://nn/ledger") == "rename"
     # file:// is swap-capable and kept AS A URI — it runs through the
     # Hadoop LocalFileSystem backend (full-stack coverage of the remote
     # code path lives in test_round10_hardening)

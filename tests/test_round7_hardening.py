@@ -9,6 +9,8 @@ import os
 
 import pytest
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
+
 
 def _text(prefix: str, n: int = 60) -> str:
     return " ".join(f"{prefix}{i}" for i in range(n))
@@ -270,7 +272,7 @@ def test_ivf_index_forget_partition_pruned_purge(spark, tmp_path):
     path = str(tmp_path / "ivf")
     idx = IvfIndex.build(e, path, nlist=8)
 
-    lists = spark.read.parquet(f"{path}/lists").select(
+    lists = spark.read.parquet(read_path(f"{path}/lists")).select(
         "neighbor_id", "centroid_id"
     )
     by_cid: dict = {}
@@ -288,7 +290,7 @@ def test_ivf_index_forget_partition_pruned_purge(spark, tmp_path):
     def snapshot(cid):
         # recursive: the r9 layout nests __bk=<batch> under each centroid
         files = glob.glob(
-            f"{path}/lists/centroid_id={cid}/**/*.parquet", recursive=True
+            f"{read_path(path + '/lists')}/centroid_id={cid}/**/*.parquet", recursive=True
         )
         assert files, f"no list files under centroid_id={cid}"
         return {p: (os.path.getsize(p), os.path.getmtime(p)) for p in files}
@@ -298,10 +300,10 @@ def test_ivf_index_forget_partition_pruned_purge(spark, tmp_path):
     assert idx.forget(spark, purge) == len(purge_ids)
 
     assert snapshot(untouched_cid) == before  # byte-identical untouched list
-    assert not os.path.isdir(f"{path}/lists/centroid_id={empty_cid}")
+    assert not os.path.isdir(f"{read_path(path + '/lists')}/centroid_id={empty_cid}")
     remaining = {
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/lists").select("neighbor_id").collect()
+        for r in spark.read.parquet(read_path(f"{path}/lists")).select("neighbor_id").collect()
     }
     assert remaining.isdisjoint(set(purge_ids))
     # search no longer returns purged ids, at full probe

@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_samples_spark.operators.dirswap import read_path
 from tests.conftest import spark  # noqa: F401
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -199,7 +200,7 @@ def test_ivf_index_keyed_add_replay_idempotent(spark, tmp_path):
     idx.add(batch, idempotency_key="b-1")
     lists = lambda: sorted(  # noqa: E731
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/lists").select("neighbor_id").collect()
+        for r in spark.read.parquet(read_path(f"{path}/lists")).select("neighbor_id").collect()
     )
     want = sorted(list(range(8)) + list(range(100, 110)))
     assert lists() == want
@@ -216,7 +217,7 @@ def test_ivf_index_keyed_add_replay_idempotent(spark, tmp_path):
     # the replay completes it (stored remainder ⊆ batch is legal)
     import shutil
 
-    victim = glob.glob(f"{path}/lists/centroid_id=*/__bk=k-b-1")[0]
+    victim = glob.glob(f"{read_path(path + '/lists')}/centroid_id=*/__bk=k-b-1")[0]
     shutil.rmtree(victim)
     assert len(lists()) < len(want)
     idx.add(batch, idempotency_key="b-1")
@@ -259,7 +260,7 @@ def test_ivf_index_forget_compact_guarantees_after_keyed_add(spark, tmp_path):
     # pick a centroid that holds BOTH a base and a keyed partition
     both = [
         d
-        for d in glob.glob(f"{path}/lists/centroid_id=*")
+        for d in glob.glob(f"{read_path(path + '/lists')}/centroid_id=*")
         if os.path.isdir(f"{d}/__bk=base") and os.path.isdir(f"{d}/__bk=k-b-1")
     ]
     assert both, "test setup: need a centroid with both batches"
@@ -276,7 +277,7 @@ def test_ivf_index_forget_compact_guarantees_after_keyed_add(spark, tmp_path):
     # forget a doc from the KEYED batch that lives in this centroid
     keyed_ids = [
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/lists")
+        for r in spark.read.parquet(read_path(f"{path}/lists"))
         .filter("__bk = 'k-b-1'")
         .collect()
         if f"centroid_id={r.centroid_id}" in cdir
@@ -287,7 +288,7 @@ def test_ivf_index_forget_compact_guarantees_after_keyed_add(spark, tmp_path):
     assert snap("__bk=base") == base_before
     remaining = {
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/lists").collect()
+        for r in spark.read.parquet(read_path(f"{path}/lists")).collect()
     }
     assert keyed_ids[0] not in remaining
 
@@ -295,19 +296,19 @@ def test_ivf_index_forget_compact_guarantees_after_keyed_add(spark, tmp_path):
     # keyed replay double-count) and results are unchanged
     before_rows = sorted(
         tuple(r)
-        for r in spark.read.parquet(f"{path}/lists")
+        for r in spark.read.parquet(read_path(f"{path}/lists"))
         .select("neighbor_id", "centroid_id", "__bk")
         .collect()
     )
     idx.compact(spark)
     after_rows = sorted(
         tuple(r)
-        for r in spark.read.parquet(f"{path}/lists")
+        for r in spark.read.parquet(read_path(f"{path}/lists"))
         .select("neighbor_id", "centroid_id", "__bk")
         .collect()
     )
     assert after_rows == before_rows
-    assert glob.glob(f"{path}/lists/centroid_id=*/__bk=k-b-1")
+    assert glob.glob(f"{read_path(path + '/lists')}/centroid_id=*/__bk=k-b-1")
     # and the keyed-replay guard still sees its rows after compact: a
     # replay of the ORIGINAL batch is refused only for CHANGED content
     with pytest.raises(ValueError, match="different batch"):
@@ -399,7 +400,7 @@ def test_admission_sink_keeps_ivf_index_in_lockstep(spark, tmp_path):
     def indexed():
         return sorted(
             r.neighbor_id
-            for r in spark.read.parquet(str(tmp_path / "ivf/lists"))
+            for r in spark.read.parquet(read_path(str(tmp_path / "ivf/lists")))
             .select("neighbor_id")
             .collect()
         )
@@ -632,9 +633,9 @@ def test_forget_tombstones_block_keyed_replay_resurrection(spark, tmp_path):
 
     idx.forget(spark.createDataFrame([(11,), (99,)], "doc_id: long"))
     idx.forget(spark.createDataFrame([(11,)], "doc_id: long"))
-    ts_files = glob.glob(str(tmp_path / "bm25/tombstones/*.parquet"))
+    ts_files = glob.glob(read_path(str(tmp_path / "bm25/tombstones")) + "/*.parquet")
     assert len(ts_files) == 1
-    ts = spark.read.parquet(str(tmp_path / "bm25/tombstones"))
+    ts = spark.read.parquet(read_path(str(tmp_path / "bm25/tombstones")))
     assert ts.count() == ts.distinct().count() == 2  # (10,k1) + (11,k1)
 
     # --- vector index ----------------------------------------------------
@@ -650,7 +651,7 @@ def test_forget_tombstones_block_keyed_replay_resurrection(spark, tmp_path):
     ivf.add(vbatch, idempotency_key="k1")  # crash-replay
     ids = sorted(
         r.neighbor_id
-        for r in spark.read.parquet(str(tmp_path / "ivf/lists"))
+        for r in spark.read.parquet(read_path(str(tmp_path / "ivf/lists")))
         .select("neighbor_id")
         .collect()
     )
@@ -662,7 +663,7 @@ def test_forget_tombstones_block_keyed_replay_resurrection(spark, tmp_path):
     )
     ids2 = sorted(
         r.neighbor_id
-        for r in spark.read.parquet(str(tmp_path / "ivf/lists"))
+        for r in spark.read.parquet(read_path(str(tmp_path / "ivf/lists")))
         .select("neighbor_id")
         .collect()
     )
@@ -709,7 +710,7 @@ def test_ivf_add_refuses_pre_r9_layout(spark, tmp_path):
     with pytest.raises(ValueError, match="pre-batch-subpartition"):
         idx.add(batch, idempotency_key="k1")
     # the refusal left the old index readable
-    assert spark.read.parquet(f"{path}/lists").count() == 4
+    assert spark.read.parquet(read_path(f"{path}/lists")).count() == 4
 
 
 def test_ensure_bloom_rebuilds_on_bits_per_gram_change(spark, tmp_path):
@@ -754,7 +755,7 @@ def test_ivfpq_keyed_add_replay_and_tombstones(spark, tmp_path):
 
     ids = lambda: sorted(  # noqa: E731
         r.neighbor_id
-        for r in spark.read.parquet(f"{path}/lists").select("neighbor_id").collect()
+        for r in spark.read.parquet(read_path(f"{path}/lists")).select("neighbor_id").collect()
     )
     idx.add(batch, idempotency_key="k1")
     want = sorted(list(range(8)) + list(range(100, 106)))
@@ -773,19 +774,19 @@ def test_ivfpq_keyed_add_replay_and_tombstones(spark, tmp_path):
     # compact preserves the __bk level; search still works
     before = sorted(
         tuple(r)
-        for r in spark.read.parquet(f"{path}/lists")
+        for r in spark.read.parquet(read_path(f"{path}/lists"))
         .select("neighbor_id", "centroid_id", "__bk")
         .collect()
     )
     idx.compact(spark)
     after = sorted(
         tuple(r)
-        for r in spark.read.parquet(f"{path}/lists")
+        for r in spark.read.parquet(read_path(f"{path}/lists"))
         .select("neighbor_id", "centroid_id", "__bk")
         .collect()
     )
     assert after == before
-    assert glob.glob(f"{path}/lists/centroid_id=*/__bk=k-k1")
+    assert glob.glob(f"{read_path(path + '/lists')}/centroid_id=*/__bk=k-k1")
     q = spark.createDataFrame(
         [(777, _vec(101, 8))], "vec_id: long, embedding: array<double>"
     )
